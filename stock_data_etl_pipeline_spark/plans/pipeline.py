@@ -4,10 +4,10 @@ re-expressed as one driver-orchestrated Spark job per batch of tickers.
 Reference path (/root/reference/): POST /api/ticker/queue -> Celery fetch
 task -> S3 raw JSON -> Polars transform -> delta-rs MERGE -> metadata sync
 (queue_for_fetch.py, queue_for_delta.py, update_stock_metadata.py). The
-queue hops disappear: phases become DataFrame stages and Delta-style
-transaction boundaries, with run-state rows updated per phase so the
-control-plane query surface (runs by state, latest run per stock, bulk
-stats) works identically.
+queue hops disappear: phases become DataFrame stages, the batch's run rows
+walk their states on the driver as each phase ends, and each table commits
+at most once per batch (stocks: new tickers, then the metadata sync), so
+the control-plane query surface works identically.
 
 Storage layout under ``root``:
     bronze/<batch_id>/           raw documents (ticker, run_id, json_str)
@@ -44,10 +44,10 @@ from ..schemas import (
 from ..sources.managed_table import ManagedTable
 from ..state_machine import (
     IngestionState,
+    advance,
     is_terminal_col,
     new_run_row,
     runs_dataframe,
-    transition,
 )
 from .stock_transform import transform_stock_json
 
@@ -94,13 +94,19 @@ class StockLake:
 
     def get_or_create_stocks(self, tickers: list[str]) -> DataFrame:
         """M1 for stocks: ticker-keyed insert-only merge; tickers normalized
-        strip().upper() at the boundary (models.py:172-181)."""
+        strip().upper() at the boundary (models.py:172-181); commits only
+        when a ticker is new."""
         ts = _now()
-        norm = sorted({t.strip().upper() for t in tickers})
+        norm = {t.strip().upper() for t in tickers}
+        current = self.read_stocks()
+        have = current.filter(F.col("ticker").isin(*norm)).select("ticker").collect()
+        new = sorted(norm - {r["ticker"] for r in have})
+        if not new:
+            return current
         fresh = self.spark.createDataFrame(
             [(str(uuid.uuid4()), t, None, None, None, None, None, None, None,
-              None, None, ts, ts) for t in norm], STOCKS)
-        merged = merge_insert_only(self.read_stocks(), fresh, ["ticker"])
+              None, None, ts, ts) for t in new], STOCKS)
+        merged = merge_insert_only(current, fresh, ["ticker"])
         self.stocks.overwrite(merged)
         return merged
 
@@ -121,6 +127,8 @@ class StockLake:
             [(str(uuid.uuid4()), stored, ts, ts) for stored in seen.values()],
             schema).withColumn("match_key", normalize_key(F.col("name")))
         cur_keyed = current.withColumn("match_key", normalize_key(F.col("name")))
+        if fresh.join(cur_keyed, "match_key", "left_anti").isEmpty():
+            return current  # no new name: nothing to commit
         merged = merge_insert_only(cur_keyed, fresh, ["match_key"]).drop("match_key")
         tbl.overwrite(merged)
         return merged
@@ -145,10 +153,10 @@ class StockLake:
         path); executor-fetched payloads take ``fetch_and_ingest``.
 
         Returns {"batch_id", "run_ids", "skipped", "n_silver_rows"}. Each
-        phase updates the run-state rows exactly like the reference's task
-        chain (§3.1): QUEUED_FOR_FETCH -> FETCHING -> FETCHED ->
-        QUEUED_FOR_DELTA -> DELTA_RUNNING -> DELTA_FINISHED -> DONE, then
-        metadata sync.
+        run walks the reference's task chain (§3.1): QUEUED_FOR_FETCH ->
+        FETCHING -> FETCHED -> QUEUED_FOR_DELTA -> DELTA_RUNNING ->
+        DELTA_FINISHED -> DONE, stamped on the driver as each phase ends;
+        the final run rows commit once, then the metadata sync.
         """
         # M2 batch form: dedupe tickers within the batch (first payload
         # wins) and skip stocks that already have a non-terminal run —
@@ -159,85 +167,86 @@ class StockLake:
             uniq.setdefault(t.strip().upper(), payload)
         skipped = self._active_run_ids(list(uniq))
         todo = {t: p for t, p in uniq.items() if t not in skipped}
-        if not todo:
-            return {"batch_id": None, "run_ids": [], "skipped": skipped,
-                    "n_silver_rows": (self.silver.read().count()
-                                      if self.silver.exists() else 0)}
         raw_src = self.spark.createDataFrame(
             list(todo.items()), "ticker string, json_str string")
-        out = self._ingest_raw(raw_src, list(todo), requested_by)
+        out = self._ingest_raw(raw_src, list(todo), {}, requested_by)
+        del out["failed_run_ids"]
         out["skipped"] = skipped
         return out
 
     def _ingest_raw(self, raw_src: DataFrame, tickers: list[str],
-                    requested_by: str | None = None) -> dict:
+                    fetch_errors: dict[str, str],
+                    requested_by: str | None) -> dict:
         """Shared ingest core over a (ticker, json_str) relation. Payloads
         never pass through the driver: the bronze landing is a join of the
         source relation to the (tiny, broadcast) ticker->run_id map,
         written to parquet straight from executors. ``tickers`` must be
-        normalized and deduplicated by the caller."""
-        batch_id = uuid.uuid4().hex[:12]
-        stocks = self.get_or_create_stocks(tickers)
-        tick_to_stock = {r["ticker"]: r["id"]
-                         for r in stocks.select("ticker", "id").collect()}
+        normalized and deduplicated by the caller; a ``fetch_errors`` ticker
+        gets a run failed with its code. All runs commit in one overwrite."""
+        if not tickers and not fetch_errors:
+            return {"batch_id": None, "run_ids": [], "failed_run_ids": [],
+                    "n_silver_rows": self.silver.num_rows()}
+        everyone = tickers + list(fetch_errors)
+        stocks = self.get_or_create_stocks(everyone)
+        tick_to_stock = {r["ticker"]: r["id"] for r in stocks.filter(
+            F.col("ticker").isin(everyone)).select("ticker", "id").collect()}
 
-        # M2: one new run per ticker (batch insert; the active-run guard
-        # ran in the caller)
-        rows = [new_run_row(tick_to_stock[t], t, requested_by=requested_by)
-                for t in tickers]
-        run_ids = [r["id"] for r in rows]
-        runs = merge_upsert(self.read_runs(), runs_dataframe(self.spark, rows), ["id"])
+        # M2: one new run per ticker (the active-run guard ran in the
+        # caller); a fetch error fails its run straight from the queue
+        rows = [new_run_row(tick_to_stock[t], t, requested_by=requested_by) for t in tickers]
+        failed_rows = [new_run_row(tick_to_stock[t], t, requested_by=requested_by)
+                       for t in fetch_errors]
+        for r, code in zip(failed_rows, fetch_errors.values()):
+            advance([r], IngestionState.FAILED, error_code=code,
+                    error_message=f"fetch failed for {r['ticker']}: {code}")
 
-        runs = transition(runs, run_ids, IngestionState.FETCHING)
+        batch_id, bad, ok = None, [], []
+        if rows:
+            batch_id = uuid.uuid4().hex[:12]
+            advance(rows, IngestionState.FETCHING)
+            # bronze landing (S2): columnar raw zone, one dir per batch
+            bronze_path = os.path.join(self.root, "bronze", batch_id)
+            rid_map = self.spark.createDataFrame(
+                [(r["ticker"], r["id"]) for r in rows], "ticker string, run_id string")
+            raw = (raw_src.join(F.broadcast(rid_map), "ticker")
+                   .select("ticker", "run_id", "json_str"))
+            raw.write.mode("overwrite").parquet(bronze_path)
+            advance(rows, IngestionState.FETCHED, raw_data_uri=bronze_path)
+            advance(rows, IngestionState.QUEUED_FOR_DELTA)
 
-        # bronze landing (S2): columnar raw zone, one dir per batch
-        bronze_path = os.path.join(self.root, "bronze", batch_id)
-        rid_map = self.spark.createDataFrame(
-            [(r["ticker"], r["id"]) for r in rows], "ticker string, run_id string")
-        raw = (raw_src.join(F.broadcast(rid_map), "ticker")
-               .select("ticker", "run_id", "json_str"))
-        raw.write.mode("overwrite").parquet(bronze_path)
-        runs = transition(runs, run_ids, IngestionState.FETCHED,
-                          raw_data_uri=bronze_path)
-        runs = transition(runs, run_ids, IngestionState.QUEUED_FOR_DELTA)
+            # silver transform + merge (S3/S4/F8-F10/S5/S6)
+            advance(rows, IngestionState.DELTA_RUNNING)
+            bronze = self.spark.read.parquet(bronze_path)
+            # S4 failure path: structurally invalid documents fail their
+            # run with the reference's INVALID_DATA_FORMAT code instead of
+            # poisoning the batch (queue_for_delta.py:463-470).
+            from .stock_transform import parse_raw
+            valid = {r["run_id"] for r in parse_raw(bronze)
+                     .filter("is_valid").select("run_id").collect()}
+            bad = [r for r in rows if r["id"] not in valid]
+            ok = [r for r in rows if r["id"] in valid]
+            advance(bad, IngestionState.FAILED,
+                    error_code="INVALID_DATA_FORMAT",
+                    error_message="payload is not a JSON object with a 'data' key")
+            if ok:
+                self.silver.merge(transform_stock_json(bronze), SILVER_KEY_COLUMNS)
+                advance(ok, IngestionState.DELTA_FINISHED,
+                        processed_data_uri=self.silver.path)
+                advance(ok, IngestionState.DONE)
 
-        # silver transform + merge (S3/S4/F8-F10/S5/S6)
-        runs = transition(runs, run_ids, IngestionState.DELTA_RUNNING)
-        bronze = self.spark.read.parquet(bronze_path)
-        # S4 failure path: structurally invalid documents fail their run
-        # with the reference's INVALID_DATA_FORMAT code instead of
-        # poisoning the batch (queue_for_delta.py:463-470).
-        from .stock_transform import parse_raw
-        validity = {r["run_id"]: r["is_valid"]
-                    for r in parse_raw(bronze).select("run_id", "is_valid")
-                    .collect()}
-        bad_ids = [rid for rid in run_ids if not validity.get(rid, False)]
-        ok_ids = [rid for rid in run_ids if rid not in set(bad_ids)]
-        if bad_ids:
-            runs = transition(
-                runs, bad_ids, IngestionState.FAILED,
-                error_code="INVALID_DATA_FORMAT",
-                error_message="payload is not a JSON object with a 'data' key")
-        if ok_ids:
-            wide = transform_stock_json(bronze)
-            self.silver.merge(wide, SILVER_KEY_COLUMNS)
-        n_silver = self.silver.read().count() if self.silver.exists() else 0
-        if ok_ids:
-            runs = transition(runs, ok_ids, IngestionState.DELTA_FINISHED,
-                              processed_data_uri=self.silver.path)
-            runs = transition(runs, ok_ids, IngestionState.DONE)
-        self.runs.overwrite(runs)
-        if bad_ids and self.on_run_failed is not None:
-            id_to_ticker = {r["id"]: r["ticker"] for r in rows}
-            for rid in bad_ids:
-                self.on_run_failed(rid, id_to_ticker[rid],
-                                   "INVALID_DATA_FORMAT",
-                                   "payload is not a JSON object with a 'data' key")
+        self.runs.overwrite(merge_upsert(
+            self.read_runs(), runs_dataframe(self.spark, rows + failed_rows),
+            ["id"]))
+        if self.on_run_failed is not None:
+            for r in bad + failed_rows:
+                self.on_run_failed(r["id"], r["ticker"], r["error_code"],
+                                   r["error_message"])
 
         # M4: metadata sync back into the stocks control table
-        self.sync_stock_metadata()
-        return {"batch_id": batch_id, "run_ids": run_ids,
-                "n_silver_rows": n_silver}
+        self.sync_stock_metadata([r["ticker"] for r in ok])
+        return {"batch_id": batch_id, "run_ids": [r["id"] for r in rows],
+                "failed_run_ids": [r["id"] for r in failed_rows],
+                "n_silver_rows": self.silver.num_rows()}
 
     def fetch_and_ingest(self, tickers: list[str], transport,
                          requested_by: str | None = None) -> dict:
@@ -262,45 +271,18 @@ class StockLake:
         status = {r["ticker"]: r["error_code"] for r in
                   fetched.select("ticker", "error_code").collect()}
         ok = [t for t in norm if status.get(t) is None]
-        failed = [(t, status[t]) for t in norm if status.get(t) is not None]
+        failed = {t: status[t] for t in norm if status.get(t) is not None}
 
         skipped = self._active_run_ids(ok)
         todo = [t for t in ok if t not in skipped]
-        if todo:
-            # inner join to the run-id map inside _ingest_raw drops
-            # skipped tickers; no payload filter needed driver-side
-            ok_src = (fetched.filter(F.col("error_code").isNull())
-                      .select("ticker", "json_str"))
-            out = self._ingest_raw(ok_src, todo, requested_by=requested_by)
-        else:
-            out = {"batch_id": None, "run_ids": [], "n_silver_rows":
-                   (self.silver.read().count() if self.silver.exists() else 0)}
-        out["skipped"] = skipped
+        # inner join to the run-id map inside _ingest_raw drops skipped
+        # tickers; no payload filter needed driver-side
+        ok_src = (fetched.filter(F.col("error_code").isNull())
+                  .select("ticker", "json_str"))
+        out = self._ingest_raw(ok_src, todo, failed, requested_by)
         fetched.unpersist()
-
-        failed_run_ids = []
-        if failed:
-            stocks = self.get_or_create_stocks([t for t, _ in failed])
-            sid = {r["ticker"]: r["id"] for r in
-                   stocks.select("ticker", "id").collect()}
-            rows = [new_run_row(sid[t], t, requested_by=requested_by)
-                    for t, _ in failed]
-            runs = merge_upsert(self.read_runs(),
-                                runs_dataframe(self.spark, rows), ["id"])
-            # one batched transition (per-id map lookup): plan depth is
-            # independent of the failure count
-            per_id = {row["id"]: (code, f"fetch failed for {t}: {code}")
-                      for row, (t, code) in zip(rows, failed)}
-            runs = transition(runs, list(per_id), IngestionState.FAILED,
-                              per_id_errors=per_id)
-            failed_run_ids = [row["id"] for row in rows]
-            self.runs.overwrite(runs)
-            if self.on_run_failed is not None:
-                for row, (t, code) in zip(rows, failed):
-                    self.on_run_failed(row["id"], t, code,
-                                       f"fetch failed for {t}: {code}")
-        out["failed"] = dict(failed)
-        out["failed_run_ids"] = failed_run_ids
+        out["skipped"] = skipped
+        out["failed"] = failed
         return out
 
     # -- raw passthrough (S8) ----------------------------------------------
@@ -335,11 +317,11 @@ class StockLake:
         return payload
 
     # -- metadata sync (M4) -------------------------------------------------
-    def sync_stock_metadata(self) -> DataFrame:
-        """S7 pushdown read of metadata rows + changed-fields-only update of
-        stocks, resolving exchange/sector through dim get-or-create
-        (update_stock_metadata.py:195-469)."""
-        if not self.silver.exists():
+    def sync_stock_metadata(self, tickers: list[str]) -> DataFrame:
+        """S7 pushdown read of ``tickers``' metadata rows + changed-fields-
+        only update of stocks, resolving exchange/sector through dim
+        get-or-create (update_stock_metadata.py:195-469)."""
+        if not tickers or not self.silver.exists():
             return self.read_stocks()
         silver = self.silver.read()
         meta_cols = [c for c in
@@ -349,7 +331,8 @@ class StockLake:
         if not meta_cols:
             return self.read_stocks()
         # predicate reaches the scan: record_type partition + projection
-        meta = (silver.filter(F.col("record_type") == "metadata")
+        meta = (silver.filter((F.col("record_type") == "metadata")
+                              & F.col("ticker").isin(tickers))
                 .select("ticker", *[F.col(c).cast("string").alias(c)
                                     for c in meta_cols]))
         # W3: single metadata row per ticker, deterministic pick

@@ -14,7 +14,8 @@ plain parquet so the engine runs anywhere:
 Layout — manifest-per-version, like a miniature Delta transaction log:
 
     <path>/_LATEST                      atomic pointer {"version": N}
-    <path>/manifests/v=N.json           {partition-key -> data dir} map
+    <path>/manifests/v=N.json           {partition-key -> data dir} map,
+                                        plus per-dir stats and row counts
     <path>/data/<uuid>/                 immutable per-partition parquet dirs
 
 A merge rewrites ONLY the partitions the source batch touches: untouched
@@ -52,6 +53,8 @@ from pyspark.sql import functions as F
 from ..operators.merge import align_schemas, merge_upsert
 
 _ALL = "__all__"  # manifest key for unpartitioned tables
+# per-partition maps of a manifest: data dir, {col: [min, max]}, row count
+_MAPS = ("partitions", "stats", "rows")
 
 
 class TableExistsError(RuntimeError):
@@ -80,21 +83,21 @@ def _stat_val(v):
     return v
 
 
-def _dir_footer_stats(path: str, cols: Sequence[str]) -> dict[str, list]:
-    """Per-column [min, max] over every parquet footer under ``path`` —
-    metadata-only, no row data read. One data dir is one partition of one
-    commit's batch, so this is a handful of footers at commit time (the
-    analog of Delta writing per-file stats into the transaction log).
-    Columns without footer stats (or absent from the file) are omitted —
-    readers treat a missing stat as 'cannot prune'."""
+def _dir_footer_stats(path: str, cols: Sequence[str]) -> tuple[dict[str, list], int]:
+    """Per-column [min, max] and the row count over the parquet footers
+    under ``path`` — metadata-only, a handful of footers per commit (the
+    analog of Delta writing per-file stats into its log). Columns without
+    footer stats are omitted: readers treat a missing stat as 'cannot prune'."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
     out: dict[str, list] = {}
+    n_rows = 0
     for f in sorted(_glob.glob(os.path.join(path, "**", "*.parquet"),
                                recursive=True)):
         md = pq.ParquetFile(f).metadata
+        n_rows += md.num_rows
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
             names = [rg.column(i).path_in_schema
@@ -110,7 +113,13 @@ def _dir_footer_stats(path: str, cols: Sequence[str]) -> dict[str, list]:
                     out[c] = [min(out[c][0], lo), max(out[c][1], hi)]
                 else:
                     out[c] = [lo, hi]
-    return out
+    return out, n_rows
+
+
+def _to_maps(written: dict[str, tuple[str, dict, int]]) -> dict[str, dict]:
+    """{partition: (dir, stats, rows)} -> the manifest's three maps."""
+    return {k: {pk: w[i] for pk, w in written.items()}
+            for i, k in enumerate(_MAPS)}
 
 
 class ManagedTable:
@@ -143,8 +152,7 @@ class ManagedTable:
         return os.path.join(self.path, "manifests", f"v={version:06d}.json")
 
     def _read_manifest(self, version: int) -> dict[str, str]:
-        with open(self._manifest_path(version)) as fh:
-            return json.load(fh)["partitions"]
+        return self.commit_meta(version)["partitions"]
 
     def commit_meta(self, version: int | None = None) -> dict:
         """Full commit-manifest record for ``version`` (default latest) —
@@ -158,10 +166,21 @@ class ManagedTable:
         """Per-partition {col: [min, max]} recorded at commit time; empty
         for manifests written before stats existed (no pruning, still
         correct)."""
-        with open(self._manifest_path(version)) as fh:
-            return json.load(fh).get("stats", {})
+        return self.commit_meta(version).get("stats", {})
 
-    def _commit(self, version: int, partitions: dict[str, str], meta: dict) -> None:
+    def _read_maps(self, version: int) -> dict[str, dict]:
+        """Copies of a manifest's per-partition maps, to re-reference."""
+        m = self.commit_meta(version)
+        return {k: dict(m[k]) for k in _MAPS}
+
+    def num_rows(self, version: int | None = None) -> int:
+        """Row count of a version (0 before the first commit), summed from
+        its manifest — no data or footer read, no Spark job."""
+        if not self.exists():
+            return 0
+        return sum(self.commit_meta(version)["rows"].values())
+
+    def _commit(self, version: int, maps: dict[str, dict], meta: dict) -> None:
         os.makedirs(os.path.dirname(self._manifest_path(version)), exist_ok=True)
         try:
             # CAS: O_EXCL create of the version manifest. Both of two racing
@@ -169,8 +188,7 @@ class ManagedTable:
             # succeeds, the other surfaces the conflict (no blind overwrite,
             # no silently orphaned winner).
             with open(self._manifest_path(version), "x") as fh:
-                json.dump({"partitions": partitions,
-                           "committed_at": time.time(), **meta}, fh)
+                json.dump({**maps, "committed_at": time.time(), **meta}, fh)
         except FileExistsError:
             raise ConcurrentModificationError(
                 f"{self.path}: version {version} was committed by another "
@@ -183,40 +201,32 @@ class ManagedTable:
         os.replace(tmp, self._pointer)  # atomic pointer swap, commit point
 
     # -- write paths --------------------------------------------------------
-    def _write_partition_dirs(
-            self, df: DataFrame) -> tuple[dict[str, str], dict[str, dict]]:
+    def _write_dir(self, df: DataFrame) -> tuple[str, dict[str, list], int]:
+        """Write one immutable data dir; returns (dir, cluster_by stats, row
+        count), the last two read from its fresh parquet footers."""
+        d = f"data/{uuid.uuid4().hex[:16]}"
+        df.write.mode("overwrite").parquet(os.path.join(self.path, d))
+        return (d, *_dir_footer_stats(os.path.join(self.path, d),
+                                      self.cluster_by))
+
+    def _write_partition_dirs(self, df: DataFrame) -> dict[str, dict]:
         """Write df as one immutable data dir per partition value; the
         partition columns stay IN the data (no directory encoding), so each
         dir is independently readable and schema evolution is per-dir.
-        Returns (partition->dir map, partition->{col: [min,max]} stats over
-        the cluster_by columns, harvested from the freshly-written parquet
-        footers — metadata-only, feeds manifest-level data skipping)."""
-        out: dict[str, str] = {}
-        stats: dict[str, dict] = {}
+        Returns the manifest's per-partition maps (see ``_MAPS``)."""
         if self.cluster_by:
             cols = [c for c in self.cluster_by if c in df.columns]
             if cols:
                 df = df.sortWithinPartitions(*cols)
         if not self.partition_by:
-            d = f"data/{uuid.uuid4().hex[:16]}"
-            df.write.mode("overwrite").parquet(os.path.join(self.path, d))
-            return {_ALL: d}, {_ALL: self._harvest_stats(d)}
+            return _to_maps({_ALL: self._write_dir(df)})
         values = [r.asDict() for r in df.select(*self.partition_by).distinct().collect()]
+        written = {}
         for v in values:
             pred = reduce(lambda a, b: a & b,
                           [F.col(k).eqNullSafe(F.lit(val)) for k, val in v.items()])
-            d = f"data/{uuid.uuid4().hex[:16]}"
-            df.filter(pred).write.mode("overwrite").parquet(
-                os.path.join(self.path, d))
-            out[_part_key(v)] = d
-            stats[_part_key(v)] = self._harvest_stats(d)
-        return out, stats
-
-    def _harvest_stats(self, data_dir: str) -> dict[str, list]:
-        if not self.cluster_by:
-            return {}
-        return _dir_footer_stats(os.path.join(self.path, data_dir),
-                                 self.cluster_by)
+            written[_part_key(v)] = self._write_dir(df.filter(pred))
+        return _to_maps(written)
 
     def optimize(self, target_partitions: int = 1) -> None:
         """Compaction (the OPTIMIZE analog): rewrite every partition of
@@ -227,8 +237,7 @@ class ManagedTable:
             return
         version = self.latest_version()
         manifest = self._read_manifest(version)
-        new_parts: dict[str, str] = {}
-        new_stats: dict[str, dict] = {}
+        written = {}
         for pk, d in manifest.items():
             df = self.spark.read.parquet(os.path.join(self.path, d)) \
                 .coalesce(target_partitions)
@@ -236,12 +245,8 @@ class ManagedTable:
                 cols = [c for c in self.cluster_by if c in df.columns]
                 if cols:
                     df = df.sortWithinPartitions(*cols)
-            nd = f"data/{uuid.uuid4().hex[:16]}"
-            df.write.mode("overwrite").parquet(os.path.join(self.path, nd))
-            new_parts[pk] = nd
-            new_stats[pk] = self._harvest_stats(nd)
-        self._commit(version + 1, new_parts,
-                     {"op": "optimize", "stats": new_stats})
+            written[pk] = self._write_dir(df)
+        self._commit(version + 1, _to_maps(written), {"op": "optimize"})
 
     def create(self, df: DataFrame, mode: str = "error") -> None:
         """First write. mode='error' mirrors delta-rs mode=error (S5)."""
@@ -252,8 +257,7 @@ class ManagedTable:
                 return
         os.makedirs(self.path, exist_ok=True)
         version = self.latest_version() + 1 if self.exists() else 0
-        parts, stats = self._write_partition_dirs(df)
-        self._commit(version, parts, {"op": "create", "stats": stats})
+        self._commit(version, self._write_partition_dirs(df), {"op": "create"})
 
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> None:
         """Full-table replace. ``meta`` keys land in the commit manifest
@@ -263,15 +267,12 @@ class ManagedTable:
             self.create(df)
             if meta:  # re-commit manifest with the caller's meta attached
                 v = self.latest_version()
-                manifest = dict(self._read_manifest(v))
-                stats = dict(self._read_stats(v))
-                self._commit(v + 1, manifest,
-                             {"op": "overwrite", "stats": stats, **meta})
+                self._commit(v + 1, self._read_maps(v),
+                             {"op": "overwrite", **meta})
         else:
-            parts, stats = self._write_partition_dirs(df)
-            self._commit(self.latest_version() + 1, parts,
-                         {"op": "overwrite", "stats": stats, **meta}
-                         if meta else {"op": "overwrite", "stats": stats})
+            maps = self._write_partition_dirs(df)
+            self._commit(self.latest_version() + 1, maps,
+                         {"op": "overwrite", **(meta or {})})
 
     def merge(self, source: DataFrame, keys: Sequence[str],
               dedup_source_order: Sequence[Column] | None = None) -> None:
@@ -289,13 +290,13 @@ class ManagedTable:
                         else source.dropDuplicates(list(keys)))
             return
         version = self.latest_version()
-        manifest = dict(self._read_manifest(version))
+        manifest = self._read_manifest(version)
         prunable = bool(self.partition_by) and all(
             p in keys for p in self.partition_by)
 
         if not self.partition_by:
             merged = merge_upsert(self.read(), source, keys, dedup_source_order)
-            new_parts, new_stats = self._write_partition_dirs(merged)
+            maps = self._write_partition_dirs(merged)
         elif prunable:
             touched = [r.asDict() for r in
                        source.select(*self.partition_by).distinct().collect()]
@@ -307,16 +308,14 @@ class ManagedTable:
                       else source.limit(0))
             merged_touched = merge_upsert(target, source, keys,
                                           dedup_source_order)
-            new_parts = dict(manifest)  # untouched dirs re-referenced as-is
-            new_stats = dict(self._read_stats(version))  # stats carry over too
-            parts, stats = self._write_partition_dirs(merged_touched)
-            new_parts.update(parts)
-            new_stats.update(stats)
+            # untouched dirs are re-referenced as-is, stats and counts too
+            maps = self._read_maps(version)
+            for k, written in self._write_partition_dirs(merged_touched).items():
+                maps[k].update(written)
         else:
             merged = merge_upsert(self.read(), source, keys, dedup_source_order)
-            new_parts, new_stats = self._write_partition_dirs(merged)
-        self._commit(version + 1, new_parts,
-                     {"op": "merge", "keys": list(keys), "stats": new_stats})
+            maps = self._write_partition_dirs(merged)
+        self._commit(version + 1, maps, {"op": "merge", "keys": list(keys)})
 
     # -- read path ----------------------------------------------------------
     def _read_dirs(self, dirs: Sequence[str]) -> DataFrame:
@@ -384,8 +383,7 @@ class ManagedTable:
         rows = []
         for name in sorted(os.listdir(mdir)):
             v = int(name.split("=")[1].split(".")[0])
-            with open(os.path.join(mdir, name)) as fh:
-                m = json.load(fh)
+            m = self.commit_meta(v)
             rows.append((v, m.get("op"), float(m.get("committed_at", 0.0)),
                          len(m.get("partitions", {}))))
         return self.spark.createDataFrame(
@@ -412,8 +410,7 @@ class ManagedTable:
         records exactly which dirs changed."""
         to_v = self.latest_version() if to_version is None else to_version
         if keys is None:
-            with open(self._manifest_path(to_v)) as fh:
-                keys = json.load(fh).get("keys")
+            keys = self.commit_meta(to_v).get("keys")
             if not keys:
                 raise ValueError(
                     "diff needs keys= (the target manifest records none)")
@@ -471,9 +468,8 @@ class ManagedTable:
             cond = reduce(lambda a, b: a & b,
                           [merged[k].eqNullSafe(dels[k]) for k in keys])
             merged = merged.join(dels, cond, "left_anti")
-        parts, stats = self._write_partition_dirs(merged)
-        self._commit(version + 1, parts,
-                     {"op": "apply_cdf", "keys": list(keys), "stats": stats})
+        self._commit(version + 1, self._write_partition_dirs(merged),
+                     {"op": "apply_cdf", "keys": list(keys)})
 
     def vacuum(self, keep_last: int = 2) -> None:
         """Drop manifests older than the newest ``keep_last`` versions and

@@ -10,10 +10,12 @@ Parity targets (reference, /root/reference/):
   models.py:386-399 — no DDL equivalent in a lake table, enforced here by
   the guarded get-or-create operator + single-writer discipline per key.
 
-The reference serializes transitions with SELECT FOR UPDATE row locks; the
-Spark-native equivalent is a conditional MERGE: the update applies only
-where the current state is a legal predecessor, so an illegal or stale
-transition is a no-op that the caller detects (matched-but-not-updated).
+The reference commits every transition under a SELECT FOR UPDATE row lock.
+An ingest batch here commits its new runs once, at the end, so no reader
+sees an intermediate state: ``advance`` walks the batch's run rows through
+the DAG on the driver. ``transition`` is the guarded conditional update for
+runs already committed: it applies only where the current state is a legal
+predecessor, so an illegal or stale transition raises.
 """
 
 from __future__ import annotations
@@ -100,6 +102,23 @@ def new_run_row(stock_id: str, ticker: str, *,
         "error_code": None, "error_message": None,
         "raw_data_uri": None, "processed_data_uri": None,
     }
+
+
+def advance(rows: list[dict], new_state: str, **fields) -> None:
+    """M3 on the driver for uncommitted run rows: move each to ``new_state``
+    in place, stamping its timestamp column and ``updated_at`` now and
+    setting ``fields`` (error code/message, data URIs). Raises like
+    ``transition`` on an illegal step or a FAILED without code and message."""
+    if new_state == IngestionState.FAILED and not (
+            fields.get("error_code") and fields.get("error_message")):
+        raise TransitionError("FAILED transition requires error_code and error_message")
+    ts = _now()
+    for r in rows:
+        if new_state not in VALID_TRANSITIONS[r["state"]]:
+            raise TransitionError(
+                f"run {r['id']} cannot move from {r['state']!r} to {new_state!r}")
+        r.update(fields, state=new_state, updated_at=ts,
+                 **{STATE_TIMESTAMP_COLUMN[new_state]: ts})
 
 
 def runs_dataframe(spark: SparkSession, rows: list[dict]) -> DataFrame:

@@ -418,6 +418,27 @@ def test_manifest_stats_carry_over_on_partial_merge(spark, tmp_path):
     assert [(r["ticker"], r["revenue"]) for r in rows] == [("AAPL", 9.0)]
 
 
+def test_manifest_row_counts_follow_every_write(spark, tmp_path):
+    # each data dir's footer row count lands in the manifest; a partial
+    # merge re-references the untouched partition's count
+    t = ManagedTable(spark, str(tmp_path / "rows"),
+                     partition_by=["record_type"],
+                     cluster_by=["period_end_date"])
+    assert t.num_rows() == 0
+    t.create(df_of(spark, [
+        ("AAPL", "financials", "2024-03", 1.0),
+        ("MSFT", "financials", "2024-03", 2.0),
+        ("AAPL", "metadata", None, None)], SCHEMA))
+    t.merge(df_of(spark, [("AAPL", "financials", "2024-03", 5.0),
+                          ("AAPL", "financials", "2024-06", 6.0)], SCHEMA),
+            ["ticker", "record_type", "period_end_date"])
+    assert sorted(t.commit_meta()["rows"].values()) == [1, 3]
+    assert t.num_rows() == t.read().count() == 4
+    assert t.num_rows(version=0) == 3
+    t.overwrite(t.read().filter(F.col("record_type") == "metadata"))
+    assert t.num_rows() == 1
+
+
 def test_stats_absent_column_never_prunes(spark, tmp_path):
     # a column with no recorded stat must always be kept (skip-safety)
     t = ManagedTable(spark, str(tmp_path / "skip3"),
