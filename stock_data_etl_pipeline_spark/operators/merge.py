@@ -6,9 +6,8 @@ composite key (ticker, record_type, period_end_date)
 (/root/reference/services/workers/tasks/queue_for_delta.py:736-767), plus the
 changed-fields-only guarded update of M4 (update_stock_metadata.py:292-469).
 
-With delta-spark on the classpath this is one DeltaTable.merge call; the
-parquet fallback here computes the exact same result relation with a
-union + per-key window (source wins):
+Delta would run this as one DeltaTable.merge call; here the result
+relation is computed with a union + per-key window (source wins):
 
     merged = row_number() over (partition by keys order by is_source desc)
              == 1   over   (target UNION ALL dedup(source))
@@ -24,7 +23,9 @@ Semantics notes:
 - schema evolution (Delta autoMerge): columns present in only one side are
   null-filled on the other, so later batches can add metric columns —
   replacing the reference's manual Null->Utf8 type dance
-  (queue_for_delta.py:628-635).
+  (queue_for_delta.py:628-635). A column that is string on one side and
+  typed on the other merges as string, the reference's "string chosen so
+  later batches with string values merge cleanly" (SURVEY §1.3).
 - idempotency: merging the same batch twice is a no-op by construction
   (the reference's core invariant, queue_for_delta.py:693-699).
 
@@ -41,21 +42,35 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .windows import latest_per_group
 
 
 def align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Null-fill each side's missing columns so both share one schema
-    (Delta autoMerge behavior). Column order: a's columns, then b's new ones."""
+    (Delta autoMerge behavior). Column order: a's columns, then b's new ones.
+
+    A column that is string on one side and another type on the other is
+    cast to string on both: the transform types a metric column per batch
+    (double, or string when any value is not numeric), and under ANSI
+    ``unionByName`` would widen string + double to double and fail on the
+    first non-numeric value. Other type differences are left to the
+    union's widening."""
     a_fields = {f.name: f for f in a.schema.fields}
     b_fields = {f.name: f for f in b.schema.fields}
     out_cols = list(a_fields) + [n for n in b_fields if n not in a_fields]
+    to_string = {n for n in a_fields.keys() & b_fields.keys()
+                 if a_fields[n].dataType != b_fields[n].dataType
+                 and any(isinstance(f[n].dataType, T.StringType)
+                         for f in (a_fields, b_fields))}
 
     def project(df: DataFrame, own: dict, other: dict) -> DataFrame:
         cols = []
         for n in out_cols:
-            if n in own:
+            if n in to_string:
+                cols.append(F.col(n).cast("string").alias(n))
+            elif n in own:
                 cols.append(F.col(n))
             else:
                 cols.append(F.lit(None).cast(other[n].dataType).alias(n))

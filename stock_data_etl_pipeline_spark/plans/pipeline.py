@@ -35,6 +35,7 @@ from ..functions.normalize import normalize_key
 from ..operators.merge import merge_insert_only, merge_upsert
 from ..operators.windows import first_row_per_group
 from ..schemas import (
+    BRONZE,
     EXCHANGES,
     INGESTION_RUNS,
     SECTORS,
@@ -216,7 +217,7 @@ class StockLake:
 
             # silver transform + merge (S3/S4/F8-F10/S5/S6)
             advance(rows, IngestionState.DELTA_RUNNING)
-            bronze = self.spark.read.parquet(bronze_path)
+            bronze = self.spark.read.schema(BRONZE).parquet(bronze_path)
             # S4 failure path: structurally invalid documents fail their
             # run with the reference's INVALID_DATA_FORMAT code instead of
             # poisoning the batch (queue_for_delta.py:463-470).
@@ -304,7 +305,7 @@ class StockLake:
         if not latest:
             return None
         run = latest[0]
-        raw = (self.spark.read.parquet(run["raw_data_uri"])
+        raw = (self.spark.read.schema(BRONZE).parquet(run["raw_data_uri"])
                .filter((F.col("run_id") == run["id"]) & (F.col("ticker") == t))
                .select("json_str").collect())
         if not raw:
@@ -330,7 +331,9 @@ class StockLake:
                       "sector", "exchange") if c in silver.columns]
         if not meta_cols:
             return self.read_stocks()
-        # predicate reaches the scan: record_type partition + projection
+        # no dir is pruned: both predicates are pushed into the one scan as
+        # row-group filters (a dir holds one record_type, files are
+        # clustered by ticker), plus the projection
         meta = (silver.filter((F.col("record_type") == "metadata")
                               & F.col("ticker").isin(tickers))
                 .select("ticker", *[F.col(c).cast("string").alias(c)

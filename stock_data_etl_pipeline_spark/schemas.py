@@ -101,5 +101,10 @@ RAW_STOCK_JSON = _S([
     ]), True),
 ])
 
+# bronze landing zone: one raw document per run (plans/pipeline.py)
+BRONZE = _S([_F("ticker", T.StringType(), True),
+             _F("run_id", T.StringType(), True),
+             _F("json_str", T.StringType(), True)])
+
 SILVER_KEY_COLUMNS = ["ticker", "record_type", "period_end_date"]
 RECORD_TYPES = ("financials", "metadata", "ttm")

@@ -12,9 +12,10 @@ one you'd want on a real cluster too:
   are stable across executor hosts.
 - Arrow enabled for the pandas-UDF slow path.
 
-Delta Lake support is detected, not required: when `delta-spark` is on the
-classpath we use real Delta MERGE; otherwise `sources.managed_table`
-provides a parquet-backed table with the same upsert semantics.
+When `delta-spark` is importable the session is configured with the Delta
+extensions (``HAS_DELTA``); that is all it changes. Every table the engine
+writes is a `sources.managed_table.ManagedTable` on plain parquet, with or
+without delta-spark.
 """
 
 from __future__ import annotations

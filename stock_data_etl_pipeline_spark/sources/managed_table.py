@@ -1,8 +1,9 @@
 """Versioned parquet table with MERGE — Delta-Lake-shaped storage layer.
 
-When `delta-spark` is importable we use the real thing (see
-``session.HAS_DELTA``); this fallback keeps the same operator surface on
-plain parquet so the engine runs anywhere:
+This is the engine's only table implementation. It keeps the operator
+surface of a Delta table on plain parquet; nothing branches on
+``session.HAS_DELTA``, which only configures the session when delta-spark
+happens to be installed:
 
     tbl = ManagedTable(spark, path, partition_by=["record_type"])
     tbl.create(df)                      # mode=error first write (S5)
@@ -14,9 +15,16 @@ plain parquet so the engine runs anywhere:
 Layout — manifest-per-version, like a miniature Delta transaction log:
 
     <path>/_LATEST                      atomic pointer {"version": N}
-    <path>/manifests/v=N.json           {partition-key -> data dir} map,
-                                        plus per-dir stats and row counts
+    <path>/manifests/v=N.json           {partition-key -> data dir} and
+                                        {partition-key -> row count}
+                                        maps, plus the table schema
     <path>/data/<uuid>/                 immutable per-partition parquet dirs
+
+Every read is one parquet scan over the version's data dirs under the
+manifest's schema, so opening a table infers nothing and starts no Spark
+job (Delta likewise keeps the schema in its log). The scan needs every dir
+of a version to store each column with the manifest's type; a dir that
+lacks a column reads it as NULL.
 
 A merge rewrites ONLY the partitions the source batch touches: untouched
 partitions keep their existing data directories, and the new manifest
@@ -39,6 +47,7 @@ for vacuum, never part of the table.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -47,14 +56,16 @@ import uuid
 from collections.abc import Sequence
 from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.merge import align_schemas, merge_upsert
 
 _ALL = "__all__"  # manifest key for unpartitioned tables
-# per-partition maps of a manifest: data dir, {col: [min, max]}, row count
-_MAPS = ("partitions", "stats", "rows")
+# a manifest's body: per-partition data dir and row count, table schema
+_BODY = ("partitions", "rows", "schema")
 
 
 class TableExistsError(RuntimeError):
@@ -70,56 +81,22 @@ def _part_key(values: dict) -> str:
     return json.dumps(values, sort_keys=True, default=str)
 
 
-def _stat_val(v):
-    """Canonical JSON-safe form for a min/max stat. ISO strings for
-    date/datetime keep lexicographic order == chronological order, so the
-    same comparison works after the manifest round-trips through JSON."""
-    import datetime
-    if isinstance(v, bytes):
-        return v.decode("utf-8", "replace")
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) \
-            else v.isoformat()
-    return v
+def _dir_rows(path: str) -> int:
+    """Row count of the data dir at ``path``, summed from its parquet
+    footers — metadata-only, a handful of footers per commit."""
+    return sum(pq.read_metadata(f).num_rows for f in
+               glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
 
 
-def _dir_footer_stats(path: str, cols: Sequence[str]) -> tuple[dict[str, list], int]:
-    """Per-column [min, max] and the row count over the parquet footers
-    under ``path`` — metadata-only, a handful of footers per commit (the
-    analog of Delta writing per-file stats into its log). Columns without
-    footer stats are omitted: readers treat a missing stat as 'cannot prune'."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    out: dict[str, list] = {}
-    n_rows = 0
-    for f in sorted(_glob.glob(os.path.join(path, "**", "*.parquet"),
-                               recursive=True)):
-        md = pq.ParquetFile(f).metadata
-        n_rows += md.num_rows
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            names = [rg.column(i).path_in_schema
-                     for i in range(rg.num_columns)]
-            for c in cols:
-                if c not in names:
-                    continue
-                st = rg.column(names.index(c)).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo, hi = _stat_val(st.min), _stat_val(st.max)
-                if c in out:
-                    out[c] = [min(out[c][0], lo), max(out[c][1], hi)]
-                else:
-                    out[c] = [lo, hi]
-    return out, n_rows
+def _schema(manifest: dict) -> T.StructType:
+    return T.StructType.fromJson(manifest["schema"])
 
 
-def _to_maps(written: dict[str, tuple[str, dict, int]]) -> dict[str, dict]:
-    """{partition: (dir, stats, rows)} -> the manifest's three maps."""
-    return {k: {pk: w[i] for pk, w in written.items()}
-            for i, k in enumerate(_MAPS)}
+def _retypes(old: T.StructType, new: T.StructType) -> bool:
+    """True when ``new`` holds a column of ``old`` with another type."""
+    types = {f.name: f.dataType.simpleString() for f in new.fields}
+    return any(f.name in types and types[f.name] != f.dataType.simpleString()
+               for f in old.fields)
 
 
 class ManagedTable:
@@ -127,10 +104,10 @@ class ManagedTable:
                  partition_by: Sequence[str] = (),
                  cluster_by: Sequence[str] = ()) -> None:
         """``cluster_by``: sort rows within files on these columns at write
-        time (Z-ORDER-lite) — parquet row-group min/max stats then let
-        point/range reads on those columns skip row groups, the analog of
-        the reference's OPTIMIZE/Z-ORDER on (ticker, period_end_date)
-        (SURVEY §4 index-backed access paths)."""
+        time (Z-ORDER-lite) — a filter on those columns pushed into the
+        scan then skips row groups by their parquet min/max stats, the
+        analog of the reference's OPTIMIZE/Z-ORDER on (ticker,
+        period_end_date) (SURVEY §4 index-backed access paths)."""
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by)
@@ -162,17 +139,6 @@ class ManagedTable:
         with open(self._manifest_path(v)) as fh:
             return json.load(fh)
 
-    def _read_stats(self, version: int) -> dict[str, dict[str, list]]:
-        """Per-partition {col: [min, max]} recorded at commit time; empty
-        for manifests written before stats existed (no pruning, still
-        correct)."""
-        return self.commit_meta(version).get("stats", {})
-
-    def _read_maps(self, version: int) -> dict[str, dict]:
-        """Copies of a manifest's per-partition maps, to re-reference."""
-        m = self.commit_meta(version)
-        return {k: dict(m[k]) for k in _MAPS}
-
     def num_rows(self, version: int | None = None) -> int:
         """Row count of a version (0 before the first commit), summed from
         its manifest — no data or footer read, no Spark job."""
@@ -180,7 +146,7 @@ class ManagedTable:
             return 0
         return sum(self.commit_meta(version)["rows"].values())
 
-    def _commit(self, version: int, maps: dict[str, dict], meta: dict) -> None:
+    def _commit(self, version: int, body: dict, meta: dict) -> None:
         os.makedirs(os.path.dirname(self._manifest_path(version)), exist_ok=True)
         try:
             # CAS: O_EXCL create of the version manifest. Both of two racing
@@ -188,7 +154,7 @@ class ManagedTable:
             # succeeds, the other surfaces the conflict (no blind overwrite,
             # no silently orphaned winner).
             with open(self._manifest_path(version), "x") as fh:
-                json.dump({**maps, "committed_at": time.time(), **meta}, fh)
+                json.dump({**body, "committed_at": time.time(), **meta}, fh)
         except FileExistsError:
             raise ConcurrentModificationError(
                 f"{self.path}: version {version} was committed by another "
@@ -201,32 +167,38 @@ class ManagedTable:
         os.replace(tmp, self._pointer)  # atomic pointer swap, commit point
 
     # -- write paths --------------------------------------------------------
-    def _write_dir(self, df: DataFrame) -> tuple[str, dict[str, list], int]:
-        """Write one immutable data dir; returns (dir, cluster_by stats, row
-        count), the last two read from its fresh parquet footers."""
+    def _write_dir(self, df: DataFrame) -> tuple[str, int]:
+        """Write one immutable data dir, clustered if ``cluster_by`` is set;
+        returns (dir, row count read from its fresh parquet footers)."""
+        cols = [c for c in self.cluster_by if c in df.columns]
+        if cols:
+            df = df.sortWithinPartitions(*cols)
         d = f"data/{uuid.uuid4().hex[:16]}"
         df.write.mode("overwrite").parquet(os.path.join(self.path, d))
-        return (d, *_dir_footer_stats(os.path.join(self.path, d),
-                                      self.cluster_by))
+        return d, _dir_rows(os.path.join(self.path, d))
 
-    def _write_partition_dirs(self, df: DataFrame) -> dict[str, dict]:
+    def _write_partition_dirs(self, df: DataFrame) -> dict:
         """Write df as one immutable data dir per partition value; the
         partition columns stay IN the data (no directory encoding), so each
-        dir is independently readable and schema evolution is per-dir.
-        Returns the manifest's per-partition maps (see ``_MAPS``)."""
-        if self.cluster_by:
-            cols = [c for c in self.cluster_by if c in df.columns]
-            if cols:
-                df = df.sortWithinPartitions(*cols)
+        dir is independently readable. Returns the manifest body (see
+        ``_BODY``) with df's schema as the table schema."""
         if not self.partition_by:
-            return _to_maps({_ALL: self._write_dir(df)})
-        values = [r.asDict() for r in df.select(*self.partition_by).distinct().collect()]
-        written = {}
-        for v in values:
-            pred = reduce(lambda a, b: a & b,
-                          [F.col(k).eqNullSafe(F.lit(val)) for k, val in v.items()])
-            written[_part_key(v)] = self._write_dir(df.filter(pred))
-        return _to_maps(written)
+            written = {_ALL: self._write_dir(df)}
+        else:
+            written = {}
+            for r in df.select(*self.partition_by).distinct().collect():
+                v = r.asDict()
+                pred = reduce(lambda a, b: a & b,
+                              [F.col(k).eqNullSafe(F.lit(val))
+                               for k, val in v.items()])
+                written[_part_key(v)] = self._write_dir(df.filter(pred))
+        return {"partitions": {pk: d for pk, (d, _) in written.items()},
+                "rows": {pk: n for pk, (_, n) in written.items()},
+                "schema": df.schema.jsonValue()}
+
+    def _read_body(self, version: int) -> dict:
+        m = self.commit_meta(version)
+        return {k: m[k] for k in _BODY}
 
     def optimize(self, target_partitions: int = 1) -> None:
         """Compaction (the OPTIMIZE analog): rewrite every partition of
@@ -236,17 +208,12 @@ class ManagedTable:
         if not self.exists():
             return
         version = self.latest_version()
-        manifest = self._read_manifest(version)
-        written = {}
-        for pk, d in manifest.items():
-            df = self.spark.read.parquet(os.path.join(self.path, d)) \
-                .coalesce(target_partitions)
-            if self.cluster_by:
-                cols = [c for c in self.cluster_by if c in df.columns]
-                if cols:
-                    df = df.sortWithinPartitions(*cols)
-            written[pk] = self._write_dir(df)
-        self._commit(version + 1, _to_maps(written), {"op": "optimize"})
+        body = self._read_body(version)
+        schema = _schema(body)
+        for pk, d in body["partitions"].items():
+            body["partitions"][pk], body["rows"][pk] = self._write_dir(
+                self._scan([d], schema).coalesce(target_partitions))
+        self._commit(version + 1, body, {"op": "optimize"})
 
     def create(self, df: DataFrame, mode: str = "error") -> None:
         """First write. mode='error' mirrors delta-rs mode=error (S5)."""
@@ -267,108 +234,82 @@ class ManagedTable:
             self.create(df)
             if meta:  # re-commit manifest with the caller's meta attached
                 v = self.latest_version()
-                self._commit(v + 1, self._read_maps(v),
+                self._commit(v + 1, self._read_body(v),
                              {"op": "overwrite", **meta})
         else:
-            maps = self._write_partition_dirs(df)
-            self._commit(self.latest_version() + 1, maps,
+            body = self._write_partition_dirs(df)
+            self._commit(self.latest_version() + 1, body,
                          {"op": "overwrite", **(meta or {})})
 
     def merge(self, source: DataFrame, keys: Sequence[str],
               dedup_source_order: Sequence[Column] | None = None) -> None:
         """Null-safe update_all/insert_all upsert; creates on first call.
 
-        Only partitions present in the source are read, merged and
-        rewritten; every other partition's data dir carries over into the
-        new manifest untouched. Partition columns must be part of the merge
-        key for this pruning to be sound (they are for the silver table:
-        record_type ⊂ (ticker, record_type, period_end_date)); otherwise
-        the merge falls back to a full-table rewrite.
+        Only partitions present in the source are read (with the full
+        table schema), merged and rewritten; every other partition's data
+        dir carries over into the new manifest untouched. Partition columns
+        must be part of the merge key for this pruning to be sound (they
+        are for the silver table: record_type ⊂ (ticker, record_type,
+        period_end_date)); otherwise the merge rewrites the whole table.
+        So does a merge whose result changes an existing column's type: an
+        untouched dir would still store the old type, and the one scan
+        needs every dir of a version to agree with the manifest schema.
         """
         if not self.exists():
             self.create(source if dedup_source_order is None
                         else source.dropDuplicates(list(keys)))
             return
         version = self.latest_version()
-        manifest = self._read_manifest(version)
-        prunable = bool(self.partition_by) and all(
-            p in keys for p in self.partition_by)
+        old = self._read_body(version)
+        parts, schema = old["partitions"], _schema(old)
+        # a source column that holds no value must not decide a column's
+        # type (the transform types an all-null column string): drop it,
+        # and the merge null-fills it with the table's type — same rows.
+        # Costs one job, only when a source column's type differs.
+        clash = [f.name for f in source.schema.fields if f.name in
+                 schema.names and f.dataType != schema[f.name].dataType]
+        if clash:
+            counts = source.select(*[F.count(F.col(c)) for c in clash]).first()
+            source = source.drop(*[c for c, n in zip(clash, counts) if n == 0])
+        keep: list[str] = []
+        if self.partition_by and all(p in keys for p in self.partition_by):
+            touched = {_part_key(r.asDict()) for r in
+                       source.select(*self.partition_by).distinct().collect()}
+            keep = [pk for pk in parts if pk not in touched]
 
-        if not self.partition_by:
-            merged = merge_upsert(self.read(), source, keys, dedup_source_order)
-            maps = self._write_partition_dirs(merged)
-        elif prunable:
-            touched = [r.asDict() for r in
-                       source.select(*self.partition_by).distinct().collect()]
-            touched_keys = {_part_key(v) for v in touched}
-            # pruning is by manifest key: only dirs whose partition value
-            # appears in the source batch are read and merged
-            existing_dirs = [d for pk, d in manifest.items() if pk in touched_keys]
-            target = (self._read_dirs(existing_dirs) if existing_dirs
-                      else source.limit(0))
-            merged_touched = merge_upsert(target, source, keys,
-                                          dedup_source_order)
-            # untouched dirs are re-referenced as-is, stats and counts too
-            maps = self._read_maps(version)
-            for k, written in self._write_partition_dirs(merged_touched).items():
-                maps[k].update(written)
-        else:
-            merged = merge_upsert(self.read(), source, keys, dedup_source_order)
-            maps = self._write_partition_dirs(merged)
-        self._commit(version + 1, maps, {"op": "merge", "keys": list(keys)})
+        def merged_over(pks) -> DataFrame:
+            target = self._scan(sorted(parts[pk] for pk in pks), schema)
+            return merge_upsert(target, source, keys, dedup_source_order)
+
+        merged = merged_over(pk for pk in parts if pk not in keep)
+        if keep and _retypes(schema, merged.schema):
+            keep = []
+            merged = merged_over(parts)
+        body = self._write_partition_dirs(merged)
+        # untouched dirs are re-referenced as-is, row counts too
+        for k in ("partitions", "rows"):
+            body[k] = {**{pk: old[k][pk] for pk in keep}, **body[k]}
+        self._commit(version + 1, body, {"op": "merge", "keys": list(keys)})
 
     # -- read path ----------------------------------------------------------
-    def _read_dirs(self, dirs: Sequence[str]) -> DataFrame:
-        dfs = [self.spark.read.parquet(os.path.join(self.path, d)) for d in dirs]
-        out = dfs[0]
-        for df in dfs[1:]:
-            a, b = align_schemas(out, df)  # per-dir schema evolution
-            out = a.unionByName(b)
-        return out
+    def _scan(self, dirs: Sequence[str], schema: T.StructType) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(
+            *(os.path.join(self.path, d) for d in dirs))
 
     def read(self, version: int | None = None) -> DataFrame:
         v = self.latest_version() if version is None else version
-        manifest = self._read_manifest(v)
-        if not manifest:
+        m = self.commit_meta(v)
+        if not m["partitions"]:
             raise ValueError(f"empty table manifest at version {v}")
-        return self._read_dirs(sorted(manifest.values()))
-
-    def prune_dirs(self, col: str, lo=None, hi=None,
-                   version: int | None = None) -> list[str]:
-        """Data dirs that MIGHT hold rows with ``lo <= col <= hi``, by the
-        manifest's per-dir min/max — Delta-style file skipping, decided
-        from one small JSON with zero data or footer reads. A dir with no
-        recorded stat for ``col`` is always kept (skipping must never be
-        able to drop a matching row)."""
-        v = self.latest_version() if version is None else version
-        manifest = self._read_manifest(v)
-        stats = self._read_stats(v)
-        lo_c = _stat_val(lo) if lo is not None else None
-        hi_c = _stat_val(hi) if hi is not None else None
-        keep = []
-        for pk, d in sorted(manifest.items()):
-            mm = stats.get(pk, {}).get(col)
-            if mm is not None:
-                if hi_c is not None and mm[0] > hi_c:
-                    continue
-                if lo_c is not None and mm[1] < lo_c:
-                    continue
-            keep.append(d)
-        return keep
+        return self._scan(sorted(m["partitions"].values()), _schema(m))
 
     def read_where(self, col: str, lo=None, hi=None,
                    version: int | None = None) -> DataFrame:
-        """Range read with manifest-level data skipping: dirs whose
-        [min, max] for ``col`` cannot intersect [lo, hi] never enter the
-        plan, then the residual filter is applied (and pushed down to the
-        surviving files' row groups — cluster_by writes sorted data, so
-        row-group stats are tight). At 100 TB this is the difference
-        between scanning the table and scanning the handful of data dirs a
-        point/range query actually touches."""
-        dirs = self.prune_dirs(col, lo, hi, version)
-        if not dirs:
-            return self.read(version).filter(F.lit(False))
-        out = self._read_dirs(dirs)
+        """Range read: ``read(version)`` filtered to ``lo <= col <= hi``
+        (either bound optional). The filter is pushed into the scan, and
+        ``cluster_by`` writes sorted files, so row groups whose parquet
+        min/max cannot intersect the range are skipped."""
+        out = self.read(version)
         if lo is not None:
             out = out.filter(F.col(col) >= F.lit(lo))
         if hi is not None:

@@ -366,9 +366,8 @@ def test_scd2_merge_close_out_and_versions(spark):
 
 
 def test_manifest_stats_prune_dirs_and_read_where(spark, tmp_path):
-    # Delta-style data skipping: per-dir [min,max] for the cluster_by
-    # column lands in the manifest at commit time (footer-harvested, no
-    # data read); a range read consults ONLY the manifest to drop dirs.
+    # a range read is read(version) plus the range filter, pushed into the
+    # one scan over every dir (cluster_by sorts rows for row-group skipping)
     t = ManagedTable(spark, str(tmp_path / "skip"),
                      partition_by=["record_type"],
                      cluster_by=["period_end_date"])
@@ -378,27 +377,25 @@ def test_manifest_stats_prune_dirs_and_read_where(spark, tmp_path):
         ("MSFT", "metadata", "2024-03", 3.0),
         ("MSFT", "metadata", "2024-06", 4.0)], SCHEMA))
 
-    # disjoint ranges -> each range read prunes to exactly one dir
-    assert len(t.prune_dirs("period_end_date", "2024-01", "2024-12")) == 1
-    assert len(t.prune_dirs("period_end_date", "2023-01", "2023-12")) == 1
-    # stat-covered range touching both dirs keeps both
-    assert len(t.prune_dirs("period_end_date", "2023-05", "2024-05")) == 2
-    # no overlap at all -> zero dirs, empty (but well-formed) result
-    assert len(t.prune_dirs("period_end_date", "2025-01", "2025-12")) == 0
-    assert t.read_where("period_end_date", "2025-01", "2025-12").count() == 0
+    # no overlap at all -> empty (but well-formed) result
+    empty = t.read_where("period_end_date", "2025-01", "2025-12")
+    assert empty.count() == 0 and empty.columns == t.read().columns
 
     got = {r["ticker"] for r in
            t.read_where("period_end_date", "2024-01", "2024-12").collect()}
     assert got == {"MSFT"}
-    # residual filter still applies INSIDE the surviving dir
+    # a range spanning both partitions returns rows from both
+    both = t.read_where("period_end_date", "2023-05", "2024-05").collect()
+    assert sorted(r["period_end_date"] for r in both) == ["2023-06", "2024-03"]
+    # the residual filter applies INSIDE a partition's dir
     one = t.read_where("period_end_date", "2024-04", "2024-12").collect()
     assert [(r["ticker"], r["period_end_date"]) for r in one] == \
         [("MSFT", "2024-06")]
 
 
 def test_manifest_stats_carry_over_on_partial_merge(spark, tmp_path):
-    # a merge touching one partition must re-reference the other dir AND
-    # its stats; pruning on the untouched range keeps working
+    # a merge touching one partition re-references the other dir; range
+    # reads over both the merged and the untouched partition stay right
     t = ManagedTable(spark, str(tmp_path / "skip2"),
                      partition_by=["record_type"],
                      cluster_by=["period_end_date"])
@@ -408,14 +405,62 @@ def test_manifest_stats_carry_over_on_partial_merge(spark, tmp_path):
     t.merge(df_of(spark, [("AAPL", "financials", "2023-09", 9.0)], SCHEMA),
             ["ticker", "record_type", "period_end_date"])
 
-    stats = t._read_stats(t.latest_version())
-    assert len(stats) == 2  # untouched metadata partition's stats survived
-    assert len(t.prune_dirs("period_end_date", "2024-01", "2024-12")) == 1
-    # merged partition's stats widened to include the new row
-    fin = t.prune_dirs("period_end_date", "2023-07", "2023-12")
-    assert len(fin) == 1
+    meta = '{"record_type": "metadata"}'
+    assert t._read_manifest(1)[meta] == t._read_manifest(0)[meta]
+    rows = t.read_where("period_end_date", "2024-01", "2024-12").collect()
+    assert [(r["ticker"], r["revenue"]) for r in rows] == [("MSFT", 3.0)]
     rows = t.read_where("period_end_date", "2023-07", "2023-12").collect()
     assert [(r["ticker"], r["revenue"]) for r in rows] == [("AAPL", 9.0)]
+
+
+def _jobs_during(spark, fn):
+    """Spark jobs launched while ``fn`` runs, counted under a job group."""
+    sc = spark.sparkContext
+    group = "managed-table-open"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_by", [[], ["record_type"]],
+                         ids=["unpartitioned", "three_partitions"])
+def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by):
+    # the manifest carries the schema, so opening a table infers nothing:
+    # read() and read_where() build a plan without running a Spark job
+    t = ManagedTable(spark, str(tmp_path / "t"), partition_by=partition_by,
+                     cluster_by=["period_end_date"])
+    t.create(df_of(spark, [("A", rt, "2024-03", 1.0)
+                           for rt in ("financials", "metadata", "ttm")],
+                   SCHEMA))
+    assert len(t._read_manifest(0)) == (3 if partition_by else 1)
+    assert _jobs_during(spark, lambda: (
+        t.read(), t.read_where("period_end_date", "2024-01", "2024-12"))) == 0
+    assert t.read_where("period_end_date", "2024-01", "2024-12").count() == 3
+
+
+def test_manifest_schema_matches_read_schema(spark, tmp_path):
+    # every commit records the written schema; a merge adding a column
+    # records the widened one, and read() returns exactly it
+    from pyspark.sql.types import StructType
+    t = ManagedTable(spark, str(tmp_path / "s"), partition_by=["record_type"])
+    t.create(df_of(spark, [("A", "financials", "p1", 1.0),
+                           ("A", "metadata", None, None)], SCHEMA))
+    t.merge(df_of(spark, [("A", "financials", "p2", 2.0, 7)],
+                  SCHEMA + ", eps long"),
+            ["ticker", "record_type", "period_end_date"])
+    for v in (0, 1):
+        recorded = StructType.fromJson(t.commit_meta(v)["schema"])
+        got = t.read(v).schema
+        assert [(f.name, f.dataType) for f in recorded] == \
+            [(f.name, f.dataType) for f in got]
+    assert t.read().columns == ["ticker", "record_type", "period_end_date",
+                                "revenue", "eps"]
+    # the untouched metadata dir lacks eps: it reads as NULL
+    meta = t.read().filter(F.col("record_type") == "metadata").collect()
+    assert meta[0]["eps"] is None
 
 
 def test_manifest_row_counts_follow_every_write(spark, tmp_path):
@@ -437,14 +482,6 @@ def test_manifest_row_counts_follow_every_write(spark, tmp_path):
     assert t.num_rows(version=0) == 3
     t.overwrite(t.read().filter(F.col("record_type") == "metadata"))
     assert t.num_rows() == 1
-
-
-def test_stats_absent_column_never_prunes(spark, tmp_path):
-    # a column with no recorded stat must always be kept (skip-safety)
-    t = ManagedTable(spark, str(tmp_path / "skip3"),
-                     cluster_by=["period_end_date"])
-    t.create(df_of(spark, [("AAPL", "financials", "2023-03", 1.0)], SCHEMA))
-    assert len(t.prune_dirs("revenue", 100.0, 200.0)) == 1
 
 
 def test_incremental_join_view_equals_recompute(spark, tmp_path):

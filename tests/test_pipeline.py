@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType
 
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
 from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
@@ -140,3 +142,90 @@ def test_batch_skips_stocks_with_active_run(spark, tmp_path):
     assert ("MSFT", S.QUEUED_FOR_FETCH) in runs
     assert ("MSFT", S.DONE) not in runs
     assert ("GOOG", S.DONE) in runs
+
+
+def _doc(revenue, **metadata):
+    return json.dumps({"data": {
+        "financials": {"quarterly": {"period_end_date": ["2024-03", "2024-06"],
+                                     "revenue": revenue},
+                       "ttm": {"period_end_date": "TTM", "revenue": revenue[-1]}},
+        "metadata": {"name": "X", **metadata}}})
+
+
+@pytest.mark.parametrize("first, second, want", [
+    # numeric batch first: its doubles render as strings after the merge
+    (["100", "200"], ["1.2B", "3B"],
+     {"AAA": ["100.0", "200.0"], "BBB": ["1.2B", "3B"]}),
+    # string batch first: the later numeric batch merges into a string column
+    (["1.2B", "3B"], ["100", "200"],
+     {"AAA": ["1.2B", "3B"], "BBB": ["100.0", "200.0"]}),
+], ids=["double_then_string", "string_then_double"])
+def test_string_and_double_batches_merge_as_string(spark, tmp_path,
+                                                   first, second, want):
+    # the transform types a metric column per batch (double when every
+    # value parses, else string); a string and a double side of the same
+    # column must merge as string, never as a failing cast to double
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    lake.ingest_batch([("AAA", _doc(first))])
+    lake.ingest_batch([("BBB", _doc(second))])
+
+    assert {(r["ticker"], r["state"]) for r in lake.read_runs().collect()} \
+        == {("AAA", S.DONE), ("BBB", S.DONE)}
+    silver = lake.silver.read()
+    assert silver.schema["revenue"].dataType == StringType()
+    got = {}
+    for r in (silver.filter(F.col("record_type") == "financials")
+              .orderBy("ticker", "period_end_date").collect()):
+        got.setdefault(r["ticker"], []).append(r["revenue"])
+    assert got == want
+
+
+def test_type_change_in_one_partition_rewrites_every_partition(spark,
+                                                               tmp_path):
+    # batch 2 touches only the metadata partition, but turns 'employees'
+    # (double in every silver dir) into string: every partition is
+    # rewritten so all dirs of the version store the column as string
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    lake.ingest_batch([("AAA", _doc(["100", "200"], employees="100"))])
+    dirs0 = set(lake.silver._read_manifest(lake.silver.latest_version()).values())
+    lake.ingest_batch([("BBB", json.dumps(
+        {"data": {"metadata": {"name": "B", "employees": "many"}}}))])
+    dirs1 = lake.silver._read_manifest(lake.silver.latest_version())
+
+    assert {r["state"] for r in lake.read_runs().collect()} == {S.DONE}
+    assert len(dirs1) == 3 and not dirs0 & set(dirs1.values())
+    silver = lake.silver.read()
+    assert silver.schema["employees"].dataType == StringType()
+    assert silver.schema["revenue"].dataType == DoubleType()
+    meta = {r["ticker"]: r["employees"] for r in
+            silver.filter(F.col("record_type") == "metadata").collect()}
+    assert meta == {"AAA": "100.0", "BBB": "many"}
+    fin = sorted(r["revenue"] for r in
+                 silver.filter(F.col("record_type") == "financials").collect())
+    assert fin == [100.0, 200.0]
+
+
+def test_column_without_values_keeps_the_table_type(spark, tmp_path):
+    # a TTM-only doc yields no financials or ttm row, so the batch's
+    # 'revenue' column holds no value and the transform types it string;
+    # it must not turn silver's double 'revenue' into string, nor rewrite
+    # the financials and ttm partitions it never touches
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    lake.ingest_batch([("AAA", _doc([100.0, 200.0]))])
+    dirs0 = lake.silver._read_manifest(lake.silver.latest_version())
+    lake.ingest_batch([("BBB", json.dumps({"data": {
+        "financials": {"ttm": {"period_end_date": "TTM", "revenue": 5.0}},
+        "metadata": {"name": "B"}}}))])
+    dirs1 = lake.silver._read_manifest(lake.silver.latest_version())
+
+    assert {r["state"] for r in lake.read_runs().collect()} == {S.DONE}
+    silver = lake.silver.read()
+    assert silver.schema["revenue"].dataType == DoubleType()
+    assert {pk: d for pk, d in dirs1.items() if "metadata" not in pk} \
+        == {pk: d for pk, d in dirs0.items() if "metadata" not in pk}
+    assert len(dirs1) == 3
+    rows = {(r["ticker"], r["record_type"], r["revenue"])
+            for r in silver.collect()}
+    assert rows == {("AAA", "financials", 100.0), ("AAA", "financials", 200.0),
+                    ("AAA", "ttm", 200.0), ("AAA", "metadata", None),
+                    ("BBB", "metadata", None)}

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
@@ -38,9 +39,13 @@ def _lake_with_runs(spark, tmp_path):
     return lake
 
 
-def test_list_runs_filters_and_pagination(spark, tmp_path):
-    lake = _lake_with_runs(spark, tmp_path)
+@pytest.fixture(scope="module")
+def lake(spark, tmp_path_factory):
+    # the read-only tests below share one built lake
+    return _lake_with_runs(spark, tmp_path_factory.mktemp("query_service"))
 
+
+def test_list_runs_filters_and_pagination(lake):
     assert list_runs(lake).count() == 4  # 2 DONE + FAILED + QUEUED
 
     failed = list_runs(lake, {"state": "FAILED"}).collect()
@@ -62,16 +67,14 @@ def test_list_runs_filters_and_pagination(spark, tmp_path):
     assert len(ids) == 4 and len(set(ids)) == 4
 
 
-def test_stock_detail_joins_dims(spark, tmp_path):
-    lake = _lake_with_runs(spark, tmp_path)
+def test_stock_detail_joins_dims(lake):
     row = stock_detail(lake, " aapl ").collect()[0]
     assert row["name"] == "Apple"
     assert row["exchange_name"] == "NASDAQ"
     assert row["sector_name"] == "Tech"
 
 
-def test_latest_run_for_stock(spark, tmp_path):
-    lake = _lake_with_runs(spark, tmp_path)
+def test_latest_run_for_stock(lake):
     newest = latest_run_for_stock(lake, "AAPL").collect()[0]
     assert newest["state"] == S.FAILED  # the most recent AAPL run
     done = latest_run_for_stock(lake, "AAPL", only_done=True).collect()[0]
@@ -80,8 +83,6 @@ def test_latest_run_for_stock(spark, tmp_path):
 
 def test_opaque_cursor_round_trip_and_reverse(spark, tmp_path):
     import datetime
-
-    import pytest
 
     from stock_data_etl_pipeline_spark.operators.pagination import (
         InvalidCursorError,
