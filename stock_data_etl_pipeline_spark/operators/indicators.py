@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .pinned import pin
+
 # bars-per-window constants shared by the plans and their SQL oracles
 BOLL_N = 20
 RSI_N = 14
@@ -418,7 +420,6 @@ def beta_alpha(bars: DataFrame) -> DataFrame:
     # side) — unpinned, the resample executes once per consumer
     # (round-15, guide §2.4 don't-recompute; bar-scale rows, calendar-
     # bounded, safe to hold)
-    from .pinned import pin
     ret = pin(bars.select("event_type", "hr", ri.alias("ri"))
               .filter(F.col("ri").isNotNull()))
     # per-hour market return: avg of integer-valued summands < 2^53 is
@@ -1563,7 +1564,6 @@ def hurst_rs(bars: DataFrame, m_small: int = HURST_M_SMALL,
     # hash partitioning, which satisfies every downstream
     # (event_type, blk) window/groupBy via the subset rule, so each
     # scale pays only a sort, not an exchange (round-14, guide §2.4).
-    from .pinned import pin
     r = pin(r)
 
     def per_scale(m: int) -> DataFrame:

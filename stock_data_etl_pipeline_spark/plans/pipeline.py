@@ -75,11 +75,18 @@ class StockLake:
         self.silver = ManagedTable(spark, os.path.join(root, "silver/stocks_unified"),
                                    partition_by=["record_type"],
                                    cluster_by=["ticker", "period_end_date"])
-        self.stocks = ManagedTable(spark, os.path.join(root, "control/stocks"))
-        self.exchanges = ManagedTable(spark, os.path.join(root, "control/exchanges"))
-        self.sectors = ManagedTable(spark, os.path.join(root, "control/sectors"))
-        self.runs = ManagedTable(spark, os.path.join(root, "control/ingestion_runs"))
-        self.bulk_runs = ManagedTable(spark, os.path.join(root, "control/bulk_queue_runs"))
+        # the control tables are small and every API request reads them
+        # whole: each keeps its latest snapshot cached
+        self.stocks = ManagedTable(spark, os.path.join(root, "control/stocks"),
+                                   cache=True)
+        self.exchanges = ManagedTable(spark, os.path.join(root, "control/exchanges"),
+                                      cache=True)
+        self.sectors = ManagedTable(spark, os.path.join(root, "control/sectors"),
+                                    cache=True)
+        self.runs = ManagedTable(spark, os.path.join(root, "control/ingestion_runs"),
+                                 cache=True)
+        self.bulk_runs = ManagedTable(spark, os.path.join(root, "control/bulk_queue_runs"),
+                                      cache=True)
 
     # -- control-plane helpers ---------------------------------------------
     def _read_or_empty(self, tbl: ManagedTable, schema) -> DataFrame:
@@ -295,13 +302,13 @@ class StockLake:
         JSON (the reference's 502-corrupt-object path)."""
         import json as _json
 
-        from ..operators.windows import latest_per_group
         t = ticker.strip().upper()
-        runs = self.read_runs().filter(
-            (F.col("ticker") == t) & (F.col("state") == IngestionState.DONE))
-        latest = latest_per_group(
-            runs, ["ticker"],
-            [F.col("created_at").desc(), F.col("id").desc()]).collect()
+        # one ticker: a top-1, not a per-ticker window
+        latest = (self.read_runs()
+                  .filter((F.col("ticker") == t)
+                          & (F.col("state") == IngestionState.DONE))
+                  .orderBy(F.col("created_at").desc(), F.col("id").desc())
+                  .limit(1).collect())
         if not latest:
             return None
         run = latest[0]

@@ -91,11 +91,12 @@ def stock_detail(lake: StockLake, ticker: str) -> DataFrame:
 
 def latest_run_for_stock(lake: StockLake, ticker: str,
                          only_done: bool = False) -> DataFrame:
-    """W1/W2: the newest (optionally DONE) run for a ticker."""
-    from ..operators.windows import latest_per_group
+    """W1/W2: the newest (optionally DONE) run for a ticker, ties broken
+    by the larger id. With the rows filtered to one ticker this is a
+    single-key top-1: Spark plans it as one TakeOrderedAndProject, with no
+    shuffle (a per-group window would partition by ticker first)."""
     t = ticker.strip().upper()
     runs = lake.read_runs().filter(F.col("ticker") == t)
     if only_done:
         runs = runs.filter(F.col("state") == IngestionState.DONE)
-    return latest_per_group(runs, ["ticker"],
-                            [F.col("created_at").desc(), F.col("id").desc()])
+    return runs.orderBy(F.col("created_at").desc(), F.col("id").desc()).limit(1)

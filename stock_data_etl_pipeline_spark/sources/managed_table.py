@@ -26,6 +26,19 @@ job (Delta likewise keeps the schema in its log). The scan needs every dir
 of a version to store each column with the manifest's type; a dir that
 lacks a column reads it as NULL.
 
+One snapshot per commit: ``read()`` resolves _LATEST and the manifest on
+every call, so it is never stale, but it hands back the SAME DataFrame for
+as long as the manifest's data dirs are unchanged (Delta likewise serves
+one snapshot per table version). The key is the sorted dir tuple, not the
+version number: dirs are uuid-named and never reused, so a table dropped
+and re-created at version 0 cannot hit an old entry, and a retype rewrites
+every dir, so the dirs also fix the schema. A table built with
+``cache=True`` additionally keeps its snapshot in Spark's cache and
+unpersists the one it replaces. The stock lake sets it for its small
+control tables, which every API request reads whole; not for silver, whose
+reads are row-group-pushed range scans and whose cached copy would be the
+whole fact table, materialized by every batch's metadata sync.
+
 A merge rewrites ONLY the partitions the source batch touches: untouched
 partitions keep their existing data directories, and the new manifest
 simply re-references them — version commit cost is O(touched data +
@@ -51,6 +64,7 @@ import glob
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Sequence
@@ -102,16 +116,25 @@ def _retypes(old: T.StructType, new: T.StructType) -> bool:
 class ManagedTable:
     def __init__(self, spark: SparkSession, path: str,
                  partition_by: Sequence[str] = (),
-                 cluster_by: Sequence[str] = ()) -> None:
+                 cluster_by: Sequence[str] = (),
+                 cache: bool = False) -> None:
         """``cluster_by``: sort rows within files on these columns at write
         time (Z-ORDER-lite) — a filter on those columns pushed into the
         scan then skips row groups by their parquet min/max stats, the
         analog of the reference's OPTIMIZE/Z-ORDER on (ticker,
-        period_end_date) (SURVEY §4 index-backed access paths)."""
+        period_end_date) (SURVEY §4 index-backed access paths).
+        ``cache``: keep the latest snapshot in Spark's cache (see the
+        module docstring) — for small tables read whole."""
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by)
         self.cluster_by = list(cluster_by)
+        self.cache = cache
+        # (sorted data dirs, DataFrame) of the latest snapshot read; the
+        # lock makes check-and-swap atomic for a reader and a writer
+        # sharing this table
+        self._snapshot: tuple[tuple[str, ...], DataFrame] | None = None
+        self._lock = threading.Lock()
 
     # -- pointer / manifest -------------------------------------------------
     @property
@@ -297,11 +320,30 @@ class ManagedTable:
             *(os.path.join(self.path, d) for d in dirs))
 
     def read(self, version: int | None = None) -> DataFrame:
+        """The snapshot of ``version`` (default latest). The pointer and
+        manifest are read on every call; the DataFrame is reused while the
+        version's data dirs equal the last latest read's, so repeated
+        reads of one commit skip file listing and planning. A time-travel
+        read that misses builds a fresh scan and leaves the slot alone."""
         v = self.latest_version() if version is None else version
         m = self.commit_meta(v)
         if not m["partitions"]:
             raise ValueError(f"empty table manifest at version {v}")
-        return self._scan(sorted(m["partitions"].values()), _schema(m))
+        dirs = tuple(sorted(m["partitions"].values()))
+        with self._lock:
+            if self._snapshot is not None and self._snapshot[0] == dirs:
+                return self._snapshot[1]
+            df = self._scan(dirs, _schema(m))
+            if version is not None:
+                return df
+            if self.cache:
+                df.cache()
+                if self._snapshot is not None:
+                    # a holder of the old snapshot recomputes it from its
+                    # immutable dirs
+                    self._snapshot[1].unpersist()
+            self._snapshot = (dirs, df)
+            return df
 
     def read_where(self, col: str, lo=None, hi=None,
                    version: int | None = None) -> DataFrame:

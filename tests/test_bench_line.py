@@ -61,3 +61,9 @@ def test_subset_line_not_truncated():
     obj = json.loads(format_stdout_line(per, 1.791, 0.01))
     assert obj["queries"] == {"stock_trix": 1.05, "graph_k_core": 0.74}
     assert "queries_truncated" not in obj
+
+
+def test_sacrifice_order_names_only_headline_queries():
+    # a renamed or dropped headline query must leave the sacrifice list
+    # too, or the fixed pop order silently skips it
+    assert set(LINE_SACRIFICE_ORDER) <= set(HEADLINE)

@@ -81,6 +81,16 @@ def test_read_raw_json_latest_done(spark, tmp_path):
     assert lake.read_raw_json("MISSING") is None
 
 
+def test_read_raw_json_breaks_created_at_ties_by_id(tied_runs_lake):
+    # of two DONE runs created together, the larger id's document wins
+    assert json.loads(tied_runs_lake.read_raw_json("aapl")) == {"v": 2}
+
+
+def test_read_raw_json_runs_two_jobs(tied_runs_lake, jobs_during):
+    # a top-1 picks the run, one scan reads its bronze row
+    assert jobs_during(lambda: tied_runs_lake.read_raw_json("AAPL")) == 2
+
+
 # -- A3/M5 bulk queue -------------------------------------------------------
 
 def test_queue_all_stocks_counters(spark, tmp_path):

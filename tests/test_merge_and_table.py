@@ -413,21 +413,10 @@ def test_manifest_stats_carry_over_on_partial_merge(spark, tmp_path):
     assert [(r["ticker"], r["revenue"]) for r in rows] == [("AAPL", 9.0)]
 
 
-def _jobs_during(spark, fn):
-    """Spark jobs launched while ``fn`` runs, counted under a job group."""
-    sc = spark.sparkContext
-    group = "managed-table-open"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("partition_by", [[], ["record_type"]],
                          ids=["unpartitioned", "three_partitions"])
-def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by):
+def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by,
+                                          jobs_during):
     # the manifest carries the schema, so opening a table infers nothing:
     # read() and read_where() build a plan without running a Spark job
     t = ManagedTable(spark, str(tmp_path / "t"), partition_by=partition_by,
@@ -436,7 +425,7 @@ def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by):
                            for rt in ("financials", "metadata", "ttm")],
                    SCHEMA))
     assert len(t._read_manifest(0)) == (3 if partition_by else 1)
-    assert _jobs_during(spark, lambda: (
+    assert jobs_during(lambda: (
         t.read(), t.read_where("period_end_date", "2024-01", "2024-12"))) == 0
     assert t.read_where("period_end_date", "2024-01", "2024-12").count() == 3
 
@@ -483,6 +472,127 @@ def test_manifest_row_counts_follow_every_write(spark, tmp_path):
     t.overwrite(t.read().filter(F.col("record_type") == "metadata"))
     assert t.num_rows() == 1
 
+
+KEYS = ["ticker", "record_type", "period_end_date"]
+
+
+def _rows(df):
+    return sorted((r["ticker"], r["revenue"]) for r in df.collect())
+
+
+def test_read_reuses_one_snapshot_per_commit(spark, tmp_path):
+    # read() resolves the pointer on every call but hands back one
+    # DataFrame per commit; every write path moves it to the new rows
+    t = ManagedTable(spark, str(tmp_path / "snap"), partition_by=["record_type"])
+    t.create(df_of(spark, [("A", "financials", "p1", 1.0)], SCHEMA))
+    prev = t.read()
+    assert t.read() is prev
+    writes = [
+        (lambda: t.overwrite(df_of(spark, [("B", "financials", "p1", 2.0)],
+                                   SCHEMA)),
+         [("B", 2.0)]),
+        (lambda: t.merge(df_of(spark, [("B", "metadata", "p1", 3.0)], SCHEMA),
+                         KEYS),
+         [("B", 2.0), ("B", 3.0)]),
+        (t.optimize, [("B", 2.0), ("B", 3.0)]),
+    ]
+    for write, want in writes:
+        write()
+        cur = t.read()
+        assert cur is not prev and t.read() is cur
+        assert _rows(cur) == want
+        prev = cur
+    # a time-travel miss is a fresh scan and leaves the slot alone
+    assert _rows(t.read(0)) == [("A", 1.0)]
+    assert t.read() is prev
+
+
+@pytest.mark.parametrize("cache", [False, True], ids=["plain", "cached"])
+def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path, cache):
+    # dropped and re-created through the same instance, the table is at
+    # version 0 again: its new dirs, not the version number, decide
+    import shutil
+    path = str(tmp_path / "again")
+    t = ManagedTable(spark, path, cache=cache)
+    t.create(df_of(spark, [("A", "metadata", None, 1.0)], SCHEMA))
+    old = t.read()
+    assert _rows(old) == [("A", 1.0)]
+    shutil.rmtree(path)
+    t.create(df_of(spark, [("B", "metadata", None, 2.0),
+                           ("C", "metadata", None, 3.0)], SCHEMA))
+    assert t.latest_version() == 0
+    new = t.read()
+    assert new is not old
+    assert _rows(new) == [("B", 2.0), ("C", 3.0)]
+
+
+def test_superseded_cached_snapshot_still_reads_its_version(spark, tmp_path):
+    # the next read() unpersists the snapshot it replaces; a caller still
+    # holding it recomputes that version from its immutable dirs
+    from pyspark import StorageLevel
+    t = ManagedTable(spark, str(tmp_path / "ctl"), cache=True)
+    t.create(df_of(spark, [("A", "metadata", None, 1.0)], SCHEMA))
+    held = t.read()
+    assert held.storageLevel != StorageLevel.NONE
+    assert _rows(held) == [("A", 1.0)]
+    t.overwrite(df_of(spark, [("B", "metadata", None, 2.0)], SCHEMA))
+    new = t.read()
+    assert held.storageLevel == StorageLevel.NONE
+    assert new.storageLevel != StorageLevel.NONE
+    assert _rows(held) == [("A", 1.0)]
+    assert _rows(new) == [("B", 2.0)]
+
+
+def test_concurrent_readers_share_one_snapshot_per_commit(spark, tmp_path):
+    # after each commit, more reader threads than cores race on the slot
+    # miss: all must get the one cached snapshot, and the one it replaced
+    # must be unpersisted (a lost swap would leave an orphan cached)
+    import sys
+    import threading
+
+    from pyspark import StorageLevel
+    t = ManagedTable(spark, str(tmp_path / "race"), cache=True)
+    t.create(df_of(spark, [("A", "metadata", None, 0.0)], SCHEMA))
+    prev = t.read()
+    n = 8
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for i in range(1, 4):
+            t.overwrite(df_of(spark, [("A", "metadata", None, float(i))], SCHEMA))
+            barrier, got = threading.Barrier(n), []
+
+            def reader():
+                barrier.wait(timeout=30)
+                got.append(t.read())
+            threads = [threading.Thread(target=reader) for _ in range(n)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+                assert not th.is_alive()
+            assert len(got) == n and all(df is got[0] for df in got)
+            assert got[0] is not prev
+            assert prev.storageLevel == StorageLevel.NONE
+            assert got[0].storageLevel != StorageLevel.NONE
+            assert _rows(got[0]) == [("A", float(i))]
+            prev = got[0]
+    finally:
+        sys.setswitchinterval(interval)
+
+def test_diff_of_a_reused_snapshot_with_itself_is_empty(spark, tmp_path):
+    # diff(v, v) joins one DataFrame object with itself: the self-join
+    # must still match every key to itself
+    t = ManagedTable(spark, str(tmp_path / "self"), partition_by=["record_type"])
+    t.create(df_of(spark, [("A", "financials", "p1", 1.0),
+                           (None, "metadata", None, 2.0)], SCHEMA))
+    t.merge(df_of(spark, [("A", "financials", "p1", 5.0)], SCHEMA), KEYS)
+    v = t.latest_version()
+    latest = t.read()
+    assert t.read(v) is latest
+    assert t.diff(v, v).count() == 0
+    assert [r["_change_type"] for r in t.diff(v - 1, v).collect()] == \
+        ["update_postimage"]
 
 def test_incremental_join_view_equals_recompute(spark, tmp_path):
     """Maintained inner-join view: fold dL><R0 + L1><dR into the view

@@ -81,6 +81,24 @@ def test_latest_run_for_stock(lake):
     assert done["state"] == S.DONE
 
 
+@pytest.mark.parametrize("only_done,want", [(False, "b2"), (True, "a2")])
+def test_latest_run_for_stock_breaks_ties_by_id(tied_runs_lake, only_done,
+                                                want):
+    rows = latest_run_for_stock(tied_runs_lake, " aapl",
+                                only_done=only_done).collect()
+    assert [r["id"] for r in rows] == [want]
+
+
+@pytest.mark.parametrize("only_done", [False, True])
+def test_latest_run_for_stock_is_one_job_without_shuffle(tied_runs_lake,
+                                                         jobs_during,
+                                                         only_done):
+    # one ticker's latest run is a top-1, not a per-ticker window
+    df = latest_run_for_stock(tied_runs_lake, "AAPL", only_done=only_done)
+    assert jobs_during(df.collect) == 1
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_opaque_cursor_round_trip_and_reverse(spark, tmp_path):
     import datetime
 
