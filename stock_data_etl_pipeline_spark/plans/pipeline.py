@@ -31,15 +31,14 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.normalize import normalize_key
-from ..operators.merge import merge_insert_only, merge_upsert
-from ..operators.windows import first_row_per_group
+from ..operators.merge import merge_upsert
 from ..schemas import (
     BRONZE,
     EXCHANGES,
     INGESTION_RUNS,
     SECTORS,
     SILVER_KEY_COLUMNS,
+    STOCK_METADATA_FIELDS,
     STOCKS,
 )
 from ..sources.managed_table import ManagedTable
@@ -55,6 +54,11 @@ from .stock_transform import transform_stock_json
 
 def _now() -> datetime:
     return datetime.now(tz=timezone.utc).replace(tzinfo=None)
+
+
+def _key(name: str) -> str:
+    """The one matching rule for tickers and dim names (models.py:61-70)."""
+    return name.strip().upper()
 
 
 class StockLake:
@@ -100,46 +104,51 @@ class StockLake:
     def read_stocks(self) -> DataFrame:
         return self._read_or_empty(self.stocks, STOCKS)
 
-    def get_or_create_stocks(self, tickers: list[str]) -> DataFrame:
-        """M1 for stocks: ticker-keyed insert-only merge; tickers normalized
-        strip().upper() at the boundary (models.py:172-181); commits only
-        when a ticker is new."""
-        ts = _now()
-        norm = {t.strip().upper() for t in tickers}
+    def _append(self, tbl: ManagedTable, current: DataFrame, rows: list,
+                schema) -> None:
+        """Commit ``current`` plus new-keyed ``rows`` as one file (a union
+        alone writes a file per input slice)."""
+        tbl.overwrite(current.unionByName(
+            self.spark.createDataFrame(rows, schema)).coalesce(1))
+
+    def get_or_create_stocks(self, tickers: list[str]) -> dict[str, str]:
+        """M1 for stocks: ticker -> id of every stock, after adding each of
+        ``tickers`` new under ``_key`` (models.py:172-181). One collect of
+        the cached snapshot; commits only when a ticker is new."""
         current = self.read_stocks()
-        have = current.filter(F.col("ticker").isin(*norm)).select("ticker").collect()
-        new = sorted(norm - {r["ticker"] for r in have})
-        if not new:
-            return current
-        fresh = self.spark.createDataFrame(
-            [(str(uuid.uuid4()), t, None, None, None, None, None, None, None,
-              None, None, ts, ts) for t in new], STOCKS)
-        merged = merge_insert_only(current, fresh, ["ticker"])
-        self.stocks.overwrite(merged)
-        return merged
+        ids = {r["ticker"]: r["id"]
+               for r in current.select("ticker", "id").collect()}
+        new = sorted({_key(t) for t in tickers} - ids.keys())
+        if new:
+            ts = _now()
+            fresh = [(str(uuid.uuid4()), t, None, None, None, None, None,
+                      None, None, None, None, ts, ts) for t in new]
+            self._append(self.stocks, current, fresh, STOCKS)
+            ids.update((t, sid) for sid, t, *_ in fresh)
+        return ids
 
     def get_or_create_dim(self, tbl: ManagedTable, schema, names: list[str],
-                          normalize: bool) -> DataFrame:
+                          normalize: bool) -> dict[str, str]:
         """M1 for exchanges (normalize=True: stored UPPER+trimmed,
         models.py:61-70) and sectors (normalize=False: case-preserved,
-        matched case-insensitively, models.py:83-92)."""
-        ts = _now()
+        models.py:83-92), both matched under ``_key``: ``_key(name)`` -> id
+        of every row, after adding each new non-blank name (first spelling
+        wins). One collect of the cached snapshot; commits only when a name
+        is new."""
         current = self._read_or_empty(tbl, schema)
-        seen: dict[str, str] = {}
+        ids = {_key(r["name"]): r["id"]
+               for r in current.select("name", "id").collect()}
+        new: dict[str, str] = {}
         for n in names:
-            if n is None or not n.strip():
-                continue
-            stored = n.strip().upper() if normalize else n.strip()
-            seen.setdefault(stored.upper(), stored)
-        fresh = self.spark.createDataFrame(
-            [(str(uuid.uuid4()), stored, ts, ts) for stored in seen.values()],
-            schema).withColumn("match_key", normalize_key(F.col("name")))
-        cur_keyed = current.withColumn("match_key", normalize_key(F.col("name")))
-        if fresh.join(cur_keyed, "match_key", "left_anti").isEmpty():
-            return current  # no new name: nothing to commit
-        merged = merge_insert_only(cur_keyed, fresh, ["match_key"]).drop("match_key")
-        tbl.overwrite(merged)
-        return merged
+            if n is not None and n.strip() and _key(n) not in ids:
+                new.setdefault(_key(n), _key(n) if normalize else n.strip())
+        if new:
+            ts = _now()
+            fresh = [(str(uuid.uuid4()), stored, ts, ts)
+                     for stored in new.values()]
+            self._append(tbl, current, fresh, schema)
+            ids.update((k, row[0]) for k, row in zip(new, fresh))
+        return ids
 
     def _active_run_ids(self, tickers: list[str]) -> dict[str, str]:
         """ticker -> id of an existing non-terminal run — the reference's
@@ -194,10 +203,7 @@ class StockLake:
         if not tickers and not fetch_errors:
             return {"batch_id": None, "run_ids": [], "failed_run_ids": [],
                     "n_silver_rows": self.silver.num_rows()}
-        everyone = tickers + list(fetch_errors)
-        stocks = self.get_or_create_stocks(everyone)
-        tick_to_stock = {r["ticker"]: r["id"] for r in stocks.filter(
-            F.col("ticker").isin(everyone)).select("ticker", "id").collect()}
+        tick_to_stock = self.get_or_create_stocks(tickers + list(fetch_errors))
 
         # M2: one new run per ticker (the active-run guard ran in the
         # caller); a fetch error fails its run straight from the queue
@@ -327,50 +333,40 @@ class StockLake:
     # -- metadata sync (M4) -------------------------------------------------
     def sync_stock_metadata(self, tickers: list[str]) -> DataFrame:
         """S7 pushdown read of ``tickers``' metadata rows + changed-fields-
-        only update of stocks, resolving exchange/sector through dim
-        get-or-create (update_stock_metadata.py:195-469)."""
+        only update of stocks, resolving exchange/sector names to ids
+        through the dim get-or-create maps (update_stock_metadata.py:
+        195-469)."""
         if not tickers or not self.silver.exists():
             return self.read_stocks()
         silver = self.silver.read()
-        meta_cols = [c for c in
-                     ("name", "country", "subindustry", "morningstar_sector",
-                      "morningstar_industry", "industry", "description",
-                      "sector", "exchange") if c in silver.columns]
+        meta_cols = [c for c in STOCK_METADATA_FIELDS if c in silver.columns]
         if not meta_cols:
             return self.read_stocks()
-        # no dir is pruned: both predicates are pushed into the one scan as
-        # row-group filters (a dir holds one record_type, files are
-        # clustered by ticker), plus the projection
-        meta = (silver.filter((F.col("record_type") == "metadata")
+        # one collect of batch-sized rows: both predicates and the
+        # projection are pushed into the one scan (a subdir holds one
+        # record_type, files are clustered by ticker)
+        rows = (silver.filter((F.col("record_type") == "metadata")
                               & F.col("ticker").isin(tickers))
                 .select("ticker", *[F.col(c).cast("string").alias(c)
-                                    for c in meta_cols]))
-        # W3: single metadata row per ticker, deterministic pick
-        meta = first_row_per_group(meta, ["ticker"], [F.col(c) for c in meta_cols])
-
-        names = [r.asDict() for r in meta.select(
-            *(c for c in ("exchange", "sector") if c in meta.columns)).collect()]
-        exch_df = sect_df = None
-        if "exchange" in meta.columns:
-            exch_df = self.get_or_create_dim(
-                self.exchanges, EXCHANGES,
-                [n.get("exchange") for n in names], normalize=True)
-        if "sector" in meta.columns:
-            sect_df = self.get_or_create_dim(
-                self.sectors, SECTORS,
-                [n.get("sector") for n in names], normalize=False)
-
-        src = meta
-        if exch_df is not None:
-            e = exch_df.select(F.col("id").alias("exchange_id"),
-                               normalize_key(F.col("name")).alias("_ek"))
-            src = (src.withColumn("_ek", normalize_key(F.col("exchange")))
-                   .join(F.broadcast(e), "_ek", "left").drop("_ek", "exchange"))
-        if sect_df is not None:
-            s = sect_df.select(F.col("id").alias("sector_id"),
-                               normalize_key(F.col("name")).alias("_sk"))
-            src = (src.withColumn("_sk", normalize_key(F.col("sector")))
-                   .join(F.broadcast(s), "_sk", "left").drop("_sk", "sector"))
+                                    for c in meta_cols]).collect())
+        # W3: one metadata row per ticker, deterministic pick: the first
+        # under ascending meta_cols, nulls first (Spark's default order)
+        meta: dict = {}
+        for r in sorted(rows, key=lambda r: [(v is not None, v or "")
+                                             for v in r]):
+            meta.setdefault(r["ticker"], r.asDict())
+        for c, tbl, schema in (("exchange", self.exchanges, EXCHANGES),
+                               ("sector", self.sectors, SECTORS)):
+            if c in meta_cols:
+                ids = self.get_or_create_dim(tbl, schema,
+                                             [r[c] for r in meta.values()],
+                                             normalize=c == "exchange")
+                for r in meta.values():  # a blank or null name maps to None
+                    r[f"{c}_id"] = ids.get(_key(r.pop(c) or ""))
+        cols = ["ticker", *(f"{c}_id" if c in ("exchange", "sector") else c
+                            for c in meta_cols)]
+        src = self.spark.createDataFrame(
+            list(meta.values()), ", ".join(f"{c} string" for c in cols))
 
         # Changed-fields-only overlay: a NULL metadata field never clobbers
         # an existing value (the reference drops null fields from the update

@@ -18,7 +18,13 @@ Layout — manifest-per-version, like a miniature Delta transaction log:
     <path>/manifests/v=N.json           {partition-key -> data dir} and
                                         {partition-key -> row count}
                                         maps, plus the table schema
-    <path>/data/<uuid>/                 immutable per-partition parquet dirs
+    <path>/data/<uuid>/_pk=<key>/       immutable per-partition parquet dirs
+
+One write job per commit: ``partitionBy`` on a hidden JSON column of the
+partition values writes one fresh ``data/<uuid>/``, and the manifest names
+each ``_pk=<key>`` subdir as a partition's data dir, as Delta's log names
+the files of one job (an unpartitioned table is the one partition ``{}``).
+The partition columns stay in the files: each subdir is self-contained.
 
 Every read is one parquet scan over the version's data dirs under the
 manifest's schema, so opening a table infers nothing and starts no Spark
@@ -69,6 +75,7 @@ import time
 import uuid
 from collections.abc import Sequence
 from functools import reduce
+from urllib.parse import unquote
 
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -77,7 +84,7 @@ from pyspark.sql import types as T
 
 from ..operators.merge import align_schemas, merge_upsert
 
-_ALL = "__all__"  # manifest key for unpartitioned tables
+_PK = "_pk"  # hidden write column: a row's partition values as JSON
 # a manifest's body: per-partition data dir and row count, table schema
 _BODY = ("partitions", "rows", "schema")
 
@@ -93,6 +100,11 @@ class ConcurrentModificationError(RuntimeError):
 
 def _part_key(values: dict) -> str:
     return json.dumps(values, sort_keys=True, default=str)
+
+
+def _pk_col(partition_by: Sequence[str]) -> Column:
+    """A row's partition values as JSON, never null (a null is ``null``)."""
+    return F.to_json(F.struct(*partition_by), {"ignoreNullFields": "false"})
 
 
 def _dir_rows(path: str) -> int:
@@ -190,53 +202,46 @@ class ManagedTable:
         os.replace(tmp, self._pointer)  # atomic pointer swap, commit point
 
     # -- write paths --------------------------------------------------------
-    def _write_dir(self, df: DataFrame) -> tuple[str, int]:
-        """Write one immutable data dir, clustered if ``cluster_by`` is set;
-        returns (dir, row count read from its fresh parquet footers)."""
-        cols = [c for c in self.cluster_by if c in df.columns]
-        if cols:
-            df = df.sortWithinPartitions(*cols)
-        d = f"data/{uuid.uuid4().hex[:16]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, d))
-        return d, _dir_rows(os.path.join(self.path, d))
+    def _next_version(self) -> int:
+        return self.latest_version() + 1 if self.exists() else 0
 
     def _write_partition_dirs(self, df: DataFrame) -> dict:
-        """Write df as one immutable data dir per partition value; the
-        partition columns stay IN the data (no directory encoding), so each
-        dir is independently readable. Returns the manifest body (see
-        ``_BODY``) with df's schema as the table schema."""
-        if not self.partition_by:
-            written = {_ALL: self._write_dir(df)}
-        else:
-            written = {}
-            for r in df.select(*self.partition_by).distinct().collect():
-                v = r.asDict()
-                pred = reduce(lambda a, b: a & b,
-                              [F.col(k).eqNullSafe(F.lit(val))
-                               for k, val in v.items()])
-                written[_part_key(v)] = self._write_dir(df.filter(pred))
-        return {"partitions": {pk: d for pk, (d, _) in written.items()},
-                "rows": {pk: n for pk, (_, n) in written.items()},
-                "schema": df.schema.jsonValue()}
+        """Write df in one job, a ``_pk=<key>`` subdir per partition (see
+        the module docstring), clustered if ``cluster_by`` is set. Returns
+        the manifest body (``_BODY``): subdirs and footer row counts keyed
+        by ``_part_key``, df's schema. A zero-row df writes no subdir."""
+        cols = [c for c in self.cluster_by if c in df.columns]
+        d = f"data/{uuid.uuid4().hex[:16]}"
+        # _PK leads the sort: the writer needs rows grouped by it, so it
+        # adds no sort of its own that would undo the clustering
+        (df.withColumn(_PK, _pk_col(self.partition_by))
+           .sortWithinPartitions(_PK, *cols)
+           .write.partitionBy(_PK).parquet(os.path.join(self.path, d)))
+        body: dict = {"partitions": {}, "rows": {},
+                      "schema": df.schema.jsonValue()}
+        for sub in os.listdir(os.path.join(self.path, d)):
+            if sub.startswith(f"{_PK}="):
+                pk = _part_key(json.loads(unquote(sub[len(_PK) + 1:])))
+                body["partitions"][pk] = f"{d}/{sub}"
+                body["rows"][pk] = _dir_rows(os.path.join(self.path, d, sub))
+        return body
 
     def _read_body(self, version: int) -> dict:
         m = self.commit_meta(version)
         return {k: m[k] for k in _BODY}
 
     def optimize(self, target_partitions: int = 1) -> None:
-        """Compaction (the OPTIMIZE analog): rewrite every partition of
-        the CURRENT version into ``target_partitions`` files (clustered if
-        cluster_by is set) and commit as a new version. Streaming
-        micro-batch merges produce many small files; this folds them."""
+        """Compaction (the OPTIMIZE analog): rewrite the CURRENT version in
+        one job, at most ``target_partitions`` files per partition, and
+        commit it. Streaming micro-batch merges produce many small files;
+        this folds them."""
         if not self.exists():
             return
         version = self.latest_version()
         body = self._read_body(version)
-        schema = _schema(body)
-        for pk, d in body["partitions"].items():
-            body["partitions"][pk], body["rows"][pk] = self._write_dir(
-                self._scan([d], schema).coalesce(target_partitions))
-        self._commit(version + 1, body, {"op": "optimize"})
+        table = self._scan(sorted(body["partitions"].values()), _schema(body))
+        self._commit(version + 1, self._write_partition_dirs(
+            table.coalesce(target_partitions)), {"op": "optimize"})
 
     def create(self, df: DataFrame, mode: str = "error") -> None:
         """First write. mode='error' mirrors delta-rs mode=error (S5)."""
@@ -245,24 +250,17 @@ class ManagedTable:
                 raise TableExistsError(self.path)
             if mode == "ignore":
                 return
-        os.makedirs(self.path, exist_ok=True)
-        version = self.latest_version() + 1 if self.exists() else 0
-        self._commit(version, self._write_partition_dirs(df), {"op": "create"})
+        self._commit(self._next_version(), self._write_partition_dirs(df),
+                     {"op": "create"})
 
     def overwrite(self, df: DataFrame, meta: dict | None = None) -> None:
-        """Full-table replace. ``meta`` keys land in the commit manifest
-        atomically with the data — e.g. a streaming maintainer's epoch
-        id, so replay detection and the fold commit can't diverge."""
-        if not self.exists():
-            self.create(df)
-            if meta:  # re-commit manifest with the caller's meta attached
-                v = self.latest_version()
-                self._commit(v + 1, self._read_body(v),
-                             {"op": "overwrite", **meta})
-        else:
-            body = self._write_partition_dirs(df)
-            self._commit(self.latest_version() + 1, body,
-                         {"op": "overwrite", **(meta or {})})
+        """Full-table replace, one commit (version 0 on a missing table).
+        ``meta`` keys land in the commit manifest atomically with the data
+        — e.g. a streaming maintainer's epoch id, so replay detection and
+        the fold commit can't diverge."""
+        body = self._write_partition_dirs(df)
+        self._commit(self._next_version(), body,
+                     {"op": "overwrite", **(meta or {})})
 
     def merge(self, source: DataFrame, keys: Sequence[str],
               dedup_source_order: Sequence[Column] | None = None) -> None:
@@ -296,8 +294,8 @@ class ManagedTable:
             source = source.drop(*[c for c, n in zip(clash, counts) if n == 0])
         keep: list[str] = []
         if self.partition_by and all(p in keys for p in self.partition_by):
-            touched = {_part_key(r.asDict()) for r in
-                       source.select(*self.partition_by).distinct().collect()}
+            touched = {_part_key(json.loads(r[0])) for r in source.select(
+                _pk_col(self.partition_by)).distinct().collect()}
             keep = [pk for pk in parts if pk not in touched]
 
         def merged_over(pks) -> DataFrame:
@@ -327,9 +325,9 @@ class ManagedTable:
         read that misses builds a fresh scan and leaves the slot alone."""
         v = self.latest_version() if version is None else version
         m = self.commit_meta(v)
-        if not m["partitions"]:
-            raise ValueError(f"empty table manifest at version {v}")
         dirs = tuple(sorted(m["partitions"].values()))
+        if not dirs:  # a zero-row commit: nothing to scan or keep
+            return self.spark.createDataFrame([], _schema(m))
         with self._lock:
             if self._snapshot is not None and self._snapshot[0] == dirs:
                 return self._snapshot[1]
@@ -456,14 +454,14 @@ class ManagedTable:
 
     def vacuum(self, keep_last: int = 2) -> None:
         """Drop manifests older than the newest ``keep_last`` versions and
-        every data dir no surviving manifest references."""
+        every ``data/<uuid>`` that no surviving manifest references."""
         latest = self.latest_version()
         keep_versions = [v for v in range(max(0, latest - keep_last + 1),
                                           latest + 1)
                          if os.path.exists(self._manifest_path(v))]
-        referenced: set[str] = set()
-        for v in keep_versions:
-            referenced.update(self._read_manifest(v).values())
+        # a data dir is data/<uuid>/_pk=<key>
+        referenced = {"/".join(d.split("/")[:2]) for v in keep_versions
+                      for d in self._read_manifest(v).values()}
         mdir = os.path.join(self.path, "manifests")
         for name in os.listdir(mdir):
             v = int(name.split("=")[1].split(".")[0])

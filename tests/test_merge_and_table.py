@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -160,6 +162,21 @@ def test_vacuum_drops_old_versions(spark, tmp_table_dir):
     assert t.read().collect()[0]["revenue"] == 3.0
     with pytest.raises(Exception):
         t.read(version=0).collect()
+
+    # partitioned: the latest version re-references the untouched metadata
+    # subdir of v0's write; vacuum keeps that write's data/<uuid> dir
+    p = ManagedTable(spark, tmp_table_dir + "_p", partition_by=["record_type"])
+    keys = ["ticker", "record_type", "period_end_date"]
+    p.create(df_of(spark, [("A", "financials", "p1", 1.0),
+                           ("A", "metadata", None, 0.0)], SCHEMA))
+    for i in range(2, 4):
+        p.merge(df_of(spark, [("A", "financials", "p1", float(i))], SCHEMA),
+                keys)
+    meta_key = '{"record_type": "metadata"}'
+    assert p._read_manifest(2)[meta_key] == p._read_manifest(0)[meta_key]
+    p.vacuum(keep_last=1)
+    got = {r["record_type"]: r["revenue"] for r in p.read().collect()}
+    assert got == {"financials": 3.0, "metadata": 0.0}
 
 
 def test_concurrent_writers_one_winner_one_conflict(spark, tmp_table_dir):
@@ -425,6 +442,12 @@ def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by,
                            for rt in ("financials", "metadata", "ttm")],
                    SCHEMA))
     assert len(t._read_manifest(0)) == (3 if partition_by else 1)
+    # the create wrote every partition in one job
+    t2 = ManagedTable(spark, str(tmp_path / "t2"), partition_by=partition_by,
+                      cluster_by=["period_end_date"])
+    src = df_of(spark, [("A", rt, "2024-03", 1.0)
+                        for rt in ("financials", "metadata", "ttm")], SCHEMA)
+    assert jobs_during(lambda: t2.create(src)) == 1
     assert jobs_during(lambda: (
         t.read(), t.read_where("period_end_date", "2024-01", "2024-12"))) == 0
     assert t.read_where("period_end_date", "2024-01", "2024-12").count() == 3
@@ -669,3 +692,52 @@ def test_streaming_maintain_join_view(spark, tmp_path):
     got = sorted((r["lid"], r["k"], r["v"], r["_n"])
                  for r in view.read().collect())
     assert got == [(1, "k1", 1.0, 1), (3, "k1", 1.0, 1)]
+
+
+def test_first_overwrite_with_meta_commits_once(spark, tmp_path):
+    t = ManagedTable(spark, str(tmp_path / "ow"))
+    t.overwrite(df_of(spark, [("A", "f", "p", 1.0)], SCHEMA),
+                meta={"epoch": 0})
+    assert t.latest_version() == 0
+    assert t.commit_meta()["epoch"] == 0
+    assert _rows(t.read()) == [("A", 1.0)]
+
+
+def test_partition_values_round_trip(spark, tmp_path):
+    # a null partition value and values holding path and JSON syntax each
+    # get a subdir of the one write, a manifest key and their own rows
+    t = ManagedTable(spark, str(tmp_path / "odd"), partition_by=["record_type"])
+    odd = [None, "a/b", "k=v", "50%", "{x", "", "tab\there"]
+    t.create(df_of(spark, [(f"T{i}", rt, "p", float(i))
+                           for i, rt in enumerate(odd)], SCHEMA))
+    m = t._read_manifest(0)
+    assert sorted(m) == sorted(
+        json.dumps({"record_type": rt}) for rt in odd)
+    assert len({d.split("/")[1] for d in m.values()}) == 1  # one data/<uuid>
+    got = {r["record_type"]: r["ticker"] for r in t.read().collect()}
+    assert got == {rt: f"T{i}" for i, rt in enumerate(odd)}
+    # a merge touching the null and the slash partition keeps the rest
+    t.merge(df_of(spark, [("T0", None, "p", 9.0), ("T1", "a/b", "p", 8.0)],
+                  SCHEMA), ["ticker", "record_type", "period_end_date"])
+    m1 = t._read_manifest(1)
+    assert sorted(m1) == sorted(m)
+    assert [k for k in m if m1[k] == m[k]] == [
+        k for k in m if json.loads(k)["record_type"] not in (None, "a/b")]
+    got = {r["ticker"]: r["revenue"] for r in t.read().collect()}
+    assert got == {"T0": 9.0, "T1": 8.0,
+                   **{f"T{i}": float(i) for i in range(2, len(odd))}}
+
+
+@pytest.mark.parametrize("partition_by", [[], ["record_type"]],
+                         ids=["unpartitioned", "partitioned"])
+def test_zero_row_write_reads_back_empty(spark, tmp_path, partition_by):
+    t = ManagedTable(spark, str(tmp_path / "empty"), partition_by=partition_by)
+    t.create(spark.createDataFrame([], SCHEMA))
+    empty = t.read()
+    assert empty.count() == 0 and t.num_rows() == 0
+    assert empty.schema == spark.createDataFrame([], SCHEMA).schema
+    t.merge(df_of(spark, [("A", "f", "p", 1.0)], SCHEMA),
+            ["ticker", "record_type", "period_end_date"])
+    assert _rows(t.read()) == [("A", 1.0)]
+    t.overwrite(t.read().filter(F.col("ticker") == "none"))
+    assert t.read().count() == 0 and t.num_rows() == 0

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
+from stock_data_etl_pipeline_spark.schemas import EXCHANGES
 from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
 
 DOC = {
@@ -90,17 +91,31 @@ def test_dim_get_or_create_case_rules(spark, tmp_path):
     doc_b = json.loads(json.dumps(DOC))
     doc_b["data"]["metadata"]["sector"] = "tech"       # same sector, diff case
     doc_b["data"]["metadata"]["exchange"] = "Nasdaq"   # same exchange, diff case
+    doc_c = json.loads(json.dumps(DOC))
+    doc_c["data"]["metadata"]["sector"] = "tech\n"     # strip() drops \n
+    doc_c["data"]["metadata"]["exchange"] = "nasdaq\t"  # and \t
     lake.ingest_batch([("AAPL", json.dumps(doc_a))])
     lake.ingest_batch([("MSFT", json.dumps(doc_b))])
+    lake.ingest_batch([("IBM", json.dumps(doc_c))])
     # matched case-insensitively -> still one row each
     assert lake.sectors.read().count() == 1
     assert lake.exchanges.read().count() == 1
     # sector kept its first-seen case
     assert lake.sectors.read().collect()[0]["name"] == "Tech"
-    # both stocks resolve to the same dim ids
+    # all three stocks resolve to the same dim ids
     stocks = {r["ticker"]: r for r in lake.stocks.read().collect()}
-    assert stocks["AAPL"]["sector_id"] == stocks["MSFT"]["sector_id"]
-    assert stocks["AAPL"]["exchange_id"] == stocks["MSFT"]["exchange_id"]
+    for t in ("MSFT", "IBM"):
+        assert stocks[t]["sector_id"] == stocks["AAPL"]["sector_id"]
+        assert stocks[t]["exchange_id"] == stocks["AAPL"]["exchange_id"]
+    assert stocks["AAPL"]["exchange_id"] is not None
+
+    # names that all exist commit nothing and map to the existing ids
+    v = lake.exchanges.latest_version()
+    ids = lake.get_or_create_dim(lake.exchanges, EXCHANGES,
+                                 ["NASDAQ", " nasdaq\t", None, " "],
+                                 normalize=True)
+    assert lake.exchanges.latest_version() == v
+    assert ids == {"NASDAQ": stocks["AAPL"]["exchange_id"]}
 
 
 def test_batch_dedupes_tickers_first_payload_wins(spark, tmp_path):
@@ -124,8 +139,7 @@ def test_batch_skips_stocks_with_active_run(spark, tmp_path):
     lake = StockLake(spark, str(tmp_path / "lake"))
     lake.ingest_batch([("AAPL", json.dumps(DOC))])
     # plant a non-terminal run for MSFT (as if another request is mid-flight)
-    stocks = lake.get_or_create_stocks(["MSFT"])
-    sid = {r["ticker"]: r["id"] for r in stocks.collect()}
+    sid = lake.get_or_create_stocks(["MSFT"])
     active = new_run_row(sid["MSFT"], "MSFT")
     lake.runs.overwrite(lake.read_runs().unionByName(
         runs_dataframe(spark, [active])))
