@@ -1,7 +1,8 @@
 """Normalization scalar functions (the reference's ingest-boundary rules).
 
 All pure Column expressions — JVM-side, codegen'd, no UDFs — so they can sit
-inside scans and filters without breaking whole-stage codegen or pushdown.
+inside scans and filters without breaking whole-stage codegen or pushdown;
+``key_of`` is the key rule for names already on the driver.
 
 Parity targets (reference, /root/reference/):
 - key normalization strip().upper(): services/api/models.py:61-70,172-181,
@@ -23,6 +24,13 @@ def normalize_key(col: Column | str) -> Column:
     """``strip().upper()`` — applied to tickers/exchange names at ingest."""
     c = F.col(col) if isinstance(col, str) else col
     return F.upper(F.trim(c))
+
+
+def key_of(name: str) -> str:
+    """The driver-side matching rule for tickers and dim names
+    (models.py:61-70). Python's ``strip`` also drops tabs and newlines,
+    which Spark's ``trim`` keeps."""
+    return name.strip().upper()
 
 
 def normalize_null_sentinels(col: Column | str) -> Column:

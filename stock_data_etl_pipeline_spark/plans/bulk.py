@@ -21,8 +21,9 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.normalize import key_of
 from ..operators.merge import merge_upsert
-from ..schemas import BULK_QUEUE_RUNS
+from ..schemas import BULK_QUEUE_RUNS, EXCHANGES
 from ..state_machine import IngestionState, is_terminal_col, new_run_row, runs_dataframe
 from .pipeline import StockLake
 
@@ -42,14 +43,12 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
 
     stocks = lake.read_stocks()
     if exchange_name is not None:
-        if not lake.exchanges.exists():
-            stocks = stocks.limit(0)
-        else:
-            wanted = (lake.exchanges.read()
-                      .filter(F.upper(F.trim(F.col("name")))
-                              == exchange_name.strip().upper())
-                      .select(F.col("id").alias("exchange_id")))
-            stocks = stocks.join(F.broadcast(wanted), "exchange_id", "left_semi")
+        # one collect of the cached snapshot; no match filters on a null id,
+        # which keeps no row
+        ids = {key_of(r["name"]): r["id"] for r in
+               lake._read_or_empty(lake.exchanges, EXCHANGES).collect()}
+        stocks = stocks.filter(
+            F.col("exchange_id") == F.lit(ids.get(key_of(exchange_name))))
 
     # O3: deterministic iteration order
     all_stocks = [(r["id"], r["ticker"]) for r in

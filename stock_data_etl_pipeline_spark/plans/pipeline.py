@@ -6,8 +6,9 @@ task -> S3 raw JSON -> Polars transform -> delta-rs MERGE -> metadata sync
 (queue_for_fetch.py, queue_for_delta.py, update_stock_metadata.py). The
 queue hops disappear: phases become DataFrame stages, the batch's run rows
 walk their states on the driver as each phase ends, and each table commits
-at most once per batch (stocks: new tickers, then the metadata sync), so
-the control-plane query surface works identically.
+at most once per batch (stocks: new tickers and synced metadata overlaid
+on driver rows, and no commit when nothing changed), so the control-plane
+query surface works identically.
 
 Storage layout under ``root``:
     bronze/<batch_id>/           raw documents (ticker, run_id, json_str)
@@ -31,6 +32,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import key_of
 from ..operators.merge import merge_upsert
 from ..schemas import (
     BRONZE,
@@ -54,11 +56,6 @@ from .stock_transform import transform_stock_json
 
 def _now() -> datetime:
     return datetime.now(tz=timezone.utc).replace(tzinfo=None)
-
-
-def _key(name: str) -> str:
-    """The one matching rule for tickers and dim names (models.py:61-70)."""
-    return name.strip().upper()
 
 
 class StockLake:
@@ -104,49 +101,52 @@ class StockLake:
     def read_stocks(self) -> DataFrame:
         return self._read_or_empty(self.stocks, STOCKS)
 
-    def _append(self, tbl: ManagedTable, current: DataFrame, rows: list,
-                schema) -> None:
-        """Commit ``current`` plus new-keyed ``rows`` as one file (a union
-        alone writes a file per input slice)."""
-        tbl.overwrite(current.unionByName(
-            self.spark.createDataFrame(rows, schema)).coalesce(1))
+    def _write_rows(self, tbl: ManagedTable, rows: list, schema) -> None:
+        """Commit driver-side ``rows`` (tuples or dicts) as the whole table,
+        in one file (a parallelized list writes a file per slice)."""
+        tbl.overwrite(self.spark.createDataFrame(rows, schema).coalesce(1))
+
+    def _stock_rows(self, tickers: list[str]) -> tuple[dict[str, dict], bool]:
+        """ticker -> row dict of every stock, after adding a fresh row for
+        each of ``tickers`` new under ``key_of`` (models.py:172-181), and
+        whether any was new. One collect of the cached snapshot; commits
+        nothing."""
+        rows = {r["ticker"]: r.asDict() for r in self.read_stocks().collect()}
+        new = sorted({key_of(t) for t in tickers} - rows.keys())
+        ts = _now()
+        for t in new:
+            rows[t] = {**dict.fromkeys(STOCKS.names), "id": str(uuid.uuid4()),
+                       "ticker": t, "created_at": ts, "updated_at": ts}
+        return rows, bool(new)
 
     def get_or_create_stocks(self, tickers: list[str]) -> dict[str, str]:
         """M1 for stocks: ticker -> id of every stock, after adding each of
-        ``tickers`` new under ``_key`` (models.py:172-181). One collect of
-        the cached snapshot; commits only when a ticker is new."""
-        current = self.read_stocks()
-        ids = {r["ticker"]: r["id"]
-               for r in current.select("ticker", "id").collect()}
-        new = sorted({_key(t) for t in tickers} - ids.keys())
+        ``tickers`` new. Commits only when a ticker is new; a batch commits
+        through ``_ingest_raw`` instead."""
+        rows, new = self._stock_rows(tickers)
         if new:
-            ts = _now()
-            fresh = [(str(uuid.uuid4()), t, None, None, None, None, None,
-                      None, None, None, None, ts, ts) for t in new]
-            self._append(self.stocks, current, fresh, STOCKS)
-            ids.update((t, sid) for sid, t, *_ in fresh)
-        return ids
+            self._write_rows(self.stocks, list(rows.values()), STOCKS)
+        return {t: r["id"] for t, r in rows.items()}
 
     def get_or_create_dim(self, tbl: ManagedTable, schema, names: list[str],
                           normalize: bool) -> dict[str, str]:
         """M1 for exchanges (normalize=True: stored UPPER+trimmed,
         models.py:61-70) and sectors (normalize=False: case-preserved,
-        models.py:83-92), both matched under ``_key``: ``_key(name)`` -> id
-        of every row, after adding each new non-blank name (first spelling
-        wins). One collect of the cached snapshot; commits only when a name
-        is new."""
-        current = self._read_or_empty(tbl, schema)
-        ids = {_key(r["name"]): r["id"]
-               for r in current.select("name", "id").collect()}
+        models.py:83-92), both matched under ``key_of``: ``key_of(name)``
+        -> id of every row, after adding each new non-blank name (first
+        spelling wins). One collect of the cached snapshot; commits only
+        when a name is new."""
+        current = self._read_or_empty(tbl, schema).collect()
+        ids = {key_of(r["name"]): r["id"] for r in current}
         new: dict[str, str] = {}
         for n in names:
-            if n is not None and n.strip() and _key(n) not in ids:
-                new.setdefault(_key(n), _key(n) if normalize else n.strip())
+            if n is not None and n.strip() and key_of(n) not in ids:
+                new.setdefault(key_of(n), key_of(n) if normalize else n.strip())
         if new:
             ts = _now()
             fresh = [(str(uuid.uuid4()), stored, ts, ts)
                      for stored in new.values()]
-            self._append(tbl, current, fresh, schema)
+            self._write_rows(tbl, current + fresh, schema)
             ids.update((k, row[0]) for k, row in zip(new, fresh))
         return ids
 
@@ -173,7 +173,7 @@ class StockLake:
         run walks the reference's task chain (§3.1): QUEUED_FOR_FETCH ->
         FETCHING -> FETCHED -> QUEUED_FOR_DELTA -> DELTA_RUNNING ->
         DELTA_FINISHED -> DONE, stamped on the driver as each phase ends;
-        the final run rows commit once, then the metadata sync.
+        stocks commit once (if anything changed), then the final run rows.
         """
         # M2 batch form: dedupe tickers within the batch (first payload
         # wins) and skip stocks that already have a non-terminal run —
@@ -181,7 +181,7 @@ class StockLake:
         # one-active-run-per-stock invariant for the batch path too.
         uniq: dict[str, str] = {}
         for t, payload in docs:
-            uniq.setdefault(t.strip().upper(), payload)
+            uniq.setdefault(key_of(t), payload)
         skipped = self._active_run_ids(list(uniq))
         todo = {t: p for t, p in uniq.items() if t not in skipped}
         raw_src = self.spark.createDataFrame(
@@ -199,16 +199,20 @@ class StockLake:
         source relation to the (tiny, broadcast) ticker->run_id map,
         written to parquet straight from executors. ``tickers`` must be
         normalized and deduplicated by the caller; a ``fetch_errors`` ticker
-        gets a run failed with its code. All runs commit in one overwrite."""
+        gets a run failed with its code. New tickers and the metadata sync
+        meet in one set of driver-side stock rows, which commit once after
+        the silver merge, and only if something changed; then all runs
+        commit in one overwrite, so every committed run's stock resolves."""
         if not tickers and not fetch_errors:
             return {"batch_id": None, "run_ids": [], "failed_run_ids": [],
                     "n_silver_rows": self.silver.num_rows()}
-        tick_to_stock = self.get_or_create_stocks(tickers + list(fetch_errors))
+        stocks, new_stocks = self._stock_rows(tickers + list(fetch_errors))
 
         # M2: one new run per ticker (the active-run guard ran in the
         # caller); a fetch error fails its run straight from the queue
-        rows = [new_run_row(tick_to_stock[t], t, requested_by=requested_by) for t in tickers]
-        failed_rows = [new_run_row(tick_to_stock[t], t, requested_by=requested_by)
+        rows = [new_run_row(stocks[t]["id"], t, requested_by=requested_by)
+                for t in tickers]
+        failed_rows = [new_run_row(stocks[t]["id"], t, requested_by=requested_by)
                        for t in fetch_errors]
         for r, code in zip(failed_rows, fetch_errors.values()):
             advance([r], IngestionState.FAILED, error_code=code,
@@ -248,6 +252,9 @@ class StockLake:
                         processed_data_uri=self.silver.path)
                 advance(ok, IngestionState.DONE)
 
+        # M4: metadata sync into the stocks rows, then their one commit
+        if self.sync_stock_metadata([r["ticker"] for r in ok], stocks) or new_stocks:
+            self._write_rows(self.stocks, list(stocks.values()), STOCKS)
         self.runs.overwrite(merge_upsert(
             self.read_runs(), runs_dataframe(self.spark, rows + failed_rows),
             ["id"]))
@@ -255,9 +262,6 @@ class StockLake:
             for r in bad + failed_rows:
                 self.on_run_failed(r["id"], r["ticker"], r["error_code"],
                                    r["error_message"])
-
-        # M4: metadata sync back into the stocks control table
-        self.sync_stock_metadata([r["ticker"] for r in ok])
         return {"batch_id": batch_id, "run_ids": [r["id"] for r in rows],
                 "failed_run_ids": [r["id"] for r in failed_rows],
                 "n_silver_rows": self.silver.num_rows()}
@@ -276,7 +280,7 @@ class StockLake:
         queue_for_fetch.py:408-474 — never through a coordinator), so
         driver memory is independent of batch payload volume."""
         from ..sources.fetch import fetch_tickers
-        norm = list(dict.fromkeys(t.strip().upper() for t in tickers))
+        norm = list(dict.fromkeys(key_of(t) for t in tickers))
         tick_df = self.spark.createDataFrame([(t,) for t in norm],
                                              "ticker string")
         # persisted: the status collect and the bronze landing both read
@@ -308,7 +312,7 @@ class StockLake:
         JSON (the reference's 502-corrupt-object path)."""
         import json as _json
 
-        t = ticker.strip().upper()
+        t = key_of(ticker)
         # one ticker: a top-1, not a per-ticker window
         latest = (self.read_runs()
                   .filter((F.col("ticker") == t)
@@ -331,17 +335,19 @@ class StockLake:
         return payload
 
     # -- metadata sync (M4) -------------------------------------------------
-    def sync_stock_metadata(self, tickers: list[str]) -> DataFrame:
-        """S7 pushdown read of ``tickers``' metadata rows + changed-fields-
-        only update of stocks, resolving exchange/sector names to ids
-        through the dim get-or-create maps (update_stock_metadata.py:
-        195-469)."""
+    def sync_stock_metadata(self, tickers: list[str],
+                            stocks: dict[str, dict]) -> bool:
+        """S7 pushdown read of ``tickers``' metadata rows, applied to the
+        ``stocks`` rows (ticker -> row dict) in place with the changed
+        fields only, exchange/sector names resolved to ids through the dim
+        get-or-create maps (update_stock_metadata.py:195-469). Returns
+        whether any row changed; the caller commits."""
         if not tickers or not self.silver.exists():
-            return self.read_stocks()
+            return False
         silver = self.silver.read()
         meta_cols = [c for c in STOCK_METADATA_FIELDS if c in silver.columns]
         if not meta_cols:
-            return self.read_stocks()
+            return False
         # one collect of batch-sized rows: both predicates and the
         # projection are pushed into the one scan (a subdir holds one
         # record_type, files are clustered by ticker)
@@ -362,36 +368,19 @@ class StockLake:
                                              [r[c] for r in meta.values()],
                                              normalize=c == "exchange")
                 for r in meta.values():  # a blank or null name maps to None
-                    r[f"{c}_id"] = ids.get(_key(r.pop(c) or ""))
-        cols = ["ticker", *(f"{c}_id" if c in ("exchange", "sector") else c
-                            for c in meta_cols)]
-        src = self.spark.createDataFrame(
-            list(meta.values()), ", ".join(f"{c} string" for c in cols))
+                    r[f"{c}_id"] = ids.get(key_of(r.pop(c) or ""))
 
         # Changed-fields-only overlay: a NULL metadata field never clobbers
         # an existing value (the reference drops null fields from the update
         # dict, update_stock_metadata.py:256-271), and updated_at moves only
         # when something actually changed (no spurious cache invalidation,
         # :292-469).
-        stocks = self.read_stocks()
-        t, s = stocks.alias("t"), src.alias("s")
-        overlay_cols = [c for c in src.columns if c != "ticker"]
-        changed = F.lit(False)
-        for c in overlay_cols:
-            new_val = F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}"))
-            changed = changed | ~new_val.eqNullSafe(F.col(f"t.{c}"))
-        out_cols = []
-        for c in stocks.columns:
-            if c in overlay_cols:
-                out_cols.append(F.coalesce(F.col(f"s.{c}"),
-                                           F.col(f"t.{c}")).alias(c))
-            elif c == "updated_at":
-                out_cols.append(F.when(changed, F.lit(_now()))
-                                .otherwise(F.col("t.updated_at"))
-                                .alias("updated_at"))
-            else:
-                out_cols.append(F.col(f"t.{c}").alias(c))
-        merged = t.join(s, F.col("t.ticker") == F.col("s.ticker"), "left") \
-                  .select(*out_cols)
-        self.stocks.overwrite(merged)
-        return merged
+        ts, changed = _now(), False
+        for t, m in meta.items():
+            row = stocks[t]
+            new = {c: v for c, v in m.items()
+                   if c != "ticker" and v is not None and v != row[c]}
+            if new:
+                row.update(new, updated_at=ts)
+                changed = True
+        return changed

@@ -21,6 +21,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.normalize import key_of
 from ..operators.filters import apply_filters
 from ..operators.pagination import DEFAULT_PAGE_SIZE, keyset_page
 from ..state_machine import IngestionState, is_terminal_col
@@ -71,7 +72,7 @@ def list_runs(lake: StockLake,
 
 def stock_detail(lake: StockLake, ticker: str) -> DataFrame:
     """Stock row with exchange/sector names joined in (J2 broadcast)."""
-    t = ticker.strip().upper()
+    t = key_of(ticker)
     stocks = lake.read_stocks().filter(F.col("ticker") == t)
     if lake.exchanges.exists():
         e = lake.exchanges.read().select(
@@ -95,7 +96,7 @@ def latest_run_for_stock(lake: StockLake, ticker: str,
     by the larger id. With the rows filtered to one ticker this is a
     single-key top-1: Spark plans it as one TakeOrderedAndProject, with no
     shuffle (a per-group window would partition by ticker first)."""
-    t = ticker.strip().upper()
+    t = key_of(ticker)
     runs = lake.read_runs().filter(F.col("ticker") == t)
     if only_done:
         runs = runs.filter(F.col("state") == IngestionState.DONE)

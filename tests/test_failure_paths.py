@@ -47,6 +47,23 @@ def test_all_invalid_batch_creates_no_silver(spark, tmp_path):
     assert states == [S.FAILED, S.FAILED]
 
 
+def test_failed_merge_leaves_stocks_unchanged(spark, tmp_path, monkeypatch):
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    lake.ingest_batch([("GOOD", json.dumps(GOOD))])
+    v = lake.stocks.latest_version()
+
+    def broken_merge(*a, **k):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(lake.silver, "merge", broken_merge)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        lake.ingest_batch([("GOOD", json.dumps(GOOD)),
+                           ("NEW", json.dumps(GOOD))])
+    # stocks commit after the merge, with the runs that point at them
+    assert lake.stocks.latest_version() == v
+    assert {r["ticker"] for r in lake.read_stocks().collect()} == {"GOOD"}
+
+
 def test_fetch_and_ingest_mixed(spark, tmp_path):
     notified = []
     lake = StockLake(spark, str(tmp_path / "lake"),

@@ -124,6 +124,23 @@ def test_queue_all_stocks_counters(spark, tmp_path):
     assert bulk["completed_at"] is not None
 
 
+def test_queue_all_stocks_one_exchange(spark, tmp_path):
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    nyse = json.loads(json.dumps(DOC))
+    nasdaq = json.loads(json.dumps(DOC))
+    nasdaq["data"]["metadata"]["exchange"] = "Nasdaq"
+    lake.ingest_batch([("AAA", json.dumps(nyse)), ("BBB", json.dumps(nasdaq)),
+                       ("CCC", json.dumps(nasdaq))])
+
+    res = queue_all_stocks(lake, exchange_name=" nasdaq\t")
+    assert (res["total_stocks"], res["queued_count"]) == (2, 2)
+    queued = lake.runs.read().filter(
+        F.col("bulk_queue_run_id") == res["bulk_queue_run_id"])
+    assert sorted(r["ticker"] for r in queued.collect()) == ["BBB", "CCC"]
+
+    assert queue_all_stocks(lake, exchange_name="LSE")["total_stocks"] == 0
+
+
 # -- C1-C3 gold views -------------------------------------------------------
 
 def test_gold_views_cache_and_invalidation(spark):

@@ -232,12 +232,12 @@ def test_failure_callbacks_after_commit(mixed):
 
 def test_commits_per_table(mixed):
     """One batch commits ``runs`` once, ``silver`` at most once, ``stocks``
-    at most twice (get-or-create, metadata sync), and no dimension table
-    when it brings no new exchange or sector name."""
+    once (new tickers and the metadata sync together), and no dimension
+    table when it brings no new exchange or sector name."""
     before, after = mixed["before"]["manifests"], mixed["after"]["manifests"]
     delta = {t: after[t] - before[t] for t in TABLES}
     assert delta["runs"] == 1
     assert delta["silver"] <= 1
-    assert delta["stocks"] <= 2
+    assert delta["stocks"] == 1
     assert delta["exchanges"] == 0 and delta["sectors"] == 0
     assert delta["bulk_runs"] == 0

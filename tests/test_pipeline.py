@@ -67,6 +67,7 @@ def test_second_batch_updates_and_extends(spark, tmp_path):
         "eps": [1.0, 2.0],             # brand-new metric column
     }
     doc2["data"]["metadata"]["name"] = "Apple Inc."
+    doc2["data"]["metadata"]["country"] = "N/A"      # null sentinel
     lake.ingest_batch([("AAPL", json.dumps(doc2))])
 
     silver = lake.silver.read()
@@ -79,10 +80,17 @@ def test_second_batch_updates_and_extends(spark, tmp_path):
 
     stock = lake.stocks.read().collect()[0]
     assert stock["name"] == "Apple Inc."              # changed field synced
+    assert stock["country"] == "US"                   # a null never overwrites
 
     # two DONE runs; latest-per-stock window sees the newer one
     runs = lake.runs.read()
     assert runs.filter(F.col("state") == S.DONE).count() == 2
+
+    # the same payload again changes no stock field: no stocks commit
+    v = lake.stocks.latest_version()
+    lake.ingest_batch([("AAPL", json.dumps(doc2))])
+    assert lake.stocks.latest_version() == v
+    assert lake.stocks.read().collect()[0]["updated_at"] == stock["updated_at"]
 
 
 def test_dim_get_or_create_case_rules(spark, tmp_path):
