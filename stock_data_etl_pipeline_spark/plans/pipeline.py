@@ -26,6 +26,7 @@ batch IS the serialization unit, and Structured Streaming's foreachBatch
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 from datetime import datetime, timezone
 
@@ -88,6 +89,10 @@ class StockLake:
                                  cache=True)
         self.bulk_runs = ManagedTable(spark, os.path.join(root, "control/bulk_queue_runs"),
                                       cache=True)
+        # (snapshot keys of stocks, exchanges and sectors, their cached
+        # join); the lock makes check-and-swap atomic, as in ManagedTable
+        self._details: tuple[tuple, DataFrame] | None = None
+        self._details_lock = threading.Lock()
 
     # -- control-plane helpers ---------------------------------------------
     def _read_or_empty(self, tbl: ManagedTable, schema) -> DataFrame:
@@ -101,10 +106,37 @@ class StockLake:
     def read_stocks(self) -> DataFrame:
         return self._read_or_empty(self.stocks, STOCKS)
 
+    def read_stock_details(self) -> DataFrame:
+        """Every stock with its exchange and sector names joined in
+        (serializers.py:85-101). One cached relation per snapshot of the
+        three tables: rebuilt when any of their snapshot keys moves, and
+        the one it replaces unpersisted, so a detail read is one filter
+        job over it, with no dim broadcast per request."""
+        key = tuple(t.snapshot_key()
+                    for t in (self.stocks, self.exchanges, self.sectors))
+        with self._details_lock:
+            if self._details is not None and self._details[0] == key:
+                return self._details[1]
+            df = self.read_stocks()
+            for dim, tbl in (("exchange", self.exchanges),
+                             ("sector", self.sectors)):
+                if tbl.exists():
+                    names = tbl.read().select(F.col("id").alias(f"{dim}_id"),
+                                              F.col("name").alias(f"{dim}_name"))
+                    df = df.join(F.broadcast(names), f"{dim}_id", "left")
+                else:
+                    df = df.withColumn(f"{dim}_name",
+                                       F.lit(None).cast("string"))
+            df.cache()
+            if self._details is not None:
+                self._details[1].unpersist()
+            self._details = (key, df)
+            return df
+
     def _write_rows(self, tbl: ManagedTable, rows: list, schema) -> None:
-        """Commit driver-side ``rows`` (tuples or dicts) as the whole table,
-        in one file (a parallelized list writes a file per slice)."""
-        tbl.overwrite(self.spark.createDataFrame(rows, schema).coalesce(1))
+        """Commit driver-side ``rows`` (tuples or dicts) as the whole table
+        (one file: the write rebalances, see ManagedTable)."""
+        tbl.overwrite(self.spark.createDataFrame(rows, schema))
 
     def _stock_rows(self, tickers: list[str]) -> tuple[dict[str, dict], bool]:
         """ticker -> row dict of every stock, after adding a fresh row for
@@ -226,8 +258,9 @@ class StockLake:
             bronze_path = os.path.join(self.root, "bronze", batch_id)
             rid_map = self.spark.createDataFrame(
                 [(r["ticker"], r["id"]) for r in rows], "ticker string, run_id string")
+            # rebalanced like a table write: a small batch lands in one file
             raw = (raw_src.join(F.broadcast(rid_map), "ticker")
-                   .select("ticker", "run_id", "json_str"))
+                   .select("ticker", "run_id", "json_str").hint("rebalance"))
             raw.write.mode("overwrite").parquet(bronze_path)
             advance(rows, IngestionState.FETCHED, raw_data_uri=bronze_path)
             advance(rows, IngestionState.QUEUED_FOR_DELTA)
@@ -284,21 +317,24 @@ class StockLake:
         tick_df = self.spark.createDataFrame([(t,) for t in norm],
                                              "ticker string")
         # persisted: the status collect and the bronze landing both read
-        # it, and the fetch must not re-run (side-effecting transport)
+        # it, and the fetch must not re-run (side-effecting transport);
+        # released however the batch ends
         fetched = fetch_tickers(tick_df, transport).persist()
-        status = {r["ticker"]: r["error_code"] for r in
-                  fetched.select("ticker", "error_code").collect()}
-        ok = [t for t in norm if status.get(t) is None]
-        failed = {t: status[t] for t in norm if status.get(t) is not None}
+        try:
+            status = {r["ticker"]: r["error_code"] for r in
+                      fetched.select("ticker", "error_code").collect()}
+            ok = [t for t in norm if status.get(t) is None]
+            failed = {t: status[t] for t in norm if status.get(t) is not None}
 
-        skipped = self._active_run_ids(ok)
-        todo = [t for t in ok if t not in skipped]
-        # inner join to the run-id map inside _ingest_raw drops skipped
-        # tickers; no payload filter needed driver-side
-        ok_src = (fetched.filter(F.col("error_code").isNull())
-                  .select("ticker", "json_str"))
-        out = self._ingest_raw(ok_src, todo, failed, requested_by)
-        fetched.unpersist()
+            skipped = self._active_run_ids(ok)
+            todo = [t for t in ok if t not in skipped]
+            # inner join to the run-id map inside _ingest_raw drops skipped
+            # tickers; no payload filter needed driver-side
+            ok_src = (fetched.filter(F.col("error_code").isNull())
+                      .select("ticker", "json_str"))
+            out = self._ingest_raw(ok_src, todo, failed, requested_by)
+        finally:
+            fetched.unpersist()
         out["skipped"] = skipped
         out["failed"] = failed
         return out

@@ -9,8 +9,10 @@ Reference shape (/root/reference/services/api/):
     GET /api/bulk-queue-runs/<id>/stats -> DB-side group-by-state,
          zero-filled, 300 s TTL cache (views/bulk_queue_runs.py:63-158)
 
-Everything compiles to one Catalyst plan per request: broadcast the dim,
-push the predicates, keyset-limit the page.
+Each request compiles to one Catalyst plan over the cached control-table
+snapshots: push the predicates, keyset-limit the page. Stock detail
+filters a stocks-exchanges-sectors join that the lake builds and caches
+once per snapshot of the three tables, not per request.
 """
 
 from __future__ import annotations
@@ -50,11 +52,11 @@ def list_runs(lake: StockLake,
               filters: Mapping[str, Any] | None = None,
               page_size: int = DEFAULT_PAGE_SIZE,
               cursor: Sequence[Any] | None = None) -> DataFrame:
-    """The runs list endpoint: broadcast-joined ticker, ANDed filters,
-    keyset page ordered (-created_at, -id). Filter keys use the
-    django-style ``field__lookup`` syntax plus the virtual booleans
-    (is_terminal / is_in_progress); ``ticker__*`` lookups hit the joined
-    stock ticker (J3 through-FK filtering)."""
+    """The runs list endpoint: ANDed filters, keyset page ordered
+    (-created_at, -id). Filter keys use the django-style ``field__lookup``
+    syntax plus the virtual booleans (is_terminal / is_in_progress). A run
+    row carries its stock's ``ticker``, so ``ticker__*`` lookups (J3
+    through-FK filtering) filter the runs table itself, with no join."""
     runs = lake.read_runs().withColumn(
         "is_terminal_flag", is_terminal_col(F.col("state")))
     plain: dict[str, Any] = {}
@@ -71,23 +73,9 @@ def list_runs(lake: StockLake,
 
 
 def stock_detail(lake: StockLake, ticker: str) -> DataFrame:
-    """Stock row with exchange/sector names joined in (J2 broadcast)."""
-    t = key_of(ticker)
-    stocks = lake.read_stocks().filter(F.col("ticker") == t)
-    if lake.exchanges.exists():
-        e = lake.exchanges.read().select(
-            F.col("id").alias("exchange_id"),
-            F.col("name").alias("exchange_name"))
-        stocks = stocks.join(F.broadcast(e), "exchange_id", "left")
-    else:
-        stocks = stocks.withColumn("exchange_name", F.lit(None).cast("string"))
-    if lake.sectors.exists():
-        s = lake.sectors.read().select(
-            F.col("id").alias("sector_id"), F.col("name").alias("sector_name"))
-        stocks = stocks.join(F.broadcast(s), "sector_id", "left")
-    else:
-        stocks = stocks.withColumn("sector_name", F.lit(None).cast("string"))
-    return stocks
+    """Stock row with exchange/sector names joined in (J2): a filter of
+    the lake's cached per-snapshot join, one job."""
+    return lake.read_stock_details().filter(F.col("ticker") == key_of(ticker))
 
 
 def latest_run_for_stock(lake: StockLake, ticker: str,

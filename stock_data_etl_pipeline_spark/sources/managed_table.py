@@ -20,11 +20,17 @@ Layout — manifest-per-version, like a miniature Delta transaction log:
                                         maps, plus the table schema
     <path>/data/<uuid>/_pk=<key>/       immutable per-partition parquet dirs
 
-One write job per commit: ``partitionBy`` on a hidden JSON column of the
+One write per commit: ``partitionBy`` on a hidden JSON column of the
 partition values writes one fresh ``data/<uuid>/``, and the manifest names
 each ``_pk=<key>`` subdir as a partition's data dir, as Delta's log names
 the files of one job (an unpartitioned table is the one partition ``{}``).
 The partition columns stay in the files: each subdir is self-contained.
+The write first rebalances on that column, as Delta's optimized write
+does: AQE puts each partition's rows in one task and splits a partition
+only past ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a subdir
+holds one file, fully sorted by ``cluster_by``, however many slices the
+source had. The rebalance is one shuffle stage (and job) before the write
+job; a read then opens one file per partition, not one per source slice.
 
 Every read is one parquet scan over the version's data dirs under the
 manifest's schema, so opening a table infers nothing and starts no Spark
@@ -118,6 +124,11 @@ def _schema(manifest: dict) -> T.StructType:
     return T.StructType.fromJson(manifest["schema"])
 
 
+def _dirs(manifest: dict) -> tuple[str, ...]:
+    """A version's sorted data dirs: its snapshot key (module docstring)."""
+    return tuple(sorted(manifest["partitions"].values()))
+
+
 def _retypes(old: T.StructType, new: T.StructType) -> bool:
     """True when ``new`` holds a column of ``old`` with another type."""
     types = {f.name: f.dataType.simpleString() for f in new.fields}
@@ -174,6 +185,12 @@ class ManagedTable:
         with open(self._manifest_path(v)) as fh:
             return json.load(fh)
 
+    def snapshot_key(self) -> tuple[str, ...] | None:
+        """Key of the latest snapshot, the one ``read()`` serves: its
+        sorted data dirs, or None before the first commit. Equal keys mean
+        equal contents. Reads _LATEST and the manifest; no Spark job."""
+        return _dirs(self.commit_meta()) if self.exists() else None
+
     def num_rows(self, version: int | None = None) -> int:
         """Row count of a version (0 before the first commit), summed from
         its manifest — no data or footer read, no Spark job."""
@@ -206,8 +223,9 @@ class ManagedTable:
         return self.latest_version() + 1 if self.exists() else 0
 
     def _write_partition_dirs(self, df: DataFrame) -> dict:
-        """Write df in one job, a ``_pk=<key>`` subdir per partition (see
-        the module docstring), clustered if ``cluster_by`` is set. Returns
+        """Write df in one rebalance and one write job, a ``_pk=<key>``
+        subdir of one file per partition (see the module docstring),
+        clustered if ``cluster_by`` is set. Returns
         the manifest body (``_BODY``): subdirs and footer row counts keyed
         by ``_part_key``, df's schema. A zero-row df writes no subdir."""
         cols = [c for c in self.cluster_by if c in df.columns]
@@ -215,6 +233,7 @@ class ManagedTable:
         # _PK leads the sort: the writer needs rows grouped by it, so it
         # adds no sort of its own that would undo the clustering
         (df.withColumn(_PK, _pk_col(self.partition_by))
+           .hint("rebalance", _PK)
            .sortWithinPartitions(_PK, *cols)
            .write.partitionBy(_PK).parquet(os.path.join(self.path, d)))
         body: dict = {"partitions": {}, "rows": {},
@@ -230,18 +249,17 @@ class ManagedTable:
         m = self.commit_meta(version)
         return {k: m[k] for k in _BODY}
 
-    def optimize(self, target_partitions: int = 1) -> None:
-        """Compaction (the OPTIMIZE analog): rewrite the CURRENT version in
-        one job, at most ``target_partitions`` files per partition, and
-        commit it. Streaming micro-batch merges produce many small files;
-        this folds them."""
+    def optimize(self) -> None:
+        """Compaction (the OPTIMIZE analog): rewrite the CURRENT version,
+        one file per partition, and commit it. Streaming micro-batch merges
+        produce many small files; this folds them."""
         if not self.exists():
             return
         version = self.latest_version()
         body = self._read_body(version)
         table = self._scan(sorted(body["partitions"].values()), _schema(body))
-        self._commit(version + 1, self._write_partition_dirs(
-            table.coalesce(target_partitions)), {"op": "optimize"})
+        self._commit(version + 1, self._write_partition_dirs(table),
+                     {"op": "optimize"})
 
     def create(self, df: DataFrame, mode: str = "error") -> None:
         """First write. mode='error' mirrors delta-rs mode=error (S5)."""
@@ -325,7 +343,7 @@ class ManagedTable:
         read that misses builds a fresh scan and leaves the slot alone."""
         v = self.latest_version() if version is None else version
         m = self.commit_meta(v)
-        dirs = tuple(sorted(m["partitions"].values()))
+        dirs = _dirs(m)
         if not dirs:  # a zero-row commit: nothing to scan or keep
             return self.spark.createDataFrame([], _schema(m))
         with self._lock:

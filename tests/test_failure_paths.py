@@ -64,6 +64,27 @@ def test_failed_merge_leaves_stocks_unchanged(spark, tmp_path, monkeypatch):
     assert {r["ticker"] for r in lake.read_stocks().collect()} == {"GOOD"}
 
 
+def test_failed_batch_unpersists_fetch_cache(spark, tmp_path, monkeypatch):
+    from stock_data_etl_pipeline_spark.sources import fetch
+    real_fetch, frames = fetch.fetch_tickers, []
+
+    def recording_fetch(*a, **k):
+        frames.append(real_fetch(*a, **k))
+        return frames[-1]
+
+    monkeypatch.setattr(fetch, "fetch_tickers", recording_fetch)
+    lake = StockLake(spark, str(tmp_path / "lake"))
+
+    def broken_merge(*a, **k):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(lake.silver, "merge", broken_merge)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        lake.fetch_and_ingest(["GOOD"], lambda t: (200, json.dumps(GOOD)))
+    # the batch persisted its fetched payloads and released them on failure
+    assert len(frames) == 1 and not frames[0].is_cached
+
+
 def test_fetch_and_ingest_mixed(spark, tmp_path):
     notified = []
     lake = StockLake(spark, str(tmp_path / "lake"),

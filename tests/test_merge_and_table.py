@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -442,12 +443,23 @@ def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by,
                            for rt in ("financials", "metadata", "ttm")],
                    SCHEMA))
     assert len(t._read_manifest(0)) == (3 if partition_by else 1)
-    # the create wrote every partition in one job
+    # the create wrote every partition in one rebalance job and one write
+    # job, however many partitions it has
     t2 = ManagedTable(spark, str(tmp_path / "t2"), partition_by=partition_by,
                       cluster_by=["period_end_date"])
     src = df_of(spark, [("A", rt, "2024-03", 1.0)
                         for rt in ("financials", "metadata", "ttm")], SCHEMA)
-    assert jobs_during(lambda: t2.create(src)) == 1
+    assert jobs_during(lambda: t2.create(src)) == 2
+    # a multi-slice source still writes one file per partition subdir
+    t3 = ManagedTable(spark, str(tmp_path / "t3"), partition_by=partition_by,
+                      cluster_by=["period_end_date"])
+    t3.create(df_of(spark, [(f"T{i}", rt, "2024-03", 1.0) for i in range(4)
+                            for rt in ("financials", "metadata", "ttm")],
+                    SCHEMA).repartition(4))
+    for d in t3._read_manifest(0).values():
+        files = [f for f in os.listdir(os.path.join(t3.path, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
     assert jobs_during(lambda: (
         t.read(), t.read_where("period_end_date", "2024-01", "2024-12"))) == 0
     assert t.read_where("period_end_date", "2024-01", "2024-12").count() == 3

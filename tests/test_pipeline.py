@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
+from stock_data_etl_pipeline_spark.plans.queries import stock_detail
 from stock_data_etl_pipeline_spark.schemas import EXCHANGES
 from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
 
@@ -102,9 +103,17 @@ def test_dim_get_or_create_case_rules(spark, tmp_path):
     doc_c = json.loads(json.dumps(DOC))
     doc_c["data"]["metadata"]["sector"] = "tech\n"     # strip() drops \n
     doc_c["data"]["metadata"]["exchange"] = "nasdaq\t"  # and \t
+    def names(ticker):
+        row = stock_detail(lake, ticker).collect()[0]
+        return row["exchange_name"], row["sector_name"]
+
+    # stock detail's cached join follows every commit of the three tables
     lake.ingest_batch([("AAPL", json.dumps(doc_a))])
+    assert names("AAPL") == ("NASDAQ", "Tech")
     lake.ingest_batch([("MSFT", json.dumps(doc_b))])
+    assert names("MSFT") == ("NASDAQ", "Tech")
     lake.ingest_batch([("IBM", json.dumps(doc_c))])
+    assert names("IBM") == names("AAPL") == ("NASDAQ", "Tech")
     # matched case-insensitively -> still one row each
     assert lake.sectors.read().count() == 1
     assert lake.exchanges.read().count() == 1
@@ -124,6 +133,11 @@ def test_dim_get_or_create_case_rules(spark, tmp_path):
                                  normalize=True)
     assert lake.exchanges.latest_version() == v
     assert ids == {"NASDAQ": stocks["AAPL"]["exchange_id"]}
+
+    # a commit to a dim alone (stocks unchanged) rebuilds the join too
+    lake.sectors.overwrite(lake.sectors.read().withColumn(
+        "name", F.lit("Technology")))
+    assert names("AAPL") == ("NASDAQ", "Technology")
 
 
 def test_batch_dedupes_tickers_first_payload_wins(spark, tmp_path):

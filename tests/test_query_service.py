@@ -74,6 +74,13 @@ def test_stock_detail_joins_dims(lake):
     assert row["sector_name"] == "Tech"
 
 
+def test_stock_detail_is_one_job(lake, jobs_during):
+    # the dims are joined once per snapshot: a warm detail read only
+    # filters the cached join
+    stock_detail(lake, "MSFT").collect()
+    assert jobs_during(lambda: stock_detail(lake, "AAPL").collect()) == 1
+
+
 def test_latest_run_for_stock(lake):
     newest = latest_run_for_stock(lake, "AAPL").collect()[0]
     assert newest["state"] == S.FAILED  # the most recent AAPL run

@@ -21,7 +21,7 @@ def test_optimize_compacts_files(spark, tmp_table_dir):
         t.merge(spark.createDataFrame(
             [(f"T{i}", "financials", f"p{i}", float(i))], SCHEMA), keys)
     before = t.read().collect()
-    t.optimize(target_partitions=1)
+    t.optimize()
     after = t.read().collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
     # compacted: exactly one parquet file in the financials dir
