@@ -6,11 +6,12 @@ QUEUED_FOR_FETCH runs linked to a BulkQueueRun, maintain
 total/queued/skipped/error counters with atomic DB increments (A3) and
 backfill the bulk FK with bulk_update batches of 100 (M5).
 
-Spark restatement: counters are *derived by aggregation* over the runs
-relation instead of mutable increments (idiomatic recompute — the counts
-can always be reproduced from the data), and the whole batch lands in ONE
-merge instead of row-wise saves — batching is a non-issue when writes are
-set-oriented.
+Spark restatement: the counters are counted on the driver, where the new
+run rows are built, instead of mutable increments: every queued row lands
+in ONE append of the runs table, so ``queued_count`` is exactly the number
+of rows appended, and the bulk row lands in one append of its own. Both
+commit at the version they read + 1, so a concurrent writer's runs make
+this queue raise instead of vanishing.
 """
 
 from __future__ import annotations
@@ -22,9 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
-from ..operators.merge import merge_upsert
-from ..schemas import BULK_QUEUE_RUNS, EXCHANGES
-from ..state_machine import IngestionState, is_terminal_col, new_run_row, runs_dataframe
+from ..state_machine import IngestionState, is_terminal_col, new_run_row
 from .pipeline import StockLake
 
 
@@ -36,7 +35,7 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
                      exchange_name: str | None = None) -> dict:
     """Queue every stock (optionally one exchange's) for fetch under a new
     BulkQueueRun. Returns the counter dict; the runs + bulk tables are
-    updated in one merge each.
+    appended to once each.
     """
     started = _now()
     bulk_id = str(uuid.uuid4())
@@ -45,8 +44,7 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
     if exchange_name is not None:
         # one collect of the cached snapshot; no match filters on a null id,
         # which keeps no row
-        ids = {key_of(r["name"]): r["id"] for r in
-               lake._read_or_empty(lake.exchanges, EXCHANGES).collect()}
+        ids = {key_of(r["name"]): r["id"] for r in lake.exchanges.read().collect()}
         stocks = stocks.filter(
             F.col("exchange_id") == F.lit(ids.get(key_of(exchange_name))))
 
@@ -55,10 +53,9 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
                   stocks.select("id", "ticker").orderBy("ticker").collect()]
     total = len(all_stocks)
 
-    runs = lake.read_runs()
     active_stock_ids = {
         r["stock_id"] for r in
-        runs.filter(~is_terminal_col(F.col("state")))
+        lake.read_runs().filter(~is_terminal_col(F.col("state")))
         .select("stock_id").distinct().collect()}
 
     to_queue = [(sid, t) for sid, t in all_stocks if sid not in active_stock_ids]
@@ -72,27 +69,13 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
                                     requested_by=requested_by, now=started))
         except Exception:  # noqa: BLE001 — per-stock isolation (reference :258-291)
             errors += 1
-    queued = 0
     if rows:
-        from pyspark.sql import Observation
-
-        # M5: the whole backfill is ONE set-oriented merge, not N saves.
-        # A3: the queued counter is OBSERVED on the write itself
-        # (df.observe rides the overwrite action) — derived by
-        # aggregation, but with no second scan of the runs relation
-        obs = Observation(f"bulk_{bulk_id[:8]}")
-        runs = (merge_upsert(runs, runs_dataframe(lake.spark, rows), ["id"])
-                .observe(obs, F.sum(
-                    F.when(F.col("bulk_queue_run_id") == bulk_id, 1)
-                    .otherwise(0)).alias("queued")))
-        lake.runs.overwrite(runs)
-        queued = int(obs.get["queued"] or 0)
-    completed = _now()
-    bulk_df = lake.spark.createDataFrame(
+        # M5: the whole backfill is ONE append, not N saves
+        lake.runs.append(lake.spark.createDataFrame(rows, lake.runs.schema))
+    queued = len(rows)
+    lake.bulk_runs.append(lake.spark.createDataFrame(
         [(bulk_id, requested_by, total, queued, skipped, errors,
-          started, started, completed)], BULK_QUEUE_RUNS)
-    current = lake._read_or_empty(lake.bulk_runs, BULK_QUEUE_RUNS)
-    lake.bulk_runs.overwrite(merge_upsert(current, bulk_df, ["id"]))
+          started, started, _now())], lake.bulk_runs.schema))
     return {"bulk_queue_run_id": bulk_id, "total_stocks": total,
             "queued_count": queued, "skipped_count": skipped,
             "error_count": errors}
@@ -103,5 +86,6 @@ def bulk_run_stats(lake: StockLake, bulk_id: str) -> DataFrame:
     states (+ the caller adds TTL caching via plans/gold.py — C3)."""
     from ..operators.aggregates import group_count_zerofill
     runs = lake.read_runs().filter(F.col("bulk_queue_run_id") == bulk_id)
+    # 8 rows: one partition, so a cached view serves them in one task
     return group_count_zerofill(runs, "state", IngestionState.ALL,
-                                count_col="count")
+                                count_col="count").coalesce(1)

@@ -17,7 +17,8 @@ Storage layout under ``root``:
     control/{stocks,exchanges,sectors,ingestion_runs,bulk_queue_runs}/
 
 Scale: per-batch work is one narrow transform + one partition-pruned merge;
-control tables are tiny relative to silver and merge on key-disjoint rows.
+control tables are tiny relative to silver: new runs and dim rows append,
+and only ``stocks`` is rewritten, because the metadata sync edits rows.
 The reference serializes silver writes (delta worker concurrency=1); here a
 batch IS the serialization unit, and Structured Streaming's foreachBatch
 (streaming/ingest.py) gives the same guarantee for continuous ingest.
@@ -34,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
-from ..operators.merge import merge_upsert
 from ..schemas import (
     BRONZE,
+    BULK_QUEUE_RUNS,
     EXCHANGES,
     INGESTION_RUNS,
     SECTORS,
@@ -45,13 +46,7 @@ from ..schemas import (
     STOCKS,
 )
 from ..sources.managed_table import ManagedTable
-from ..state_machine import (
-    IngestionState,
-    advance,
-    is_terminal_col,
-    new_run_row,
-    runs_dataframe,
-)
+from ..state_machine import IngestionState, advance, is_terminal_col, new_run_row
 from .stock_transform import transform_stock_json
 
 
@@ -78,33 +73,27 @@ class StockLake:
                                    partition_by=["record_type"],
                                    cluster_by=["ticker", "period_end_date"])
         # the control tables are small and every API request reads them
-        # whole: each keeps its latest snapshot cached
-        self.stocks = ManagedTable(spark, os.path.join(root, "control/stocks"),
-                                   cache=True)
-        self.exchanges = ManagedTable(spark, os.path.join(root, "control/exchanges"),
-                                      cache=True)
-        self.sectors = ManagedTable(spark, os.path.join(root, "control/sectors"),
-                                    cache=True)
-        self.runs = ManagedTable(spark, os.path.join(root, "control/ingestion_runs"),
-                                 cache=True)
-        self.bulk_runs = ManagedTable(spark, os.path.join(root, "control/bulk_queue_runs"),
-                                      cache=True)
+        # whole: each keeps its latest snapshot cached, and reads empty
+        # under its schema before its first commit
+        def control(name, schema):
+            return ManagedTable(spark, os.path.join(root, "control", name),
+                                cache=True, schema=schema)
+        self.stocks = control("stocks", STOCKS)
+        self.exchanges = control("exchanges", EXCHANGES)
+        self.sectors = control("sectors", SECTORS)
+        self.runs = control("ingestion_runs", INGESTION_RUNS)
+        self.bulk_runs = control("bulk_queue_runs", BULK_QUEUE_RUNS)
         # (snapshot keys of stocks, exchanges and sectors, their cached
         # join); the lock makes check-and-swap atomic, as in ManagedTable
         self._details: tuple[tuple, DataFrame] | None = None
         self._details_lock = threading.Lock()
 
     # -- control-plane helpers ---------------------------------------------
-    def _read_or_empty(self, tbl: ManagedTable, schema) -> DataFrame:
-        if tbl.exists():
-            return tbl.read()
-        return self.spark.createDataFrame([], schema)
-
     def read_runs(self) -> DataFrame:
-        return self._read_or_empty(self.runs, INGESTION_RUNS)
+        return self.runs.read()
 
     def read_stocks(self) -> DataFrame:
-        return self._read_or_empty(self.stocks, STOCKS)
+        return self.stocks.read()
 
     def read_stock_details(self) -> DataFrame:
         """Every stock with its exchange and sector names joined in
@@ -120,23 +109,19 @@ class StockLake:
             df = self.read_stocks()
             for dim, tbl in (("exchange", self.exchanges),
                              ("sector", self.sectors)):
-                if tbl.exists():
-                    names = tbl.read().select(F.col("id").alias(f"{dim}_id"),
-                                              F.col("name").alias(f"{dim}_name"))
-                    df = df.join(F.broadcast(names), f"{dim}_id", "left")
-                else:
-                    df = df.withColumn(f"{dim}_name",
-                                       F.lit(None).cast("string"))
+                names = tbl.read().select(F.col("id").alias(f"{dim}_id"),
+                                          F.col("name").alias(f"{dim}_name"))
+                df = df.join(F.broadcast(names), f"{dim}_id", "left")
             df.cache()
             if self._details is not None:
                 self._details[1].unpersist()
             self._details = (key, df)
             return df
 
-    def _write_rows(self, tbl: ManagedTable, rows: list, schema) -> None:
-        """Commit driver-side ``rows`` (tuples or dicts) as the whole table
-        (one file: the write rebalances, see ManagedTable)."""
-        tbl.overwrite(self.spark.createDataFrame(rows, schema))
+    def _write_rows(self, tbl: ManagedTable, rows: list[dict]) -> None:
+        """Commit driver-side ``rows`` as the whole table (one file: the
+        write rebalances, see ManagedTable)."""
+        tbl.overwrite(self.spark.createDataFrame(rows, tbl.schema))
 
     def _stock_rows(self, tickers: list[str]) -> tuple[dict[str, dict], bool]:
         """ticker -> row dict of every stock, after adding a fresh row for
@@ -157,19 +142,18 @@ class StockLake:
         through ``_ingest_raw`` instead."""
         rows, new = self._stock_rows(tickers)
         if new:
-            self._write_rows(self.stocks, list(rows.values()), STOCKS)
+            self._write_rows(self.stocks, list(rows.values()))
         return {t: r["id"] for t, r in rows.items()}
 
-    def get_or_create_dim(self, tbl: ManagedTable, schema, names: list[str],
+    def get_or_create_dim(self, tbl: ManagedTable, names: list[str],
                           normalize: bool) -> dict[str, str]:
         """M1 for exchanges (normalize=True: stored UPPER+trimmed,
         models.py:61-70) and sectors (normalize=False: case-preserved,
         models.py:83-92), both matched under ``key_of``: ``key_of(name)``
         -> id of every row, after adding each new non-blank name (first
-        spelling wins). One collect of the cached snapshot; commits only
+        spelling wins). One collect of the cached snapshot; appends only
         when a name is new."""
-        current = self._read_or_empty(tbl, schema).collect()
-        ids = {key_of(r["name"]): r["id"] for r in current}
+        ids = {key_of(r["name"]): r["id"] for r in tbl.read().collect()}
         new: dict[str, str] = {}
         for n in names:
             if n is not None and n.strip() and key_of(n) not in ids:
@@ -178,7 +162,7 @@ class StockLake:
             ts = _now()
             fresh = [(str(uuid.uuid4()), stored, ts, ts)
                      for stored in new.values()]
-            self._write_rows(tbl, current + fresh, schema)
+            tbl.append(self.spark.createDataFrame(fresh, tbl.schema))
             ids.update((k, row[0]) for k, row in zip(new, fresh))
         return ids
 
@@ -186,7 +170,7 @@ class StockLake:
         """ticker -> id of an existing non-terminal run — the reference's
         partial-unique-constraint skip/409 path (models.py:386-399,
         stock_ingestion_service.py:268-334) as a batch lookup."""
-        if not tickers or not self.runs.exists():
+        if not tickers:
             return {}
         rows = (self.read_runs()
                 .filter(F.col("ticker").isin(tickers)
@@ -234,7 +218,7 @@ class StockLake:
         gets a run failed with its code. New tickers and the metadata sync
         meet in one set of driver-side stock rows, which commit once after
         the silver merge, and only if something changed; then all runs
-        commit in one overwrite, so every committed run's stock resolves."""
+        commit in one append, so every committed run's stock resolves."""
         if not tickers and not fetch_errors:
             return {"batch_id": None, "run_ids": [], "failed_run_ids": [],
                     "n_silver_rows": self.silver.num_rows()}
@@ -287,10 +271,9 @@ class StockLake:
 
         # M4: metadata sync into the stocks rows, then their one commit
         if self.sync_stock_metadata([r["ticker"] for r in ok], stocks) or new_stocks:
-            self._write_rows(self.stocks, list(stocks.values()), STOCKS)
-        self.runs.overwrite(merge_upsert(
-            self.read_runs(), runs_dataframe(self.spark, rows + failed_rows),
-            ["id"]))
+            self._write_rows(self.stocks, list(stocks.values()))
+        self.runs.append(self.spark.createDataFrame(rows + failed_rows,
+                                                    self.runs.schema))
         if self.on_run_failed is not None:
             for r in bad + failed_rows:
                 self.on_run_failed(r["id"], r["ticker"], r["error_code"],
@@ -397,11 +380,9 @@ class StockLake:
         for r in sorted(rows, key=lambda r: [(v is not None, v or "")
                                              for v in r]):
             meta.setdefault(r["ticker"], r.asDict())
-        for c, tbl, schema in (("exchange", self.exchanges, EXCHANGES),
-                               ("sector", self.sectors, SECTORS)):
+        for c, tbl in (("exchange", self.exchanges), ("sector", self.sectors)):
             if c in meta_cols:
-                ids = self.get_or_create_dim(tbl, schema,
-                                             [r[c] for r in meta.values()],
+                ids = self.get_or_create_dim(tbl, [r[c] for r in meta.values()],
                                              normalize=c == "exchange")
                 for r in meta.values():  # a blank or null name maps to None
                     r[f"{c}_id"] = ids.get(key_of(r.pop(c) or ""))

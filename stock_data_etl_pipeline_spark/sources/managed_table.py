@@ -8,9 +8,13 @@ happens to be installed:
     tbl = ManagedTable(spark, path, partition_by=["record_type"])
     tbl.create(df)                      # mode=error first write (S5)
     tbl.merge(batch, keys=[...])        # null-safe upsert (S6/J4/M6)
+    tbl.append(rows)                    # blind insert of new rows
     tbl.read()                          # latest snapshot, pushdown-able (S7)
     tbl.read(version=3)                 # time travel
     tbl.vacuum(keep_last=2)             # drop unreferenced data dirs
+
+    ctl = ManagedTable(spark, path, schema=RUNS)
+    ctl.read()                          # typed empty frame before any commit
 
 Layout — manifest-per-version, like a miniature Delta transaction log:
 
@@ -51,6 +55,12 @@ control tables, which every API request reads whole; not for silver, whose
 reads are row-group-pushed range scans and whose cached copy would be the
 whole fact table, materialized by every batch's metadata sync.
 
+A table built with ``schema=`` owns its schema: before its first commit
+``read()`` returns an empty frame of that schema, with no Spark job, so a
+caller has one read path whether or not the table exists yet. The stock
+lake declares one for each control table; without it, reading a missing
+table raises, as before.
+
 A merge rewrites ONLY the partitions the source batch touches: untouched
 partitions keep their existing data directories, and the new manifest
 simply re-references them — version commit cost is O(touched data +
@@ -59,9 +69,17 @@ one small JSON), not O(table). This is the same idea as Delta's MERGE
 rest). Readers resolve _LATEST then the manifest, so a crashed writer
 leaves only orphan data dirs — never a torn table.
 
-Concurrency: commit is compare-and-swap. The per-version manifest file is
-created with O_EXCL, so of two writers that both computed against version
-N, exactly one creates ``v=N+1.json``; the loser raises
+An append is the blind insert of rows that are new by construction (fresh
+ids): the latest snapshot unioned with them, rewritten in one rebalance and
+one write job. It has no key dedup and no per-key window, so it costs no
+shuffle of its own, and on a ``cache=True`` table the latest snapshot it
+extends comes from Spark's cache. Delta likewise makes a blind append its
+own commit type.
+
+Concurrency: commit is compare-and-swap. ``merge`` and ``append`` commit at
+the version they read + 1, and the per-version manifest file is created
+with O_EXCL, so of two writers that both computed against version N,
+exactly one creates ``v=N+1.json``; the loser raises
 ConcurrentModificationError before the pointer moves — surfacing the
 conflict the way the reference does (partial unique constraint ->
 IntegrityError -> 409, /root/reference/services/api/models.py:386-399 and
@@ -140,19 +158,23 @@ class ManagedTable:
     def __init__(self, spark: SparkSession, path: str,
                  partition_by: Sequence[str] = (),
                  cluster_by: Sequence[str] = (),
-                 cache: bool = False) -> None:
+                 cache: bool = False,
+                 schema: T.StructType | None = None) -> None:
         """``cluster_by``: sort rows within files on these columns at write
         time (Z-ORDER-lite) — a filter on those columns pushed into the
         scan then skips row groups by their parquet min/max stats, the
         analog of the reference's OPTIMIZE/Z-ORDER on (ticker,
         period_end_date) (SURVEY §4 index-backed access paths).
         ``cache``: keep the latest snapshot in Spark's cache (see the
-        module docstring) — for small tables read whole."""
+        module docstring) — for small tables read whole.
+        ``schema``: what ``read()`` returns, empty, before the first
+        commit."""
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by)
         self.cluster_by = list(cluster_by)
         self.cache = cache
+        self.schema = schema
         # (sorted data dirs, DataFrame) of the latest snapshot read; the
         # lock makes check-and-swap atomic for a reader and a writer
         # sharing this table
@@ -280,6 +302,17 @@ class ManagedTable:
         self._commit(self._next_version(), body,
                      {"op": "overwrite", **(meta or {})})
 
+    def append(self, df: DataFrame) -> None:
+        """Commit the latest snapshot plus ``df``'s rows at the version read
+        + 1, as ``merge`` does; creates on a missing table. ``df``'s rows
+        must be new: nothing is deduplicated."""
+        if not self.exists():
+            self.create(df)
+            return
+        version = self.latest_version()
+        body = self._write_partition_dirs(self.read(version).unionByName(df))
+        self._commit(version + 1, body, {"op": "append"})
+
     def merge(self, source: DataFrame, keys: Sequence[str],
               dedup_source_order: Sequence[Column] | None = None) -> None:
         """Null-safe update_all/insert_all upsert; creates on first call.
@@ -331,6 +364,11 @@ class ManagedTable:
         self._commit(version + 1, body, {"op": "merge", "keys": list(keys)})
 
     # -- read path ----------------------------------------------------------
+    def _empty(self, schema: T.StructType) -> DataFrame:
+        # limit(0) plans as an empty local relation: collecting it, or a
+        # filter or join over it, starts no Spark job
+        return self.spark.createDataFrame([], schema).limit(0)
+
     def _scan(self, dirs: Sequence[str], schema: T.StructType) -> DataFrame:
         return self.spark.read.schema(schema).parquet(
             *(os.path.join(self.path, d) for d in dirs))
@@ -340,12 +378,16 @@ class ManagedTable:
         manifest are read on every call; the DataFrame is reused while the
         version's data dirs equal the last latest read's, so repeated
         reads of one commit skip file listing and planning. A time-travel
-        read that misses builds a fresh scan and leaves the slot alone."""
+        read that misses builds a fresh scan and leaves the slot alone.
+        Before the first commit, a table with a declared schema reads as
+        its empty frame."""
+        if version is None and self.schema is not None and not self.exists():
+            return self._empty(self.schema)
         v = self.latest_version() if version is None else version
         m = self.commit_meta(v)
         dirs = _dirs(m)
         if not dirs:  # a zero-row commit: nothing to scan or keep
-            return self.spark.createDataFrame([], _schema(m))
+            return self._empty(_schema(m))
         with self._lock:
             if self._snapshot is not None and self._snapshot[0] == dirs:
                 return self._snapshot[1]

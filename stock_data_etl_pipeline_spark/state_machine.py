@@ -7,28 +7,27 @@ Parity targets (reference, /root/reference/):
 - state -> timestamp-column map: stock_ingestion_service.py:73-82
 - FAILED requires error_code + error_message: stock_ingestion_service.py:242-252
 - partial unique constraint (at most one non-terminal run per stock):
-  models.py:386-399 — no DDL equivalent in a lake table, enforced here by
-  the guarded get-or-create operator + single-writer discipline per key.
+  models.py:386-399 — no DDL equivalent in a lake table, enforced by the
+  writers: an ingest batch and a bulk queue skip every stock that already
+  has a non-terminal run before they create its run.
 
-The reference commits every transition under a SELECT FOR UPDATE row lock.
-An ingest batch here commits its new runs once, at the end, so no reader
-sees an intermediate state: ``advance`` walks the batch's run rows through
-the DAG on the driver. ``transition`` is the guarded conditional update for
-runs already committed: it applies only where the current state is a legal
+The reference creates each run once and commits every transition under a
+SELECT FOR UPDATE row lock. Here a run row is built on the driver
+(``new_run_row``) and committed once, by one append of the runs table per
+ingest batch or bulk queue, so no reader sees an intermediate state:
+``advance`` walks the batch's run rows through the DAG on the driver before
+that append. ``transition`` is the guarded conditional update for runs
+already committed: it applies only where the current state is a legal
 predecessor, so an illegal or stale transition raises.
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .operators.merge import merge_upsert
-from .schemas import INGESTION_RUNS
 
 
 class IngestionState:
@@ -121,11 +120,6 @@ def advance(rows: list[dict], new_state: str, **fields) -> None:
                  **{STATE_TIMESTAMP_COLUMN[new_state]: ts})
 
 
-def runs_dataframe(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    data = [tuple(r.get(f.name) for f in INGESTION_RUNS.fields) for r in rows]
-    return spark.createDataFrame(data, INGESTION_RUNS)
-
-
 def transition(runs: DataFrame, run_id: str | list[str], new_state: str, *,
                error_code: str | None = None,
                error_message: str | None = None,
@@ -196,33 +190,3 @@ def transition(runs: DataFrame, run_id: str | list[str], new_state: str, *,
     return runs.withColumns({col: F.when(guard, expr).otherwise(F.col(col))
                              for col, expr in updates.items()})
 
-
-@dataclass
-class QueueResult:
-    run_id: str
-    created: bool  # False -> an active run already existed (skip/409 path)
-    runs: DataFrame
-
-
-def queue_for_fetch(runs: DataFrame, stock_id: str, ticker: str, *,
-                    bulk_queue_run_id: str | None = None,
-                    requested_by: str | None = None,
-                    now: datetime | None = None) -> QueueResult:
-    """M2: get-or-create the active run for a stock.
-
-    If the stock already has a non-terminal run, return it unchanged
-    (created=False — the reference's skip/409 path, stock_ingestion_service
-    .py:268-334); else insert a fresh QUEUED_FOR_FETCH run. The partial
-    unique constraint becomes this guarded insert + per-stock single-writer
-    discipline.
-    """
-    active = (runs.filter((F.col("stock_id") == stock_id)
-                          & ~is_terminal_col(F.col("state")))
-              .orderBy(F.col("created_at").desc(), F.col("id").desc())
-              .limit(1).collect())
-    if active:
-        return QueueResult(active[0]["id"], False, runs)
-    row = new_run_row(stock_id, ticker, bulk_queue_run_id=bulk_queue_run_id,
-                      requested_by=requested_by, now=now)
-    fresh = runs_dataframe(runs.sparkSession, [row])
-    return QueueResult(row["id"], True, merge_upsert(runs, fresh, ["id"]))

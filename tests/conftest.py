@@ -47,9 +47,9 @@ def tied_runs_lake(spark, tmp_path):
     run b1 and a queued run b2. The larger id wins each tie; an older DONE
     run z9 and a newer MSFT run must never win."""
     from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
-    from stock_data_etl_pipeline_spark.schemas import BRONZE
+    from stock_data_etl_pipeline_spark.schemas import BRONZE, INGESTION_RUNS
     from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
-    from stock_data_etl_pipeline_spark.state_machine import new_run_row, runs_dataframe
+    from stock_data_etl_pipeline_spark.state_machine import new_run_row
 
     lake = StockLake(spark, str(tmp_path / "lake"))
     bronze = os.path.join(lake.root, "bronze", "b0")
@@ -64,7 +64,7 @@ def tied_runs_lake(spark, tmp_path):
         r = new_run_row(f"stock-{ticker}", ticker, now=ts)
         r.update(id=rid, state=state, raw_data_uri=bronze)
         rows.append(r)
-    lake.runs.create(runs_dataframe(spark, rows))
+    lake.runs.create(spark.createDataFrame(rows, INGESTION_RUNS))
     spark.createDataFrame(
         [(r["ticker"], r["id"], f'{{"v": {i}}}') for i, r in enumerate(rows)],
         BRONZE).write.parquet(bronze)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from stock_data_etl_pipeline_spark.plans.bulk import bulk_run_stats, queue_all_stocks
 from stock_data_etl_pipeline_spark.plans.gold import GoldViews
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
+from stock_data_etl_pipeline_spark.schemas import INGESTION_RUNS
 from stock_data_etl_pipeline_spark.sources.fetch import classify, fetch_tickers
 from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
 
@@ -93,15 +94,20 @@ def test_read_raw_json_runs_two_jobs(tied_runs_lake, jobs_during):
 
 # -- A3/M5 bulk queue -------------------------------------------------------
 
-def test_queue_all_stocks_counters(spark, tmp_path):
+@pytest.fixture()
+def bulk_lake(spark, tmp_path):
+    """Stocks AAA, BBB and CCC with no ingest; AAA has an active run, so a
+    bulk queue skips it."""
+    from stock_data_etl_pipeline_spark.state_machine import new_run_row
     lake = StockLake(spark, str(tmp_path / "lake"))
-    lake.get_or_create_stocks(["AAA", "BBB", "CCC"])
-    # give AAA an active run -> it must be skipped
-    from stock_data_etl_pipeline_spark.state_machine import new_run_row, runs_dataframe
-    sid = {r["ticker"]: r["id"] for r in lake.read_stocks().collect()}
-    lake.runs.overwrite(runs_dataframe(
-        spark, [new_run_row(sid["AAA"], "AAA")]))
+    sid = lake.get_or_create_stocks(["AAA", "BBB", "CCC"])
+    lake.runs.overwrite(spark.createDataFrame(
+        [new_run_row(sid["AAA"], "AAA")], INGESTION_RUNS))
+    return lake
 
+
+def test_queue_all_stocks_counters(bulk_lake):
+    lake = bulk_lake
     res = queue_all_stocks(lake, requested_by="ops")
     assert res["total_stocks"] == 3
     assert res["queued_count"] == 2
@@ -139,6 +145,46 @@ def test_queue_all_stocks_one_exchange(spark, tmp_path):
     assert sorted(r["ticker"] for r in queued.collect()) == ["BBB", "CCC"]
 
     assert queue_all_stocks(lake, exchange_name="LSE")["total_stocks"] == 0
+
+
+def test_concurrent_bulk_queue_conflicts_instead_of_losing_runs(spark,
+                                                                 bulk_lake):
+    # handle B queues every stock while handle A's queue is writing its
+    # runs: A read the runs before B's commit, so A must raise rather than
+    # commit a table without B's runs
+    from stock_data_etl_pipeline_spark.sources.managed_table import (
+        ConcurrentModificationError,
+    )
+    other = StockLake(spark, bulk_lake.root)
+    won: dict = {}
+    write = bulk_lake.runs._write_partition_dirs
+
+    def racy(df):
+        won.update(queue_all_stocks(other, requested_by="b"))
+        return write(df)
+
+    bulk_lake.runs._write_partition_dirs = racy
+    with pytest.raises(ConcurrentModificationError):
+        queue_all_stocks(bulk_lake, requested_by="a")
+
+    b = won["bulk_queue_run_id"]
+    runs = bulk_lake.read_runs().collect()
+    assert sorted((r["ticker"], r["bulk_queue_run_id"]) for r in runs) == [
+        ("AAA", None), ("BBB", b), ("CCC", b)]
+    assert [r["id"] for r in bulk_lake.bulk_runs.read().collect()] == [b]
+
+
+def test_cached_bulk_stats_is_one_partition(bulk_lake):
+    # the zero-filled 8 rows are served from one partition, in state order
+    res = queue_all_stocks(bulk_lake)
+    gv = GoldViews()
+    gv.register("bulk_stats",
+                lambda: bulk_run_stats(bulk_lake, res["bulk_queue_run_id"]),
+                tags={"run_views"}, ttl_seconds=300)
+    view = gv.get("bulk_stats")
+    assert view.rdd.getNumPartitions() == 1
+    assert [tuple(r) for r in view.collect()] == [
+        (s, 2 if s == S.QUEUED_FOR_FETCH else 0) for s in sorted(S.ALL)]
 
 
 # -- C1-C3 gold views -------------------------------------------------------

@@ -17,11 +17,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
+from stock_data_etl_pipeline_spark.schemas import INGESTION_RUNS
 from stock_data_etl_pipeline_spark.state_machine import (
     STATE_TIMESTAMP_COLUMN,
     IngestionState as S,
     new_run_row,
-    runs_dataframe,
 )
 
 
@@ -80,7 +80,7 @@ def mixed(spark, tmp_path_factory):
     sid = {r["ticker"]: r["id"] for r in lake.read_stocks().collect()}
     active = new_run_row(sid["BUSY"], "BUSY")
     lake.runs.overwrite(lake.read_runs().unionByName(
-        runs_dataframe(spark, [active])))
+        spark.createDataFrame([active], INGESTION_RUNS)))
 
     before = {"runs": _rows(lake.read_runs(), "id"),
               "stocks": _rows(lake.read_stocks(), "ticker"),

@@ -180,7 +180,11 @@ def test_vacuum_drops_old_versions(spark, tmp_table_dir):
     assert got == {"financials": 3.0, "metadata": 0.0}
 
 
-def test_concurrent_writers_one_winner_one_conflict(spark, tmp_table_dir):
+@pytest.mark.parametrize("write", [
+    lambda t, src: t.merge(src, ["ticker", "record_type", "period_end_date"]),
+    lambda t, src: t.append(src)], ids=["merge", "append"])
+def test_concurrent_writers_one_winner_one_conflict(spark, tmp_table_dir,
+                                                    write):
     # two handles race from the same base version: the writer that commits
     # second must surface the conflict (reference: partial unique
     # constraint -> IntegrityError -> 409), never silently orphan the
@@ -195,17 +199,17 @@ def test_concurrent_writers_one_winner_one_conflict(spark, tmp_table_dir):
     src1 = df_of(spark, [("AAPL", "financials", "2024-06", 2.0)], SCHEMA)
     src2 = df_of(spark, [("MSFT", "financials", "2024-06", 3.0)], SCHEMA)
 
-    # interleave: while t1's merge is mid-flight (after it read the base
+    # interleave: while t1's write is mid-flight (after it read the base
     # version, before its commit), t2 commits the same next version
     orig = t1._write_partition_dirs
 
     def racy(df):
-        t2.merge(src2, ["ticker", "record_type", "period_end_date"])
+        write(t2, src2)
         return orig(df)
 
     t1._write_partition_dirs = racy
     with pytest.raises(ConcurrentModificationError):
-        t1.merge(src1, ["ticker", "record_type", "period_end_date"])
+        write(t1, src1)
 
     # the winner's commit is intact and the loser changed nothing
     rows = {r["ticker"] for r in t1.read().collect()}
@@ -463,6 +467,11 @@ def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by,
     assert jobs_during(lambda: (
         t.read(), t.read_where("period_end_date", "2024-01", "2024-12"))) == 0
     assert t.read_where("period_end_date", "2024-01", "2024-12").count() == 3
+    # an append onto the snapshot read above is one rebalance and one
+    # write job: no dedup or per-key window shuffle
+    assert jobs_during(lambda: t.append(
+        df_of(spark, [("B", "ttm", "2024-06", 2.0)], SCHEMA))) == 2
+    assert t.latest_version() == 1 and t.read().count() == 4
 
 
 def test_manifest_schema_matches_read_schema(spark, tmp_path):
@@ -742,7 +751,8 @@ def test_partition_values_round_trip(spark, tmp_path):
 
 @pytest.mark.parametrize("partition_by", [[], ["record_type"]],
                          ids=["unpartitioned", "partitioned"])
-def test_zero_row_write_reads_back_empty(spark, tmp_path, partition_by):
+def test_zero_row_write_reads_back_empty(spark, tmp_path, partition_by,
+                                        jobs_during):
     t = ManagedTable(spark, str(tmp_path / "empty"), partition_by=partition_by)
     t.create(spark.createDataFrame([], SCHEMA))
     empty = t.read()
@@ -753,3 +763,13 @@ def test_zero_row_write_reads_back_empty(spark, tmp_path, partition_by):
     assert _rows(t.read()) == [("A", 1.0)]
     t.overwrite(t.read().filter(F.col("ticker") == "none"))
     assert t.read().count() == 0 and t.num_rows() == 0
+    # a declared schema reads as its empty frame before the first commit,
+    # with no job; without one, reading a missing table raises
+    declared = spark.createDataFrame([], SCHEMA).schema
+    typed = ManagedTable(spark, str(tmp_path / "typed"),
+                         partition_by=partition_by, schema=declared)
+    assert jobs_during(lambda: typed.read().collect()) == 0
+    assert typed.read().schema == declared and not typed.exists()
+    with pytest.raises(FileNotFoundError):
+        ManagedTable(spark, str(tmp_path / "untyped"),
+                     partition_by=partition_by).read()

@@ -10,7 +10,7 @@ from pyspark.sql.types import DoubleType, StringType
 
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
 from stock_data_etl_pipeline_spark.plans.queries import stock_detail
-from stock_data_etl_pipeline_spark.schemas import EXCHANGES
+from stock_data_etl_pipeline_spark.schemas import INGESTION_RUNS
 from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
 
 DOC = {
@@ -128,7 +128,7 @@ def test_dim_get_or_create_case_rules(spark, tmp_path):
 
     # names that all exist commit nothing and map to the existing ids
     v = lake.exchanges.latest_version()
-    ids = lake.get_or_create_dim(lake.exchanges, EXCHANGES,
+    ids = lake.get_or_create_dim(lake.exchanges,
                                  ["NASDAQ", " nasdaq\t", None, " "],
                                  normalize=True)
     assert lake.exchanges.latest_version() == v
@@ -154,17 +154,14 @@ def test_batch_dedupes_tickers_first_payload_wins(spark, tmp_path):
 
 
 def test_batch_skips_stocks_with_active_run(spark, tmp_path):
-    from stock_data_etl_pipeline_spark.state_machine import (
-        new_run_row,
-        runs_dataframe,
-    )
+    from stock_data_etl_pipeline_spark.state_machine import new_run_row
     lake = StockLake(spark, str(tmp_path / "lake"))
     lake.ingest_batch([("AAPL", json.dumps(DOC))])
     # plant a non-terminal run for MSFT (as if another request is mid-flight)
     sid = lake.get_or_create_stocks(["MSFT"])
     active = new_run_row(sid["MSFT"], "MSFT")
     lake.runs.overwrite(lake.read_runs().unionByName(
-        runs_dataframe(spark, [active])))
+        spark.createDataFrame([active], INGESTION_RUNS)))
 
     res = lake.ingest_batch([("MSFT", json.dumps(DOC)),
                              ("GOOG", json.dumps(DOC))])

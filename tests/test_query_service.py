@@ -13,10 +13,10 @@ from stock_data_etl_pipeline_spark.plans.queries import (
     list_runs,
     stock_detail,
 )
+from stock_data_etl_pipeline_spark.schemas import INGESTION_RUNS
 from stock_data_etl_pipeline_spark.state_machine import (
     IngestionState as S,
     new_run_row,
-    runs_dataframe,
     transition,
 )
 
@@ -32,7 +32,7 @@ def _lake_with_runs(spark, tmp_path):
     # add one FAILED and one in-progress run
     sid = {r["ticker"]: r["id"] for r in lake.read_stocks().collect()}
     extra = [new_run_row(sid["AAPL"], "AAPL"), new_run_row(sid["MSFT"], "MSFT")]
-    runs = lake.read_runs().unionByName(runs_dataframe(spark, extra))
+    runs = lake.read_runs().unionByName(spark.createDataFrame(extra, INGESTION_RUNS))
     runs = transition(runs, extra[0]["id"], S.FAILED,
                       error_code="API_ERROR", error_message="boom")
     lake.runs.overwrite(runs)

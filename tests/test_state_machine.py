@@ -7,14 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from stock_data_etl_pipeline_spark.schemas import INGESTION_RUNS
 from stock_data_etl_pipeline_spark.state_machine import (
     STATE_TIMESTAMP_COLUMN,
     VALID_TRANSITIONS,
     IngestionState as S,
     TransitionError,
     new_run_row,
-    queue_for_fetch,
-    runs_dataframe,
     transition,
 )
 
@@ -22,7 +21,7 @@ from stock_data_etl_pipeline_spark.state_machine import (
 @pytest.fixture()
 def one_run(spark):
     row = new_run_row("stock-1", "AAPL")
-    return row["id"], runs_dataframe(spark, [row])
+    return row["id"], spark.createDataFrame([row], INGESTION_RUNS)
 
 
 def state_of(runs, run_id):
@@ -91,37 +90,9 @@ def test_uri_stamping(spark, one_run):
     assert state_of(runs, run_id)["raw_data_uri"] == "s3://raw/x.json"
 
 
-def test_queue_for_fetch_get_or_create(spark, one_run):
-    _, runs = one_run
-    # stock-1 already has an active (QUEUED_FOR_FETCH) run -> skip path
-    res = queue_for_fetch(runs, "stock-1", "AAPL")
-    assert res.created is False
-    assert res.runs.count() == 1
-    # a different stock gets a fresh run
-    res2 = queue_for_fetch(runs, "stock-2", "MSFT")
-    assert res2.created is True
-    assert res2.runs.count() == 2
-    # terminal run -> new run allowed (partial-unique parity)
-    run_id = state_of(runs, res.run_id)["id"]
-    done = transition(
-        transition(
-            transition(
-                transition(
-                    transition(
-                        transition(runs, run_id, S.FETCHING),
-                        run_id, S.FETCHED),
-                    run_id, S.QUEUED_FOR_DELTA),
-                run_id, S.DELTA_RUNNING),
-            run_id, S.DELTA_FINISHED),
-        run_id, S.DONE)
-    res3 = queue_for_fetch(done, "stock-1", "AAPL")
-    assert res3.created is True
-    assert res3.runs.count() == 2
-
-
 def test_batch_transition(spark):
     rows = [new_run_row(f"s{i}", f"T{i}") for i in range(3)]
-    runs = runs_dataframe(spark, rows)
+    runs = spark.createDataFrame(rows, INGESTION_RUNS)
     ids = [r["id"] for r in rows]
     runs = transition(runs, ids, S.FETCHING)
     assert runs.filter(F.col("state") == S.FETCHING).count() == 3
@@ -133,7 +104,7 @@ def test_batch_transition(spark):
 
 def test_batch_failed_with_per_id_errors(spark):
     rows = [new_run_row(f"s{i}", f"T{i}") for i in range(3)]
-    runs = runs_dataframe(spark, rows)
+    runs = spark.createDataFrame(rows, INGESTION_RUNS)
     per_id = {r["id"]: (f"E{i}", f"fetch failed for T{i}: E{i}")
               for i, r in enumerate(rows)}
     out = transition(runs, list(per_id), S.FAILED, per_id_errors=per_id)
@@ -150,7 +121,7 @@ def test_batch_failed_with_per_id_errors(spark):
 
 def test_per_id_errors_must_cover_all_ids(spark):
     rows = [new_run_row("sa", "TA"), new_run_row("sb", "TB")]
-    runs = runs_dataframe(spark, rows)
+    runs = spark.createDataFrame(rows, INGESTION_RUNS)
     only_first = {rows[0]["id"]: ("E0", "boom")}
     with pytest.raises(TransitionError):
         transition(runs, [r["id"] for r in rows], S.FAILED,
