@@ -5,11 +5,14 @@ max 100 (reference /root/reference/services/api/views/paginator.py:24-29).
 The reference explicitly chose keyset over OFFSET so page N doesn't scan
 N*page_size rows — the same argument holds 1000x harder on Spark: an
 OFFSET would force a global sort + skip, while a keyset cursor is a
-pushdown-able range predicate + a small top-K sort.
+range predicate + a small top-K sort. The predicate compares structs,
+which parquet cannot take as a pushed filter: it runs on the scanned rows,
+and the top-K still needs no shuffle of the whole relation.
 
 Cursor = the (order columns..., tiebreaker) tuple of the last row of the
 previous page. The predicate is the row-wise "strictly after cursor"
-lexicographic comparison.
+lexicographic comparison, in ``orderBy``'s null order, so a walk over a
+nullable order column reaches every row.
 
 DRF parity extras (paginator.py:24-29 + CursorPagination semantics):
 - opaque client-safe tokens: ``encode_cursor``/``decode_cursor`` wrap the
@@ -83,15 +86,26 @@ def decode_cursor(token: str) -> list[Any]:
         raise InvalidCursorError(f"invalid cursor token: {token!r}") from exc
 
 
-def _after_cursor(order: Sequence[tuple[str, bool]], cursor: Sequence[Any]) -> Column:
+def _after_cursor(df: DataFrame, order: Sequence[tuple[str, bool]],
+                  cursor: Sequence[Any]) -> Column:
     """Lexicographic 'row comes strictly after cursor' predicate.
-    ``order`` is [(column, descending)]."""
+    ``order`` is [(column, descending)].
+
+    Each position compares one-field structs, the column's against the
+    cursor value's cast to the column's type. Struct order puts a null
+    first and two nulls equal, so the predicate agrees with ``orderBy``
+    (NULLS FIRST ascending, NULLS LAST descending) where a plain ``<``
+    would drop every null row. And a struct literal is bound into
+    generated code by reference, not inlined like a timestamp or number,
+    so pages of one shape compile their classes once, whatever the
+    cursor's values."""
     pred = F.lit(False)
     for i in range(len(order) - 1, -1, -1):
         col, desc = order[i]
-        c = F.col(col)
-        strict = (c < F.lit(cursor[i])) if desc else (c > F.lit(cursor[i]))
-        pred = strict | ((c == F.lit(cursor[i])) & pred)
+        c = F.struct(F.col(col).alias("v"))
+        v = F.struct(F.lit(cursor[i]).cast(df.schema[col].dataType).alias("v"))
+        strict = (c < v) if desc else (c > v)
+        pred = strict | ((c == v) & pred)
     return pred
 
 
@@ -116,7 +130,7 @@ def keyset_page(df: DataFrame, order: Sequence[tuple[str, bool]],
         cursor = decode_cursor(cursor)
     eff = [(c, not d) for c, d in order] if reverse else list(order)
     if cursor is not None:
-        df = df.filter(_after_cursor(eff, cursor))
+        df = df.filter(_after_cursor(df, eff, cursor))
     sort_cols = [F.col(c).desc() if d else F.col(c).asc() for c, d in eff]
     page = df.orderBy(*sort_cols).limit(page_size)
     if reverse:

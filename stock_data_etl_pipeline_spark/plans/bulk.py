@@ -86,6 +86,5 @@ def bulk_run_stats(lake: StockLake, bulk_id: str) -> DataFrame:
     states (+ the caller adds TTL caching via plans/gold.py — C3)."""
     from ..operators.aggregates import group_count_zerofill
     runs = lake.read_runs().filter(F.col("bulk_queue_run_id") == bulk_id)
-    # 8 rows: one partition, so a cached view serves them in one task
     return group_count_zerofill(runs, "state", IngestionState.ALL,
-                                count_col="count").coalesce(1)
+                                count_col="count")

@@ -11,12 +11,14 @@ Reference caching architecture (/root/reference/):
   views/bulk_queue_runs.py:32-158)
 
 Spark restatement: a view registry holding builder + dependency set.
-`get` returns a Spark-cached DataFrame (`.cache()` — C1's indefinite
-Redis entry becomes executor-memory columnar cache); `notify_write(table)`
-uncaches exactly the dependent views (C2's signal table, same shape);
-TTL views additionally expire by wall clock (C3). At scale the same
-registry writes gold parquet/Delta tables instead of memory caching —
-swap `materialize`.
+`get` returns the built view's rows held on the driver
+(`managed_table.driver_local`): C1's indefinite Redis entry becomes a
+local relation, which a filter, projection or collect reads with no Spark
+job, so a gold view must be small enough to hold in driver memory.
+`notify_write(table)` drops exactly the dependent views (C2's signal
+table, same shape); TTL views additionally expire by wall clock (C3). A
+view too large for the driver belongs in a gold table written by the
+builder, not in this registry.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+
+from ..sources.managed_table import driver_local
 
 Builder = Callable[[], DataFrame]
 
@@ -64,9 +68,7 @@ class GoldViews:
         expired = (e.ttl_seconds is not None
                    and time.monotonic() - e.built_at > e.ttl_seconds)
         if e.df is None or expired:
-            if e.df is not None:
-                e.df.unpersist()
-            e.df = e.builder().cache()
+            e.df = driver_local(e.builder())
             e.built_at = time.monotonic()
             e.builds += 1
         return e.df
@@ -81,7 +83,6 @@ class GoldViews:
         hit = []
         for name, e in self._views.items():
             if e.df is not None and (e.tags & groups):
-                e.df.unpersist()
                 e.df = None
                 hit.append(name)
         return hit

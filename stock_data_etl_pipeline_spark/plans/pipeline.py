@@ -27,14 +27,15 @@ batch IS the serialization unit, and Structured Streaming's foreachBatch
 from __future__ import annotations
 
 import os
-import threading
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
+from ..operators.windows import latest_per_group
 from ..schemas import (
     BRONZE,
     BULK_QUEUE_RUNS,
@@ -45,7 +46,7 @@ from ..schemas import (
     STOCK_METADATA_FIELDS,
     STOCKS,
 )
-from ..sources.managed_table import ManagedTable
+from ..sources.managed_table import ManagedTable, SnapshotView
 from ..state_machine import IngestionState, advance, is_terminal_col, new_run_row
 from .stock_transform import transform_stock_json
 
@@ -83,10 +84,17 @@ class StockLake:
         self.sectors = control("sectors", SECTORS)
         self.runs = control("ingestion_runs", INGESTION_RUNS)
         self.bulk_runs = control("bulk_queue_runs", BULK_QUEUE_RUNS)
-        # (snapshot keys of stocks, exchanges and sectors, their cached
-        # join); the lock makes check-and-swap atomic, as in ManagedTable
-        self._details: tuple[tuple, DataFrame] | None = None
-        self._details_lock = threading.Lock()
+        # the small derived views the API serves, held on the driver and
+        # rebuilt when a table they read commits (SnapshotView): every
+        # stock with its exchange and sector names joined in
+        # (serializers.py:85-101), and each ticker's newest run and newest
+        # DONE run (W1/W2, models.py:247-298), ties broken by the larger id
+        self.stock_details = SnapshotView(
+            self._join_stock_details, [self.stocks, self.exchanges, self.sectors])
+        self.latest_runs = SnapshotView(lambda: self._latest_runs(False),
+                                        [self.runs])
+        self.latest_done_runs = SnapshotView(lambda: self._latest_runs(True),
+                                             [self.runs])
 
     # -- control-plane helpers ---------------------------------------------
     def read_runs(self) -> DataFrame:
@@ -95,28 +103,20 @@ class StockLake:
     def read_stocks(self) -> DataFrame:
         return self.stocks.read()
 
-    def read_stock_details(self) -> DataFrame:
-        """Every stock with its exchange and sector names joined in
-        (serializers.py:85-101). One cached relation per snapshot of the
-        three tables: rebuilt when any of their snapshot keys moves, and
-        the one it replaces unpersisted, so a detail read is one filter
-        job over it, with no dim broadcast per request."""
-        key = tuple(t.snapshot_key()
-                    for t in (self.stocks, self.exchanges, self.sectors))
-        with self._details_lock:
-            if self._details is not None and self._details[0] == key:
-                return self._details[1]
-            df = self.read_stocks()
-            for dim, tbl in (("exchange", self.exchanges),
-                             ("sector", self.sectors)):
-                names = tbl.read().select(F.col("id").alias(f"{dim}_id"),
-                                          F.col("name").alias(f"{dim}_name"))
-                df = df.join(F.broadcast(names), f"{dim}_id", "left")
-            df.cache()
-            if self._details is not None:
-                self._details[1].unpersist()
-            self._details = (key, df)
-            return df
+    def _join_stock_details(self) -> DataFrame:
+        df = self.read_stocks()
+        for dim, tbl in (("exchange", self.exchanges), ("sector", self.sectors)):
+            names = tbl.read().select(F.col("id").alias(f"{dim}_id"),
+                                      F.col("name").alias(f"{dim}_name"))
+            df = df.join(F.broadcast(names), f"{dim}_id", "left")
+        return df
+
+    def _latest_runs(self, only_done: bool) -> DataFrame:
+        runs = self.read_runs()
+        if only_done:
+            runs = runs.filter(F.col("state") == IngestionState.DONE)
+        return latest_per_group(runs, ["ticker"],
+                                [F.col("created_at").desc(), F.col("id").desc()])
 
     def _write_rows(self, tbl: ManagedTable, rows: list[dict]) -> None:
         """Commit driver-side ``rows`` as the whole table (one file: the
@@ -328,25 +328,24 @@ class StockLake:
         (reference views/stocks.py:134-353: latest DONE run -> S3 get ->
         validate JSON -> passthrough). Returns None when the ticker has no
         DONE run; raises ValueError when the stored payload is not valid
-        JSON (the reference's 502-corrupt-object path)."""
+        JSON (the reference's 502-corrupt-object path). No Spark job: the
+        run comes from the driver-held ``latest_done_runs`` view, and its
+        document from one pyarrow read of its bronze dir on the driver,
+        filtered to the run's id and ticker (the reference's one S3 GET)."""
         import json as _json
 
         t = key_of(ticker)
-        # one ticker: a top-1, not a per-ticker window
-        latest = (self.read_runs()
-                  .filter((F.col("ticker") == t)
-                          & (F.col("state") == IngestionState.DONE))
-                  .orderBy(F.col("created_at").desc(), F.col("id").desc())
-                  .limit(1).collect())
+        latest = (self.latest_done_runs.read().filter(F.col("ticker") == t)
+                  .select("id", "raw_data_uri").collect())
         if not latest:
             return None
         run = latest[0]
-        raw = (self.spark.read.schema(BRONZE).parquet(run["raw_data_uri"])
-               .filter((F.col("run_id") == run["id"]) & (F.col("ticker") == t))
-               .select("json_str").collect())
-        if not raw:
+        raw = pq.read_table(run["raw_data_uri"], columns=["json_str"],
+                            filters=[("run_id", "==", run["id"]),
+                                     ("ticker", "==", t)])
+        if not raw.num_rows:
             return None
-        payload = raw[0]["json_str"]
+        payload = raw.column("json_str")[0].as_py()
         try:
             _json.loads(payload)
         except (ValueError, TypeError) as exc:

@@ -9,10 +9,13 @@ Reference shape (/root/reference/services/api/):
     GET /api/bulk-queue-runs/<id>/stats -> DB-side group-by-state,
          zero-filled, 300 s TTL cache (views/bulk_queue_runs.py:63-158)
 
-Each request compiles to one Catalyst plan over the cached control-table
-snapshots: push the predicates, keyset-limit the page. Stock detail
-filters a stocks-exchanges-sectors join that the lake builds and caches
-once per snapshot of the three tables, not per request.
+A runs list compiles to one Catalyst plan, and one Spark job, over the
+cached runs snapshot: push the predicates, keyset-limit the page. Stock
+detail and latest run are point reads of small views the lake holds on
+the driver, rebuilt only when a table they read commits (``SnapshotView``):
+the stocks-exchanges-sectors join and the latest run per ticker. A filter
+over such a view folds into its local rows, so these reads launch no Spark
+job, as the reference answers them from one indexed row.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.normalize import key_of
 from ..operators.filters import apply_filters
 from ..operators.pagination import DEFAULT_PAGE_SIZE, keyset_page
-from ..state_machine import IngestionState, is_terminal_col
+from ..state_machine import is_terminal_col
 from .pipeline import StockLake
 
 # virtual boolean filters (filters.py:138-180,223-245) expand to predicates
@@ -74,18 +77,14 @@ def list_runs(lake: StockLake,
 
 def stock_detail(lake: StockLake, ticker: str) -> DataFrame:
     """Stock row with exchange/sector names joined in (J2): a filter of
-    the lake's cached per-snapshot join, one job."""
-    return lake.read_stock_details().filter(F.col("ticker") == key_of(ticker))
+    the lake's driver-held detail view, no Spark job."""
+    return lake.stock_details.read().filter(F.col("ticker") == key_of(ticker))
 
 
 def latest_run_for_stock(lake: StockLake, ticker: str,
                          only_done: bool = False) -> DataFrame:
     """W1/W2: the newest (optionally DONE) run for a ticker, ties broken
-    by the larger id. With the rows filtered to one ticker this is a
-    single-key top-1: Spark plans it as one TakeOrderedAndProject, with no
-    shuffle (a per-group window would partition by ticker first)."""
-    t = key_of(ticker)
-    runs = lake.read_runs().filter(F.col("ticker") == t)
-    if only_done:
-        runs = runs.filter(F.col("state") == IngestionState.DONE)
-    return runs.orderBy(F.col("created_at").desc(), F.col("id").desc()).limit(1)
+    by the larger id: a filter of the lake's driver-held latest-run view,
+    no Spark job."""
+    view = lake.latest_done_runs if only_done else lake.latest_runs
+    return view.read().filter(F.col("ticker") == key_of(ticker))

@@ -55,6 +55,12 @@ control tables, which every API request reads whole; not for silver, whose
 reads are row-group-pushed range scans and whose cached copy would be the
 whole fact table, materialized by every batch's metadata sync.
 
+A ``SnapshotView`` carries the same keying to a small relation derived
+from some tables (a join, a latest row per key): it holds the rows on the
+driver (``driver_local``) and rebuilds them only when one of its tables'
+``snapshot_key()`` moves, so a request reads it with no Spark job and is
+never served rows older than the tables' latest commits.
+
 A table built with ``schema=`` owns its schema: before its first commit
 ``read()`` returns an empty frame of that schema, with no Spark job, so a
 caller has one read path whether or not the table exists yet. The stock
@@ -97,7 +103,7 @@ import shutil
 import threading
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import reduce
 from urllib.parse import unquote
 
@@ -533,3 +539,43 @@ class ManagedTable:
                 if f"data/{name}" not in referenced:
                     shutil.rmtree(os.path.join(data_root, name),
                                   ignore_errors=True)
+
+
+def driver_local(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a relation held on the driver: one Arrow collect,
+    then a ``LocalRelation``. The optimizer folds a filter or projection
+    over it into the relation, so collecting either launches no Spark job.
+    Every row lives in driver memory: for small derived views only. A df
+    that already plans as one (a view over a table not yet committed) is
+    returned as it is: the Arrow collect would launch a job even then."""
+    plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        return df
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+
+
+class SnapshotView:
+    """A small relation derived from ``tables``, held on the driver and
+    rebuilt by ``build`` only when one of the tables' ``snapshot_key()``
+    moves, whichever handle committed. ``read()`` reads the keys (_LATEST
+    and a manifest per table, no Spark job) before the build reads the
+    tables, so a view is never older than the keys it is stored under.
+    The first ``read()`` builds; ``builds`` counts the builds."""
+
+    def __init__(self, build: Callable[[], DataFrame],
+                 tables: Sequence[ManagedTable]) -> None:
+        self.build = build
+        self.tables = tuple(tables)
+        self.builds = 0
+        # (snapshot keys, driver-local rows); the lock makes check-and-swap
+        # atomic, as in ManagedTable
+        self._view: tuple[tuple, DataFrame] | None = None
+        self._lock = threading.Lock()
+
+    def read(self) -> DataFrame:
+        key = tuple(t.snapshot_key() for t in self.tables)
+        with self._lock:
+            if self._view is None or self._view[0] != key:
+                self._view = (key, driver_local(self.build()))
+                self.builds += 1
+            return self._view[1]

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from stock_data_etl_pipeline_spark.plans.bulk import bulk_run_stats, queue_all_stocks
 from stock_data_etl_pipeline_spark.plans.gold import GoldViews
 from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
+from stock_data_etl_pipeline_spark.plans.queries import latest_run_for_stock
 from stock_data_etl_pipeline_spark.schemas import INGESTION_RUNS
 from stock_data_etl_pipeline_spark.sources.fetch import classify, fetch_tickers
 from stock_data_etl_pipeline_spark.state_machine import IngestionState as S
@@ -87,9 +88,38 @@ def test_read_raw_json_breaks_created_at_ties_by_id(tied_runs_lake):
     assert json.loads(tied_runs_lake.read_raw_json("aapl")) == {"v": 2}
 
 
-def test_read_raw_json_runs_two_jobs(tied_runs_lake, jobs_during):
-    # a top-1 picks the run, one scan reads its bronze row
-    assert jobs_during(lambda: tied_runs_lake.read_raw_json("AAPL")) == 2
+def test_read_raw_json_repeat_read_launches_no_job(tied_runs_lake,
+                                                  jobs_during):
+    # the run comes from the driver-held latest-DONE view, built once per
+    # runs snapshot, and the document from a pyarrow read on the driver
+    tied_runs_lake.read_raw_json("MSFT")
+    assert jobs_during(lambda: tied_runs_lake.read_raw_json("AAPL")) == 0
+    assert tied_runs_lake.latest_done_runs.builds == 1
+
+
+def test_latest_runs_follow_commits_of_another_handle(spark, tmp_path):
+    # a second handle on the same root commits to ingestion_runs; the first
+    # handle's latest-run and raw JSON reads move with no notify call
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    lake.ingest_batch([("AAPL", json.dumps(DOC))])
+    first = latest_run_for_stock(lake, "AAPL").collect()[0]
+    assert json.loads(lake.read_raw_json("AAPL")) == DOC
+
+    other = StockLake(spark, lake.root)
+    doc2 = json.loads(json.dumps(DOC))
+    doc2["data"]["metadata"]["name"] = "A2"
+    run2 = other.ingest_batch([("AAPL", json.dumps(doc2))])["run_ids"]
+    assert [r["id"] for r in latest_run_for_stock(lake, "AAPL").collect()] == run2
+    assert run2 != [first["id"]]
+    assert json.loads(lake.read_raw_json("AAPL")) == doc2
+
+    queued = queue_all_stocks(other)["bulk_queue_run_id"]
+    latest = latest_run_for_stock(lake, "AAPL").collect()
+    assert [(r["state"], r["bulk_queue_run_id"]) for r in latest] == [
+        (S.QUEUED_FOR_FETCH, queued)]
+    done = latest_run_for_stock(lake, "AAPL", only_done=True).collect()
+    assert [r["id"] for r in done] == run2
+    assert json.loads(lake.read_raw_json("AAPL")) == doc2
 
 
 # -- A3/M5 bulk queue -------------------------------------------------------
@@ -174,17 +204,21 @@ def test_concurrent_bulk_queue_conflicts_instead_of_losing_runs(spark,
     assert [r["id"] for r in bulk_lake.bulk_runs.read().collect()] == [b]
 
 
-def test_cached_bulk_stats_is_one_partition(bulk_lake):
-    # the zero-filled 8 rows are served from one partition, in state order
+def test_cached_bulk_stats_collect_launches_no_job(bulk_lake, jobs_during):
+    # the zero-filled 8 rows are built once and held on the driver: each
+    # collect serves them, in state order, with no Spark job
     res = queue_all_stocks(bulk_lake)
     gv = GoldViews()
     gv.register("bulk_stats",
                 lambda: bulk_run_stats(bulk_lake, res["bulk_queue_run_id"]),
                 tags={"run_views"}, ttl_seconds=300)
-    view = gv.get("bulk_stats")
-    assert view.rdd.getNumPartitions() == 1
-    assert [tuple(r) for r in view.collect()] == [
-        (s, 2 if s == S.QUEUED_FOR_FETCH else 0) for s in sorted(S.ALL)]
+    want = [(s, 2 if s == S.QUEUED_FOR_FETCH else 0) for s in sorted(S.ALL)]
+    gv.get("bulk_stats")
+    for _ in range(2):
+        rows = []
+        assert jobs_during(lambda: rows.extend(gv.get("bulk_stats").collect())) == 0
+        assert [tuple(r) for r in rows] == want
+    assert gv.build_count("bulk_stats") == 1
 
 
 # -- C1-C3 gold views -------------------------------------------------------

@@ -134,10 +134,14 @@ def test_dim_get_or_create_case_rules(spark, tmp_path):
     assert lake.exchanges.latest_version() == v
     assert ids == {"NASDAQ": stocks["AAPL"]["exchange_id"]}
 
-    # a commit to a dim alone (stocks unchanged) rebuilds the join too
-    lake.sectors.overwrite(lake.sectors.read().withColumn(
+    # a commit to a dim alone (stocks unchanged), by another handle on the
+    # same root, rebuilds the join too, once for every read that follows
+    builds = lake.stock_details.builds
+    other = StockLake(spark, lake.root)
+    other.sectors.overwrite(other.sectors.read().withColumn(
         "name", F.lit("Technology")))
-    assert names("AAPL") == ("NASDAQ", "Technology")
+    assert names("AAPL") == names("MSFT") == ("NASDAQ", "Technology")
+    assert lake.stock_details.builds == builds + 1
 
 
 def test_batch_dedupes_tickers_first_payload_wins(spark, tmp_path):

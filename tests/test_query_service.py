@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import datetime
 import json
 
 import pytest
@@ -74,11 +75,13 @@ def test_stock_detail_joins_dims(lake):
     assert row["sector_name"] == "Tech"
 
 
-def test_stock_detail_is_one_job(lake, jobs_during):
-    # the dims are joined once per snapshot: a warm detail read only
-    # filters the cached join
-    stock_detail(lake, "MSFT").collect()
-    assert jobs_during(lambda: stock_detail(lake, "AAPL").collect()) == 1
+def test_stock_detail_repeat_read_launches_no_job(lake, jobs_during):
+    # the dims are joined once per snapshot, into rows held on the driver:
+    # a repeat detail read filters them with no Spark job
+    fresh = StockLake(lake.spark, lake.root)
+    stock_detail(fresh, "MSFT").collect()
+    assert jobs_during(lambda: stock_detail(fresh, "AAPL").collect()) == 0
+    assert fresh.stock_details.builds == 1
 
 
 def test_latest_run_for_stock(lake):
@@ -97,18 +100,60 @@ def test_latest_run_for_stock_breaks_ties_by_id(tied_runs_lake, only_done,
 
 
 @pytest.mark.parametrize("only_done", [False, True])
-def test_latest_run_for_stock_is_one_job_without_shuffle(tied_runs_lake,
-                                                         jobs_during,
-                                                         only_done):
-    # one ticker's latest run is a top-1, not a per-ticker window
+def test_latest_run_for_stock_repeat_read_launches_no_job(tied_runs_lake,
+                                                          jobs_during,
+                                                          only_done):
+    # the latest run per ticker is built once per runs snapshot and held on
+    # the driver: a repeat read filters it with no Spark job
+    latest_run_for_stock(tied_runs_lake, "MSFT", only_done=only_done).collect()
     df = latest_run_for_stock(tied_runs_lake, "AAPL", only_done=only_done)
-    assert jobs_during(df.collect) == 1
-    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert jobs_during(df.collect) == 0
+    view = (tied_runs_lake.latest_done_runs if only_done
+            else tied_runs_lake.latest_runs)
+    assert view.builds == 1
+
+
+@pytest.mark.parametrize("only_done", [False, True])
+def test_latest_run_view_rows_equal_a_top_1(spark, tmp_path, only_done):
+    # each ticker's view row equals a Spark top-1 over the runs table column
+    # for column, timestamps to the microsecond after the Arrow round trip
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    t0 = datetime.datetime(2024, 3, 9, 23, 59, 58, 123457)
+    rows = []
+    for i, (ticker, state) in enumerate([
+            ("AAPL", S.DONE), ("AAPL", S.DONE), ("AAPL", S.FAILED),
+            ("MSFT", S.DONE), ("MSFT", S.QUEUED_FOR_FETCH), ("IBM", S.FAILED)]):
+        r = new_run_row(f"stock-{ticker}", ticker,
+                        now=t0 + datetime.timedelta(seconds=i, microseconds=i))
+        r.update(state=state, raw_data_uri=f"bronze/b{i}",
+                 done_at=t0 + datetime.timedelta(days=i, microseconds=7 * i))
+        rows.append(r)
+    lake.runs.create(spark.createDataFrame(rows, INGESTION_RUNS))
+
+    runs = lake.read_runs()
+    if only_done:
+        runs = runs.filter(F.col("state") == S.DONE)
+    for t in ("AAPL", "MSFT", "IBM", "NONE"):
+        want = (runs.filter(F.col("ticker") == t)
+                .orderBy(F.col("created_at").desc(), F.col("id").desc())
+                .limit(1).collect())
+        got = latest_run_for_stock(lake, t, only_done=only_done).collect()
+        assert [r.asDict() for r in got] == [r.asDict() for r in want]
+    assert any(r["created_at"].microsecond for r in runs.collect())
+
+
+def test_latest_run_reads_on_an_empty_lake_launch_no_job(spark, tmp_path,
+                                                         jobs_during):
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    got = []
+    for only_done in (False, True):
+        assert jobs_during(lambda: got.append(latest_run_for_stock(
+            lake, "AAPL", only_done=only_done).collect())) == 0
+    assert jobs_during(lambda: got.append(lake.read_raw_json("AAPL"))) == 0
+    assert got == [[], [], None]
 
 
 def test_opaque_cursor_round_trip_and_reverse(spark, tmp_path):
-    import datetime
-
     from stock_data_etl_pipeline_spark.operators.pagination import (
         InvalidCursorError,
         decode_cursor,
@@ -141,3 +186,45 @@ def test_opaque_cursor_round_trip_and_reverse(spark, tmp_path):
     back = keyset_page(df, order, cursor=back_tok, page_size=4,
                        reverse=True).collect()
     assert [r["seq"] for r in back] == [9, 8, 7, 6]
+
+
+@pytest.mark.parametrize("descending", [True, False])
+def test_keyset_walk_over_a_nullable_column_reaches_every_row(spark,
+                                                              descending):
+    from stock_data_etl_pipeline_spark.operators.pagination import keyset_page
+
+    # 5 of 20 rows hold a null order value: a walk must reach them where
+    # orderBy puts them (last descending, first ascending)
+    df = spark.range(20).select(
+        F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id") * 10)
+        .alias("v"), F.format_string("r%02d", "id").alias("id"))
+    order = [("v", descending), ("id", False)]
+    v = F.col("v").desc() if descending else F.col("v").asc()
+    want = [r["id"] for r in df.orderBy(v, "id").collect()]
+    got, cursor = [], None
+    while True:
+        page = keyset_page(df, order, cursor=cursor, page_size=3).collect()
+        got += [r["id"] for r in page]
+        if len(page) < 3:
+            break
+        cursor = [page[-1]["v"], page[-1]["id"]]
+    assert got == want
+
+
+def test_keyset_cursor_pages_compile_no_new_classes(spark):
+    from stock_data_etl_pipeline_spark.operators.pagination import keyset_page
+
+    # every cursor holds a different timestamp; after the first cursor page
+    # the generated classes are reused, not compiled again per value
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    df = spark.range(60).select(
+        (F.lit(1.7e9) + F.col("id") * 61.5).cast("timestamp").alias("ts"), "id")
+    order = [("ts", True), ("id", True)]
+    page = keyset_page(df, order, page_size=5).collect()
+    seen = []
+    for _ in range(6):
+        page = keyset_page(df, order, cursor=[page[-1]["ts"], page[-1]["id"]],
+                           page_size=5).collect()
+        seen.append(compiles.getCount())
+    assert len(set(seen)) == 1
