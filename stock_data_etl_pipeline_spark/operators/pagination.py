@@ -9,6 +9,15 @@ range predicate + a small top-K sort. The predicate compares structs,
 which parquet cannot take as a pushed filter: it runs on the scanned rows,
 and the top-K still needs no shuffle of the whole relation.
 
+Both ways of paging share one step, ``page_after``: the rows strictly after
+the cursor, limited, taken from rows that are already in the page's order.
+``keyset_page`` sorts (the optimizer pushes the cursor filter below the
+sort and plans the sort plus limit as one top-K) and then takes that step.
+A caller that holds its rows in the order already, such as the runs list's
+driver-held view, takes the step directly: with no sort, the optimizer
+folds the filter and the limit into a local relation's rows, and the page
+launches no Spark job.
+
 Cursor = the (order columns..., tiebreaker) tuple of the last row of the
 previous page. The predicate is the row-wise "strictly after cursor"
 lexicographic comparison, in ``orderBy``'s null order, so a walk over a
@@ -17,8 +26,12 @@ nullable order column reaches every row.
 DRF parity extras (paginator.py:24-29 + CursorPagination semantics):
 - opaque client-safe tokens: ``encode_cursor``/``decode_cursor`` wrap the
   value tuple in type-tagged JSON + urlsafe base64, so clients carry a
-  string, never raw values; a tampered/garbled token raises
-  InvalidCursorError (the reference's 404-invalid-cursor path).
+  string, never raw values; a tampered/garbled token, or a cursor whose
+  values do not match the order's columns in number or type, raises
+  InvalidCursorError (the reference's 404-invalid-cursor path) before any
+  plan is built.
+- a page size that is not a positive integer reads as DEFAULT_PAGE_SIZE,
+  and one above MAX_PAGE_SIZE as MAX_PAGE_SIZE (DRF's ``get_page_size``).
 - ``reverse=True`` pages strictly BEFORE the cursor (DRF's ``?cursor=r...``
   backward paging); rows still come back in the base ordering.
 """
@@ -27,12 +40,14 @@ from __future__ import annotations
 
 import base64
 import datetime
+import decimal
 import json
 from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_PAGE_SIZE = 50
 MAX_PAGE_SIZE = 100
@@ -86,6 +101,63 @@ def decode_cursor(token: str) -> list[Any]:
         raise InvalidCursorError(f"invalid cursor token: {token!r}") from exc
 
 
+def _fits(dt: T.DataType, v: Any) -> bool:
+    """Whether the non-null cursor value ``v`` can stand for a value of
+    Spark type ``dt``: checked on the driver, so a wrong type is a bad
+    cursor, not a cast error when the page runs."""
+    if isinstance(dt, T.BooleanType):
+        return isinstance(v, bool)
+    if isinstance(v, bool):
+        return False
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return isinstance(v, datetime.datetime)
+    if isinstance(dt, T.DateType):
+        return (isinstance(v, datetime.date)
+                and not isinstance(v, datetime.datetime))
+    if isinstance(dt, T.IntegralType):
+        return isinstance(v, int)
+    if isinstance(dt, T.DecimalType) and isinstance(v, str):
+        # a token carries a Decimal as its string
+        try:
+            return decimal.Decimal(v).is_finite()
+        except decimal.InvalidOperation:
+            return False
+    if isinstance(dt, T.FractionalType):
+        return isinstance(v, (int, float, decimal.Decimal))
+    if isinstance(dt, T.StringType):
+        return isinstance(v, str)
+    if isinstance(dt, T.BinaryType):
+        return isinstance(v, (bytes, bytearray))
+    return True  # any other type: the cast decides
+
+
+def _cursor_values(df: DataFrame, order: Sequence[tuple[str, bool]],
+                   cursor: Sequence[Any] | str) -> list[Any]:
+    """``cursor`` as one value per ``order`` column, each null or of a
+    Python type that its column's Spark type takes; a token is decoded
+    first. Anything else raises InvalidCursorError."""
+    values = decode_cursor(cursor) if isinstance(cursor, str) else list(cursor)
+    if len(values) != len(order):
+        raise InvalidCursorError(
+            f"cursor holds {len(values)} values; the order has {len(order)}")
+    for (col, _), v in zip(order, values):
+        dt = df.schema[col].dataType
+        if v is not None and not _fits(dt, v):
+            raise InvalidCursorError(
+                f"cursor value {v!r} does not fit {col} {dt.simpleString()}")
+    return values
+
+
+def _page_size(page_size: Any) -> int:
+    """DRF's ``get_page_size``: a positive integer capped at MAX_PAGE_SIZE;
+    anything else reads as DEFAULT_PAGE_SIZE."""
+    try:
+        n = int(page_size)
+    except (TypeError, ValueError):
+        return DEFAULT_PAGE_SIZE
+    return min(n, MAX_PAGE_SIZE) if n > 0 else DEFAULT_PAGE_SIZE
+
+
 def _after_cursor(df: DataFrame, order: Sequence[tuple[str, bool]],
                   cursor: Sequence[Any]) -> Column:
     """Lexicographic 'row comes strictly after cursor' predicate.
@@ -109,6 +181,24 @@ def _after_cursor(df: DataFrame, order: Sequence[tuple[str, bool]],
     return pred
 
 
+def sort_columns(order: Sequence[tuple[str, bool]]) -> list[Column]:
+    """``order``'s sort keys, in ``orderBy``'s default null order."""
+    return [F.col(c).desc() if d else F.col(c).asc() for c, d in order]
+
+
+def page_after(df: DataFrame, order: Sequence[tuple[str, bool]],
+               cursor: Sequence[Any] | str | None = None,
+               page_size: int = DEFAULT_PAGE_SIZE) -> DataFrame:
+    """The step every page takes: the first ``page_size`` rows of ``df``
+    strictly after ``cursor`` in ``order``. ``df`` must already be in
+    ``order``; this step filters and limits, and never sorts. ``cursor``
+    is checked on the driver before the filter is built."""
+    if cursor is not None:
+        df = df.filter(_after_cursor(df, order,
+                                     _cursor_values(df, order, cursor)))
+    return df.limit(_page_size(page_size))
+
+
 def keyset_page(df: DataFrame, order: Sequence[tuple[str, bool]],
                 cursor: Sequence[Any] | str | None = None,
                 page_size: int = DEFAULT_PAGE_SIZE,
@@ -122,20 +212,13 @@ def keyset_page(df: DataFrame, order: Sequence[tuple[str, bool]],
     ``cursor`` may be the raw value tuple or an opaque ``encode_cursor``
     token. ``reverse=True`` returns the page_size rows strictly BEFORE the
     cursor (backward paging), still emitted in the base ordering — the
-    predicate and the top-K sort run in the flipped ordering, then only
-    the k returned rows re-sort.
+    sort and ``page_after`` run in the flipped ordering, then only the k
+    returned rows re-sort.
     """
-    page_size = min(page_size, MAX_PAGE_SIZE)
-    if isinstance(cursor, str):
-        cursor = decode_cursor(cursor)
     eff = [(c, not d) for c, d in order] if reverse else list(order)
-    if cursor is not None:
-        df = df.filter(_after_cursor(df, eff, cursor))
-    sort_cols = [F.col(c).desc() if d else F.col(c).asc() for c, d in eff]
-    page = df.orderBy(*sort_cols).limit(page_size)
+    page = page_after(df.orderBy(*sort_columns(eff)), eff, cursor, page_size)
     if reverse:
-        base = [F.col(c).desc() if d else F.col(c).asc() for c, d in order]
-        page = page.orderBy(*base)
+        page = page.orderBy(*sort_columns(order))
     return page
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
+from ..operators.pagination import sort_columns
 from ..operators.windows import latest_per_group
 from ..schemas import (
     BRONZE,
@@ -49,6 +50,10 @@ from ..schemas import (
 from ..sources.managed_table import ManagedTable, SnapshotView
 from ..state_machine import IngestionState, advance, is_terminal_col, new_run_row
 from .stock_transform import transform_stock_json
+
+
+# the runs list's order (paginator.py:24-29), ties broken by the larger id
+RUN_ORDER = [("created_at", True), ("id", True)]
 
 
 def _now() -> datetime:
@@ -87,14 +92,17 @@ class StockLake:
         # the small derived views the API serves, held on the driver and
         # rebuilt when a table they read commits (SnapshotView): every
         # stock with its exchange and sector names joined in
-        # (serializers.py:85-101), and each ticker's newest run and newest
-        # DONE run (W1/W2, models.py:247-298), ties broken by the larger id
+        # (serializers.py:85-101), each ticker's newest run and newest
+        # DONE run (W1/W2, models.py:247-298), ties broken by the larger id,
+        # and every run in the runs list's order (the reference's index on
+        # -created_at), so a list page only filters and limits
         self.stock_details = SnapshotView(
             self._join_stock_details, [self.stocks, self.exchanges, self.sectors])
         self.latest_runs = SnapshotView(lambda: self._latest_runs(False),
                                         [self.runs])
         self.latest_done_runs = SnapshotView(lambda: self._latest_runs(True),
                                              [self.runs])
+        self.runs_by_recency = SnapshotView(self._runs_by_recency, [self.runs])
 
     # -- control-plane helpers ---------------------------------------------
     def read_runs(self) -> DataFrame:
@@ -115,8 +123,12 @@ class StockLake:
         runs = self.read_runs()
         if only_done:
             runs = runs.filter(F.col("state") == IngestionState.DONE)
-        return latest_per_group(runs, ["ticker"],
-                                [F.col("created_at").desc(), F.col("id").desc()])
+        return latest_per_group(runs, ["ticker"], sort_columns(RUN_ORDER))
+
+    def _runs_by_recency(self) -> DataFrame:
+        return (self.read_runs()
+                .withColumn("is_terminal_flag", is_terminal_col(F.col("state")))
+                .orderBy(*sort_columns(RUN_ORDER)))
 
     def _write_rows(self, tbl: ManagedTable, rows: list[dict]) -> None:
         """Commit driver-side ``rows`` as the whole table (one file: the

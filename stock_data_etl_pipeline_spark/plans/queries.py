@@ -9,13 +9,13 @@ Reference shape (/root/reference/services/api/):
     GET /api/bulk-queue-runs/<id>/stats -> DB-side group-by-state,
          zero-filled, 300 s TTL cache (views/bulk_queue_runs.py:63-158)
 
-A runs list compiles to one Catalyst plan, and one Spark job, over the
-cached runs snapshot: push the predicates, keyset-limit the page. Stock
-detail and latest run are point reads of small views the lake holds on
-the driver, rebuilt only when a table they read commits (``SnapshotView``):
-the stocks-exchanges-sectors join and the latest run per ticker. A filter
-over such a view folds into its local rows, so these reads launch no Spark
-job, as the reference answers them from one indexed row.
+Every read here is served from a small view the lake holds on the
+driver, rebuilt only when a table it reads commits (``SnapshotView``): the
+runs already in list order, the stocks-exchanges-sectors join, and the
+latest run per ticker. A filter, a cursor predicate or a limit over such a
+view folds into its local rows, so these reads launch no Spark job, as the
+reference answers a list page from an index on ``-created_at`` and a
+detail from one indexed row.
 """
 
 from __future__ import annotations
@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
 from ..operators.filters import apply_filters
-from ..operators.pagination import DEFAULT_PAGE_SIZE, keyset_page
+from ..operators.pagination import DEFAULT_PAGE_SIZE, page_after
 from ..state_machine import is_terminal_col
-from .pipeline import StockLake
+from .pipeline import RUN_ORDER, StockLake
 
 # virtual boolean filters (filters.py:138-180,223-245) expand to predicates
 _VIRTUAL = {"is_terminal", "is_in_progress", "is_completed", "has_errors"}
@@ -54,14 +54,18 @@ def _expand_virtual(df: DataFrame, name: str, value: bool) -> DataFrame:
 def list_runs(lake: StockLake,
               filters: Mapping[str, Any] | None = None,
               page_size: int = DEFAULT_PAGE_SIZE,
-              cursor: Sequence[Any] | None = None) -> DataFrame:
+              cursor: Sequence[Any] | str | None = None) -> DataFrame:
     """The runs list endpoint: ANDed filters, keyset page ordered
     (-created_at, -id). Filter keys use the django-style ``field__lookup``
     syntax plus the virtual booleans (is_terminal / is_in_progress). A run
     row carries its stock's ``ticker``, so ``ticker__*`` lookups (J3
-    through-FK filtering) filter the runs table itself, with no join."""
-    runs = lake.read_runs().withColumn(
-        "is_terminal_flag", is_terminal_col(F.col("state")))
+    through-FK filtering) filter the runs table itself, with no join.
+
+    The page is taken from the lake's ``runs_by_recency`` view, whose rows
+    are held on the driver already in page order: the filters, the
+    cursor predicate and the limit fold into them, with no sort and no
+    Spark job. ``cursor`` is a value tuple or an opaque token."""
+    runs = lake.runs_by_recency.read()
     plain: dict[str, Any] = {}
     for key, value in (filters or {}).items():
         base = key.split("__", 1)[0]
@@ -71,8 +75,7 @@ def list_runs(lake: StockLake,
             plain[key] = value
     if plain:
         runs = apply_filters(runs, plain)
-    return keyset_page(runs, [("created_at", True), ("id", True)],
-                       cursor=cursor, page_size=page_size)
+    return page_after(runs, RUN_ORDER, cursor=cursor, page_size=page_size)
 
 
 def stock_detail(lake: StockLake, ticker: str) -> DataFrame:

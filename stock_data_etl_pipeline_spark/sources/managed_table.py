@@ -56,7 +56,8 @@ reads are row-group-pushed range scans and whose cached copy would be the
 whole fact table, materialized by every batch's metadata sync.
 
 A ``SnapshotView`` carries the same keying to a small relation derived
-from some tables (a join, a latest row per key): it holds the rows on the
+from some tables (a join, a latest row per key, a table kept sorted in
+the order it is paged in): it holds the rows on the
 driver (``driver_local``) and rebuilds them only when one of its tables'
 ``snapshot_key()`` moves, so a request reads it with no Spark job and is
 never served rows older than the tables' latest commits.

@@ -8,7 +8,12 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
+from stock_data_etl_pipeline_spark.operators.pagination import (
+    InvalidCursorError,
+    encode_cursor,
+    keyset_page,
+)
+from stock_data_etl_pipeline_spark.plans.pipeline import RUN_ORDER, StockLake
 from stock_data_etl_pipeline_spark.plans.queries import (
     latest_run_for_stock,
     list_runs,
@@ -228,3 +233,136 @@ def test_keyset_cursor_pages_compile_no_new_classes(spark):
                            page_size=5).collect()
         seen.append(compiles.getCount())
     assert len(set(seen)) == 1
+
+
+def _runs(tickers, n, t0):
+    """``n`` run rows: ticker ``i`` mod the tickers, state ``i // tickers``
+    mod the states, so each ticker takes every state. They are created in
+    threes at one instant from ``t0`` on, so ``id`` breaks ties; the ids are
+    a permutation of ``n`` names, not in creation order."""
+    rows = []
+    for i in range(n):
+        r = new_run_row(f"stock-{tickers[i % len(tickers)]}",
+                        tickers[i % len(tickers)],
+                        now=t0 + datetime.timedelta(seconds=i // 3,
+                                                    microseconds=i % 7))
+        r.update(id=f"run-{(i * 37) % n:04d}",
+                 state=S.ALL[i // len(tickers) % len(S.ALL)])
+        rows.append(r)
+    return rows
+
+
+TICKERS = ["AAPL", "AMZN", "GOOG", "IBM", "META", "MSFT", "NVDA", "ORCL"]
+
+
+@pytest.fixture(scope="module")
+def many_runs_lake(spark, tmp_path_factory):
+    # 240 runs: 30 per ticker, 30 per state, 3 or 4 per (ticker, state)
+    lake = StockLake(spark, str(tmp_path_factory.mktemp("many_runs") / "lake"))
+    rows = _runs(TICKERS, 240, datetime.datetime(2024, 3, 9, 23, 59, 58, 123457))
+    lake.runs.create(spark.createDataFrame(rows, INGESTION_RUNS))
+    return lake
+
+
+# the benchmark's walk shapes (a ticker bound, with no further filter, a
+# state or the is_terminal flag) and one icontains, each with the SQL
+# predicate it stands for
+@pytest.mark.parametrize("filters,pred", [
+    ({"ticker__gte": "GOOG"}, "ticker >= 'GOOG'"),
+    ({"ticker__gte": "GOOG", "state": S.DONE},
+     "ticker >= 'GOOG' AND state = 'DONE'"),
+    ({"ticker__gte": "GOOG", "is_terminal": False},
+     "ticker >= 'GOOG' AND state NOT IN ('DONE', 'FAILED')"),
+    ({"ticker__lte": "MSFT"}, "ticker <= 'MSFT'"),
+    ({"ticker__lte": "MSFT", "state": S.FAILED},
+     "ticker <= 'MSFT' AND state = 'FAILED'"),
+    ({"ticker__lte": "MSFT", "is_terminal": True},
+     "ticker <= 'MSFT' AND state IN ('DONE', 'FAILED')"),
+    ({"ticker__icontains": "m"}, "upper(ticker) LIKE '%M%'"),
+], ids=["gte", "gte-state", "gte-terminal", "lte", "lte-state",
+        "lte-terminal", "icontains"])
+def test_list_runs_pages_launch_no_job_and_equal_a_snapshot_top_k(
+        many_runs_lake, jobs_during, filters, pred):
+    # the runs view is built once per runs snapshot; every page after that,
+    # with or without a cursor, folds into its rows with no Spark job, and
+    # holds the rows a sort of the Spark snapshot pages to
+    lake = many_runs_lake
+    list_runs(lake).collect()
+    snapshot = lake.read_runs().filter(pred)
+    cursor, walked = None, 0
+    while True:
+        rows = []
+        assert jobs_during(lambda: rows.extend(list_runs(
+            lake, filters, page_size=10, cursor=cursor).collect())) == 0
+        want = keyset_page(snapshot, RUN_ORDER, cursor=cursor,
+                           page_size=10).collect()
+        assert [r.asDict() for r in want] == [
+            {k: v for k, v in r.asDict().items() if k != "is_terminal_flag"}
+            for r in rows]
+        assert all(r["is_terminal_flag"] == (r["state"] in S.TERMINAL)
+                   for r in rows)
+        walked += len(rows)
+        if len(rows) < 10:
+            break
+        cursor = [rows[-1]["created_at"], rows[-1]["id"]]
+    assert walked == snapshot.count() > 10
+    assert lake.runs_by_recency.builds == 1
+
+
+def test_list_runs_pages_stay_stable_under_inserts(spark, tmp_path):
+    # page 2 continues page 1 of the order the client started from, even
+    # after new runs commit in between and the view rebuilds
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    t0 = datetime.datetime(2024, 3, 9, 12)
+    lake.runs.create(spark.createDataFrame(_runs(TICKERS, 30, t0),
+                                           INGESTION_RUNS))
+    before = [r["id"] for r in list_runs(lake, page_size=100).collect()]
+    p1 = list_runs(lake, page_size=10).collect()
+
+    newer = _runs(TICKERS, 5, t0 + datetime.timedelta(hours=1))
+    for r in newer:
+        r["id"] = "new-" + r["id"]
+    lake.runs.append(spark.createDataFrame(newer, INGESTION_RUNS))
+
+    p2 = list_runs(lake, page_size=10,
+                   cursor=[p1[-1]["created_at"], p1[-1]["id"]]).collect()
+    assert [r["id"] for r in p1 + p2] == before[:20]
+    assert lake.runs_by_recency.builds == 2
+    # a walk started now begins with the new runs
+    top = [r["id"] for r in list_runs(lake, page_size=5).collect()]
+    assert sorted(top) == sorted(r["id"] for r in newer)
+
+
+@pytest.mark.parametrize("values", [
+    ["created_at"],
+    ["created_at", "id", "extra"],
+    ["2024-03-09 12:00:00", "id"],
+], ids=["too-few-values", "too-many-values", "string-for-timestamp"])
+def test_malformed_cursor_raises_invalid_cursor(lake, values):
+    # a cursor that does not match the order's columns in number or type
+    # is a bad cursor (the reference's 404), raised before any plan runs,
+    # as a value tuple or as a token, on both paging paths
+    last = list_runs(lake).collect()[-1]
+    cursor = [last[v] if v in ("created_at", "id") else v for v in values]
+    for bad in (cursor, encode_cursor(cursor)):
+        with pytest.raises(InvalidCursorError):
+            list_runs(lake, cursor=bad)
+        with pytest.raises(InvalidCursorError):
+            keyset_page(lake.read_runs(), RUN_ORDER, cursor=bad)
+    # nulls are cursor values: nothing follows a null created_at, which
+    # sorts last descending
+    assert list_runs(lake, cursor=[None, None]).collect() == []
+
+
+@pytest.mark.parametrize("page_size,want", [(0, 50), (-1, 50), (500, 100)])
+def test_out_of_range_page_size_reads_as_default_or_max(many_runs_lake,
+                                                        page_size, want):
+    # DRF's get_page_size: a non-positive size reads as the default (50),
+    # and a size over the maximum as the maximum (100)
+    ids = [r["id"] for r in list_runs(many_runs_lake, page_size=100).collect()]
+    got = [r["id"] for r in list_runs(many_runs_lake,
+                                      page_size=page_size).collect()]
+    assert got == ids[:want]
+    snap = keyset_page(many_runs_lake.read_runs(), RUN_ORDER,
+                       page_size=page_size).collect()
+    assert [r["id"] for r in snap] == ids[:want]
