@@ -126,9 +126,13 @@ class StockLake:
         return latest_per_group(runs, ["ticker"], sort_columns(RUN_ORDER))
 
     def _runs_by_recency(self) -> DataFrame:
+        # every row ends on the driver anyway: one task sorts them, with no
+        # range-partition sampling job and no shuffle, which halves the
+        # rebuild each runs commit causes
         return (self.read_runs()
                 .withColumn("is_terminal_flag", is_terminal_col(F.col("state")))
-                .orderBy(*sort_columns(RUN_ORDER)))
+                .coalesce(1)
+                .sortWithinPartitions(*sort_columns(RUN_ORDER)))
 
     def _write_rows(self, tbl: ManagedTable, rows: list[dict]) -> None:
         """Commit driver-side ``rows`` as the whole table (one file: the

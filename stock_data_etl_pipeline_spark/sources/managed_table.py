@@ -60,7 +60,10 @@ from some tables (a join, a latest row per key, a table kept sorted in
 the order it is paged in): it holds the rows on the
 driver (``driver_local``) and rebuilds them only when one of its tables'
 ``snapshot_key()`` moves, so a request reads it with no Spark job and is
-never served rows older than the tables' latest commits.
+never served rows older than the tables' latest commits. A view holds
+every row its build returns, with no bound: its driver memory, its
+rebuild after each commit and the optimizer time of every plan over it
+grow with those rows.
 
 A table built with ``schema=`` owns its schema: before its first commit
 ``read()`` returns an empty frame of that schema, with no Spark job, so a
@@ -546,9 +549,13 @@ def driver_local(df: DataFrame) -> DataFrame:
     """``df``'s rows as a relation held on the driver: one Arrow collect,
     then a ``LocalRelation``. The optimizer folds a filter or projection
     over it into the relation, so collecting either launches no Spark job.
-    Every row lives in driver memory: for small derived views only. A df
-    that already plans as one (a view over a table not yet committed) is
-    returned as it is: the Arrow collect would launch a job even then."""
+    Every row lives in driver memory, with no bound, and every plan over
+    the relation walks all of its rows in the optimizer (about 0.6 µs a
+    row on 4 cores), so a plan costs time linear in ``df``'s size: for
+    small derived views. The runs list's view is the largest; it holds
+    every run and grows with the runs table. A df that already plans as
+    one (a view over a table not yet committed) is returned as it is: the
+    Arrow collect would launch a job even then."""
     plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
     if plan.getClass().getSimpleName() == "LocalRelation":
         return df
