@@ -16,6 +16,12 @@ latest run per ticker. A filter, a cursor predicate or a limit over such a
 view folds into its local rows, so these reads launch no Spark job, as the
 reference answers a list page from an index on ``-created_at`` and a
 detail from one indexed row.
+
+The silver range read, ``lake.silver.read_where(col, lo, hi)``, has no
+view: it reads the range of the latest commit on every call, on the
+driver through Arrow with row-group skipping, and returns it as a local
+relation (``sources.managed_table``). A further filter or projection
+folds into it the same way, so no API read launches a Spark job.
 """
 
 from __future__ import annotations

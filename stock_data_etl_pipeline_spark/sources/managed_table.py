@@ -11,6 +11,7 @@ happens to be installed:
     tbl.append(rows)                    # blind insert of new rows
     tbl.read()                          # latest snapshot, pushdown-able (S7)
     tbl.read(version=3)                 # time travel
+    tbl.read_where("ticker", "A", "M")  # range read served on the driver
     tbl.vacuum(keep_last=2)             # drop unreferenced data dirs
 
     ctl = ManagedTable(spark, path, schema=RUNS)
@@ -36,11 +37,17 @@ holds one file, fully sorted by ``cluster_by``, however many slices the
 source had. The rebalance is one shuffle stage (and job) before the write
 job; a read then opens one file per partition, not one per source slice.
 
-Every read is one parquet scan over the version's data dirs under the
-manifest's schema, so opening a table infers nothing and starts no Spark
-job (Delta likewise keeps the schema in its log). The scan needs every dir
-of a version to store each column with the manifest's type; a dir that
-lacks a column reads it as NULL.
+Every read resolves _LATEST and the version's manifest, then reads the
+manifest's data dirs under its schema, so opening a table infers nothing
+and starts no Spark job (Delta likewise keeps the schema in its log).
+``read()`` is one lazy, distributed parquet scan; merges, the metadata
+sync, the catalog and ``optimize`` read through it. ``read_where`` reads
+its range on the driver instead, as delta-rs and Polars read a Delta
+table (SURVEY §S7): one Arrow dataset over the version's parquet files,
+filtered to the range, handed to Spark as a local relation, so the
+request launches no Spark job. Both paths need every dir of a version to
+store each column with the manifest's type; a dir that lacks a column
+reads it as NULL.
 
 One snapshot per commit: ``read()`` resolves _LATEST and the manifest on
 every call, so it is never stale, but it hands back the SAME DataFrame for
@@ -51,8 +58,9 @@ and re-created at version 0 cannot hit an old entry, and a retype rewrites
 every dir, so the dirs also fix the schema. A table built with
 ``cache=True`` additionally keeps its snapshot in Spark's cache and
 unpersists the one it replaces. The stock lake sets it for its small
-control tables, which every API request reads whole; not for silver, whose
-reads are row-group-pushed range scans and whose cached copy would be the
+control tables, which every API request reads whole; not for silver: its
+API reads are driver-side range reads that skip row groups by their
+min/max and hold nothing between calls, and its cached copy would be the
 whole fact table, materialized by every batch's metadata sync.
 
 A ``SnapshotView`` carries the same keying to a small relation derived
@@ -102,6 +110,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import shutil
 import threading
@@ -111,10 +120,13 @@ from collections.abc import Callable, Sequence
 from functools import reduce
 from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from ..operators.merge import align_schemas, merge_upsert
 
@@ -141,11 +153,16 @@ def _pk_col(partition_by: Sequence[str]) -> Column:
     return F.to_json(F.struct(*partition_by), {"ignoreNullFields": "false"})
 
 
+def _files(path: str) -> list[str]:
+    """The parquet files of the data dir at ``path``."""
+    return sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
+                            recursive=True))
+
+
 def _dir_rows(path: str) -> int:
     """Row count of the data dir at ``path``, summed from its parquet
     footers — metadata-only, a handful of footers per commit."""
-    return sum(pq.read_metadata(f).num_rows for f in
-               glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    return sum(pq.read_metadata(f).num_rows for f in _files(path))
 
 
 def _schema(manifest: dict) -> T.StructType:
@@ -155,6 +172,50 @@ def _schema(manifest: dict) -> T.StructType:
 def _dirs(manifest: dict) -> tuple[str, ...]:
     """A version's sorted data dirs: its snapshot key (module docstring)."""
     return tuple(sorted(manifest["partitions"].values()))
+
+
+def _bound(field: T.StructField, value) -> pa.Scalar:
+    """A range bound as an Arrow scalar of ``field``'s type, converted
+    through its Spark type (``toInternal``) as ``F.lit`` converts it: a
+    naive datetime is local time, an aware one its instant. A bound that
+    does not convert exactly raises TypeError."""
+    dt = field.dataType
+    try:
+        internal = dt.toInternal(value)
+        scalar = pa.scalar(internal, to_arrow_type(dt))
+        # pyarrow truncates a float into an integer type without a word
+        exact = (not isinstance(dt, T.IntegralType)
+                 or scalar.as_py() == internal)
+    except (TypeError, ValueError, AttributeError):  # ArrowInvalid too
+        exact = False
+    if not exact:
+        raise TypeError(f"range bound {value!r} does not fit column "
+                        f"{field.name} {dt.simpleString()}")
+    return scalar
+
+
+def _range(field: T.StructField, lo, hi) -> ds.Expression | None:
+    """``lo <= field <= hi`` as an Arrow dataset filter, either bound
+    optional (None for no bound), with Spark's semantics: a null never
+    matches a bound, and a float NaN orders above every number and equals
+    itself."""
+    x = ds.field(field.name)
+    floating = isinstance(field.dataType, (T.FloatType, T.DoubleType))
+    conds = []
+    if lo is not None:
+        b = _bound(field, lo)
+        if not floating:
+            conds.append(x >= b)
+        elif math.isnan(b.as_py()):
+            conds.append(x.is_nan())
+        else:
+            conds.append((x >= b) | x.is_nan())
+    if hi is not None:
+        b = _bound(field, hi)
+        # NaN <= hi is false in both engines; <= NaN holds for every value
+        conds.append(x.is_valid() if floating and math.isnan(b.as_py())
+                     else x <= b)
+    return reduce(lambda a, b: a & b, conds) if conds else None
 
 
 def _retypes(old: T.StructType, new: T.StructType) -> bool:
@@ -383,6 +444,28 @@ class ManagedTable:
         return self.spark.read.schema(schema).parquet(
             *(os.path.join(self.path, d) for d in dirs))
 
+    def _resolve(self, version: int | None) -> tuple[tuple[str, ...],
+                                                     T.StructType]:
+        """The data dirs and schema of ``version`` (default latest), from
+        _LATEST and its manifest. Before the first commit, a table with a
+        declared schema has no dirs and that schema."""
+        if version is None and self.schema is not None and not self.exists():
+            return (), self.schema
+        m = self.commit_meta(version)
+        return _dirs(m), _schema(m)
+
+    def _dataset(self, dirs: Sequence[str],
+                 schema: T.StructType) -> ds.Dataset:
+        """The parquet files of ``dirs`` as one Arrow dataset under
+        ``schema``, for reads served on the driver (as delta-rs and Polars
+        read a Delta table). A dir that lacks a column reads it as null,
+        as the Spark scan does. INT96 timestamps decode as microseconds,
+        Spark's unit, so no date overflows nanoseconds."""
+        files = [f for d in dirs for f in _files(os.path.join(self.path, d))]
+        fmt = ds.ParquetFileFormat(
+            read_options={"coerce_int96_timestamp_unit": "us"})
+        return ds.dataset(files, schema=to_arrow_schema(schema), format=fmt)
+
     def read(self, version: int | None = None) -> DataFrame:
         """The snapshot of ``version`` (default latest). The pointer and
         manifest are read on every call; the DataFrame is reused while the
@@ -391,17 +474,13 @@ class ManagedTable:
         read that misses builds a fresh scan and leaves the slot alone.
         Before the first commit, a table with a declared schema reads as
         its empty frame."""
-        if version is None and self.schema is not None and not self.exists():
-            return self._empty(self.schema)
-        v = self.latest_version() if version is None else version
-        m = self.commit_meta(v)
-        dirs = _dirs(m)
-        if not dirs:  # a zero-row commit: nothing to scan or keep
-            return self._empty(_schema(m))
+        dirs, schema = self._resolve(version)
+        if not dirs:  # no commit yet, or a zero-row one: nothing to scan
+            return self._empty(schema)
         with self._lock:
             if self._snapshot is not None and self._snapshot[0] == dirs:
                 return self._snapshot[1]
-            df = self._scan(dirs, _schema(m))
+            df = self._scan(dirs, schema)
             if version is not None:
                 return df
             if self.cache:
@@ -415,16 +494,29 @@ class ManagedTable:
 
     def read_where(self, col: str, lo=None, hi=None,
                    version: int | None = None) -> DataFrame:
-        """Range read: ``read(version)`` filtered to ``lo <= col <= hi``
-        (either bound optional). The filter is pushed into the scan, and
-        ``cluster_by`` writes sorted files, so row groups whose parquet
-        min/max cannot intersect the range are skipped."""
-        out = self.read(version)
-        if lo is not None:
-            out = out.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            out = out.filter(F.col(col) <= F.lit(hi))
-        return out
+        """The rows of ``version`` (default latest) with ``lo <= col <=
+        hi``, either bound optional, read on the driver and returned as a
+        local relation: a filter, projection or collect over it launches
+        no Spark job. The manifest is resolved as ``read()`` resolves it,
+        so the read is never stale. The range is an Arrow dataset filter,
+        which skips row groups whose parquet min/max cannot meet it
+        (``cluster_by`` writes sorted files). Bounds convert as ``F.lit``
+        converts them; one that does not fit the column's type raises
+        TypeError before any file is read.
+
+        Every row in the range, all columns, passes through driver memory,
+        so the range bounds the cost: in a 4-core probe over a 150,000-row
+        table, a range of 15,000 rows cost the Spark scan's CPU and a
+        wider one more. Past 48 MB of Arrow data (Spark's
+        ``spark.sql.execution.arrow.localRelationThreshold``), Spark ships
+        the rows as an RDD and a collect runs a job. A caller that needs a
+        distributed scan of a large range uses ``read().filter(...)``."""
+        dirs, schema = self._resolve(version)
+        cond = _range(schema[col], lo, hi)
+        if not dirs:
+            return self._empty(schema)
+        table = self._dataset(dirs, schema).to_table(filter=cond)
+        return self.spark.createDataFrame(table, schema)
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY analog: one row per surviving version with the

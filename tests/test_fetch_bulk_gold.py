@@ -122,6 +122,34 @@ def test_latest_runs_follow_commits_of_another_handle(spark, tmp_path):
     assert json.loads(lake.read_raw_json("AAPL")) == doc2
 
 
+def test_silver_range_read_launches_no_job_and_follows_other_handle(
+        spark, tmp_path, jobs_during):
+    # a silver range read is served on the driver with no Spark job, and
+    # it resolves the latest commit on every call: a batch merged through
+    # a second handle shows in the first handle's next range read
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    lake.ingest_batch([("AAPL", json.dumps(DOC))])
+
+    def periods(lo, hi):
+        return sorted((r["ticker"], r["period_end_date"]) for r in
+                      lake.silver.read_where("ticker", lo, hi)
+                      .filter(F.col("record_type") == "financials")
+                      .select("ticker", "period_end_date").collect())
+
+    got = []
+    assert jobs_during(lambda: got.append(periods("AAPL", "AAPL"))) == 0
+    assert got == [[("AAPL", "2024-03")]]
+
+    other = StockLake(spark, lake.root)
+    doc2 = json.loads(json.dumps(DOC))
+    doc2["data"]["financials"]["quarterly"] = {
+        "period_end_date": ["2024-03", "2024-06"], "revenue": [1.0, 2.0]}
+    other.ingest_batch([("AAPL", json.dumps(doc2)), ("MSFT", json.dumps(DOC))])
+    assert periods("AAPL", "AAPL") == [("AAPL", "2024-03"), ("AAPL", "2024-06")]
+    assert periods("A", "N") == [("AAPL", "2024-03"), ("AAPL", "2024-06"),
+                                 ("MSFT", "2024-03")]
+
+
 # -- A3/M5 bulk queue -------------------------------------------------------
 
 @pytest.fixture()

@@ -467,11 +467,123 @@ def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by,
     assert jobs_during(lambda: (
         t.read(), t.read_where("period_end_date", "2024-01", "2024-12"))) == 0
     assert t.read_where("period_end_date", "2024-01", "2024-12").count() == 3
+    # a range read comes back as a local relation: a filter, a projection
+    # and the collect over it fold on the driver, as in the API's range read
+    got = []
+    assert jobs_during(lambda: got.extend(
+        t.read_where("period_end_date", "2024-01", "2024-12")
+        .filter(F.col("revenue") > 0).select("ticker", "record_type")
+        .collect())) == 0
+    assert sorted(r["record_type"] for r in got) == [
+        "financials", "metadata", "ttm"]
     # an append onto the snapshot read above is one rebalance and one
     # write job: no dedup or per-key window shuffle
     assert jobs_during(lambda: t.append(
         df_of(spark, [("B", "ttm", "2024-06", 2.0)], SCHEMA))) == 2
     assert t.latest_version() == 1 and t.read().count() == 4
+
+
+RANGE_SCHEMA = "ticker string, kind string, at timestamp, day date, px double"
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York", "Asia/Kolkata"])
+def test_read_where_matches_read_filter(spark, tmp_path, tz):
+    # the driver range read returns what read().filter() returns, schema
+    # and rows, under any session time zone: timestamps, dates, doubles
+    # (NaN included), nulls, a column one partition's dir lacks, every
+    # bound shape and time travel
+    from datetime import date, datetime, timezone
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        t = ManagedTable(spark, str(tmp_path / "r"), partition_by=["kind"],
+                         cluster_by=["at"])
+        t.create(df_of(spark, [
+            ("AAPL", "q", datetime(2024, 1, 1, 23, 30), date(2024, 1, 1), 1.5),
+            ("AAPL", "q", datetime(2024, 3, 31, 2, 0), date(2024, 3, 31),
+             float("nan")),
+            ("MSFT", "q", None, None, None),
+            ("MSFT", "m", datetime(2023, 12, 31, 20, 0), date(2023, 12, 31),
+             -2.0),
+            ("TSLA", "m", datetime(2024, 6, 1), date(2024, 6, 1), 0.0),
+            # past the nanosecond range of an INT96 timestamp decoded as ns
+            ("ZZZ", "m", datetime(2300, 1, 1), date(2300, 1, 1), 9.0)],
+            RANGE_SCHEMA))
+        # touches kind=q only and adds a column: the kind=m dir lacks it
+        t.merge(df_of(spark, [
+            ("AAPL", "q", datetime(2024, 1, 1, 23, 30), date(2024, 1, 1), 2.5,
+             7.0),
+            ("NVDA", "q", datetime(2024, 2, 1, 5, 0), None, None, None)],
+            RANGE_SCHEMA + ", score double"), ["ticker", "kind", "at"])
+        m = '{"kind": "m"}'
+        assert t._read_manifest(1)[m] == t._read_manifest(0)[m]
+
+        def rows(df):
+            return sorted(repr(tuple(r)) for r in df.collect())
+
+        ranges = {
+            "ticker": [("AAPL", None), (None, "MSFT"), ("B", "N"), ("X", "Z")],
+            "at": [(datetime(2024, 1, 1), None),
+                   (None, datetime(2024, 1, 2, tzinfo=timezone.utc)),
+                   (datetime(2024, 1, 1, 23, 30), datetime(2024, 3, 31, 2)),
+                   (datetime(2200, 1, 1), None)],
+            "day": [(date(2024, 1, 1), date(2024, 3, 31)),
+                    (None, date(2023, 12, 31)), (date(2030, 1, 1), None)],
+            "px": [(0.0, None), (None, 2.0), (float("nan"), None),
+                   (None, float("nan")), (-5.0, -1.0)],
+            "score": [(0.0, None), (None, 100.0)],
+        }
+        cases = [(c, lo, hi, v) for c, bounds in ranges.items()
+                 for lo, hi in bounds + [(None, None)]
+                 for v in (None, 0) if c != "score" or v is None]
+        for col, lo, hi, version in cases:
+            got = t.read_where(col, lo, hi, version=version)
+            want = t.read(version)
+            if lo is not None:
+                want = want.filter(F.col(col) >= F.lit(lo))
+            if hi is not None:
+                want = want.filter(F.col(col) <= F.lit(hi))
+            case = (col, lo, hi, version)
+            assert got.schema == want.schema, case
+            assert rows(got) == rows(want), case
+        # the cases above are not all empty or all full
+        assert len(t.read_where("score", 0.0).collect()) == 1
+        assert len(t.read_where("ticker", "X", "Z").collect()) == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def test_read_where_converts_bounds_like_lit(spark, tmp_path):
+    # bounds convert through the column's Spark type, as F.lit converts
+    # them; one of the wrong type raises TypeError before a file is read
+    import shutil
+    from datetime import date, datetime, timezone
+    t = ManagedTable(spark, str(tmp_path / "b"))
+    t.create(df_of(spark, [
+        ("A", "q", datetime(2024, 1, 1, 12), date(2024, 1, 1), 1.0, 1),
+        ("B", "q", datetime(2024, 1, 2, 12), date(2024, 1, 2), 2.0, 2)],
+        RANGE_SCHEMA + ", n long"))
+    naive = t.read_where("at", datetime(2024, 1, 2)).collect()
+    assert [r["ticker"] for r in naive] == ["B"]
+    aware = t.read_where("at", hi=datetime(2024, 1, 1, 12,
+                                           tzinfo=timezone.utc)).collect()
+    assert [r["ticker"] for r in aware] == [
+        r["ticker"] for r in t.read().filter(
+            F.col("at") <= F.lit(datetime(2024, 1, 1, 12,
+                                          tzinfo=timezone.utc))).collect()]
+    assert [r["ticker"] for r in
+            t.read_where("day", date(2024, 1, 2), date(2024, 1, 2)).collect()
+            ] == ["B"]
+    assert [r["ticker"] for r in t.read_where("n", 2).collect()] == ["B"]
+    shutil.rmtree(os.path.join(t.path, "data"))
+    # 1.5 must not truncate to 1 on the long column: Spark compares 1 >= 1.5
+    # as doubles
+    for col, bound in [("day", "2024-01-02"), ("at", date(2024, 1, 2)),
+                       ("px", "high"), ("ticker", 3), ("n", 1.5)]:
+        with pytest.raises(TypeError, match=f"column {col} "):
+            t.read_where(col, bound)
+        with pytest.raises(TypeError):
+            t.read_where(col, hi=bound)
 
 
 def test_manifest_schema_matches_read_schema(spark, tmp_path):
