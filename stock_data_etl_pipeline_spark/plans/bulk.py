@@ -9,9 +9,11 @@ backfill the bulk FK with bulk_update batches of 100 (M5).
 Spark restatement: the counters are counted on the driver, where the new
 run rows are built, instead of mutable increments: every queued row lands
 in ONE append of the runs table, so ``queued_count`` is exactly the number
-of rows appended, and the bulk row lands in one append of its own. Both
-commit at the version they read + 1, so a concurrent writer's runs make
-this queue raise instead of vanishing.
+of rows appended, and the bulk row lands in one append of its own. The
+lookups and both commits run on the driver through Arrow, with no Spark
+job. The runs commit at the version the active-run check read + 1, so a
+concurrent writer's runs, committed before this queue's check or after,
+make it raise instead of vanishing or being queued twice.
 """
 
 from __future__ import annotations
@@ -19,11 +21,12 @@ from __future__ import annotations
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
-from ..state_machine import IngestionState, is_terminal_col, new_run_row
+from ..state_machine import IngestionState, new_run_row
 from .pipeline import StockLake
 
 
@@ -40,25 +43,24 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
     started = _now()
     bulk_id = str(uuid.uuid4())
 
-    stocks = lake.read_stocks()
+    match = None
     if exchange_name is not None:
-        # one collect of the cached snapshot; no match filters on a null id,
-        # which keeps no row
-        ids = {key_of(r["name"]): r["id"] for r in lake.exchanges.read().collect()}
-        stocks = stocks.filter(
-            F.col("exchange_id") == F.lit(ids.get(key_of(exchange_name))))
+        # no match filters on a null id, which keeps no row
+        _, ex = lake.exchanges.read_arrow()
+        ids = dict(zip(map(key_of, ex["name"].to_pylist()), ex["id"].to_pylist()))
+        match = ds.field("exchange_id") == ids.get(key_of(exchange_name))
+    _, stocks = lake.stocks.read_arrow(match)
 
     # O3: deterministic iteration order
-    all_stocks = [(r["id"], r["ticker"]) for r in
-                  stocks.select("id", "ticker").orderBy("ticker").collect()]
+    all_stocks = sorted(zip(stocks["ticker"].to_pylist(),
+                            stocks["id"].to_pylist()))
     total = len(all_stocks)
 
-    active_stock_ids = {
-        r["stock_id"] for r in
-        lake.read_runs().filter(~is_terminal_col(F.col("state")))
-        .select("stock_id").distinct().collect()}
+    base, runs = lake.runs.read_arrow()
+    active_stock_ids = set(runs.filter(
+        ~ds.field("state").isin(IngestionState.TERMINAL))["stock_id"].to_pylist())
 
-    to_queue = [(sid, t) for sid, t in all_stocks if sid not in active_stock_ids]
+    to_queue = [(sid, t) for t, sid in all_stocks if sid not in active_stock_ids]
     skipped = total - len(to_queue)
 
     errors = 0
@@ -70,12 +72,13 @@ def queue_all_stocks(lake: StockLake, requested_by: str | None = None,
         except Exception:  # noqa: BLE001 — per-stock isolation (reference :258-291)
             errors += 1
     if rows:
-        # M5: the whole backfill is ONE append, not N saves
-        lake.runs.append(lake.spark.createDataFrame(rows, lake.runs.schema))
+        # M5: the whole backfill is ONE append, not N saves, at the version
+        # the active-run check read
+        lake.runs.write_rows(rows, base, head=runs)
     queued = len(rows)
-    lake.bulk_runs.append(lake.spark.createDataFrame(
-        [(bulk_id, requested_by, total, queued, skipped, errors,
-          started, started, _now())], lake.bulk_runs.schema))
+    lake.bulk_runs.append([dict(zip(lake.bulk_runs.schema.names, (
+        bulk_id, requested_by, total, queued, skipped, errors,
+        started, started, _now())))])
     return {"bulk_queue_run_id": bulk_id, "total_stocks": total,
             "queued_count": queued, "skipped_count": skipped,
             "error_count": errors}

@@ -17,8 +17,12 @@ Storage layout under ``root``:
     control/{stocks,exchanges,sectors,ingestion_runs,bulk_queue_runs}/
 
 Scale: per-batch work is one narrow transform + one partition-pruned merge;
-control tables are tiny relative to silver: new runs and dim rows append,
-and only ``stocks`` is rewritten, because the metadata sync edits rows.
+control tables are tiny relative to silver, and the driver already holds
+every control row a batch writes, so they are looked up and committed on
+the driver through Arrow (``ManagedTable.read_arrow`` and ``write_rows``),
+with no Spark job, as the reference's control plane is a one-node row
+store (SURVEY §1.1). New runs and dim rows append; ``stocks`` is rewritten,
+because the metadata sync edits rows, at the version its lookup read.
 The reference serializes silver writes (delta worker concurrency=1); here a
 batch IS the serialization unit, and Structured Streaming's foreachBatch
 (streaming/ingest.py) gives the same guarantee for continuous ingest.
@@ -30,6 +34,7 @@ import os
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,12 +83,11 @@ class StockLake:
         self.silver = ManagedTable(spark, os.path.join(root, "silver/stocks_unified"),
                                    partition_by=["record_type"],
                                    cluster_by=["ticker", "period_end_date"])
-        # the control tables are small and every API request reads them
-        # whole: each keeps its latest snapshot cached, and reads empty
-        # under its schema before its first commit
+        # the control tables are small, looked up and committed on the
+        # driver, and read empty under their schema before a first commit
         def control(name, schema):
             return ManagedTable(spark, os.path.join(root, "control", name),
-                                cache=True, schema=schema)
+                                schema=schema)
         self.stocks = control("stocks", STOCKS)
         self.exchanges = control("exchanges", EXCHANGES)
         self.sectors = control("sectors", SECTORS)
@@ -134,31 +138,28 @@ class StockLake:
                 .coalesce(1)
                 .sortWithinPartitions(*sort_columns(RUN_ORDER)))
 
-    def _write_rows(self, tbl: ManagedTable, rows: list[dict]) -> None:
-        """Commit driver-side ``rows`` as the whole table (one file: the
-        write rebalances, see ManagedTable)."""
-        tbl.overwrite(self.spark.createDataFrame(rows, tbl.schema))
-
-    def _stock_rows(self, tickers: list[str]) -> tuple[dict[str, dict], bool]:
-        """ticker -> row dict of every stock, after adding a fresh row for
-        each of ``tickers`` new under ``key_of`` (models.py:172-181), and
-        whether any was new. One collect of the cached snapshot; commits
-        nothing."""
-        rows = {r["ticker"]: r.asDict() for r in self.read_stocks().collect()}
+    def _stock_rows(self, tickers: list[str]
+                    ) -> tuple[int | None, dict[str, dict], bool]:
+        """The ``stocks`` version read, ticker -> row dict of every stock
+        after adding a fresh row for each of ``tickers`` new under
+        ``key_of`` (models.py:172-181), and whether any was new. One Arrow
+        read on the driver; commits nothing."""
+        base, table = self.stocks.read_arrow()
+        rows = {r["ticker"]: r for r in table.to_pylist()}
         new = sorted({key_of(t) for t in tickers} - rows.keys())
         ts = _now()
         for t in new:
             rows[t] = {**dict.fromkeys(STOCKS.names), "id": str(uuid.uuid4()),
                        "ticker": t, "created_at": ts, "updated_at": ts}
-        return rows, bool(new)
+        return base, rows, bool(new)
 
     def get_or_create_stocks(self, tickers: list[str]) -> dict[str, str]:
         """M1 for stocks: ticker -> id of every stock, after adding each of
-        ``tickers`` new. Commits only when a ticker is new; a batch commits
-        through ``_ingest_raw`` instead."""
-        rows, new = self._stock_rows(tickers)
+        ``tickers`` new. Commits only when a ticker is new, at the version
+        read; a batch commits through ``_ingest_raw`` instead."""
+        base, rows, new = self._stock_rows(tickers)
         if new:
-            self._write_rows(self.stocks, list(rows.values()))
+            self.stocks.write_rows(list(rows.values()), base)
         return {t: r["id"] for t, r in rows.items()}
 
     def get_or_create_dim(self, tbl: ManagedTable, names: list[str],
@@ -167,32 +168,35 @@ class StockLake:
         models.py:61-70) and sectors (normalize=False: case-preserved,
         models.py:83-92), both matched under ``key_of``: ``key_of(name)``
         -> id of every row, after adding each new non-blank name (first
-        spelling wins). One collect of the cached snapshot; appends only
-        when a name is new."""
-        ids = {key_of(r["name"]): r["id"] for r in tbl.read().collect()}
+        spelling wins). One Arrow read on the driver; appends only when a
+        name is new."""
+        _, dims = tbl.read_arrow()
+        ids = dict(zip(map(key_of, dims["name"].to_pylist()),
+                       dims["id"].to_pylist()))
         new: dict[str, str] = {}
         for n in names:
             if n is not None and n.strip() and key_of(n) not in ids:
                 new.setdefault(key_of(n), key_of(n) if normalize else n.strip())
         if new:
             ts = _now()
-            fresh = [(str(uuid.uuid4()), stored, ts, ts)
+            fresh = [{"id": str(uuid.uuid4()), "name": stored,
+                      "created_at": ts, "updated_at": ts}
                      for stored in new.values()]
-            tbl.append(self.spark.createDataFrame(fresh, tbl.schema))
-            ids.update((k, row[0]) for k, row in zip(new, fresh))
+            tbl.append(fresh)
+            ids.update((k, row["id"]) for k, row in zip(new, fresh))
         return ids
 
     def _active_run_ids(self, tickers: list[str]) -> dict[str, str]:
         """ticker -> id of an existing non-terminal run — the reference's
         partial-unique-constraint skip/409 path (models.py:386-399,
-        stock_ingestion_service.py:268-334) as a batch lookup."""
+        stock_ingestion_service.py:268-334) as a batch lookup, read on the
+        driver."""
         if not tickers:
             return {}
-        rows = (self.read_runs()
-                .filter(F.col("ticker").isin(tickers)
-                        & ~is_terminal_col(F.col("state")))
-                .select("ticker", "id").collect())
-        return {r["ticker"]: r["id"] for r in rows}
+        _, runs = self.runs.read_arrow(
+            ds.field("ticker").isin(tickers)
+            & ~ds.field("state").isin(IngestionState.TERMINAL))
+        return dict(zip(runs["ticker"].to_pylist(), runs["id"].to_pylist()))
 
     # -- the flagship path --------------------------------------------------
     def ingest_batch(self, docs: list[tuple[str, str]],
@@ -238,7 +242,7 @@ class StockLake:
         if not tickers and not fetch_errors:
             return {"batch_id": None, "run_ids": [], "failed_run_ids": [],
                     "n_silver_rows": self.silver.num_rows()}
-        stocks, new_stocks = self._stock_rows(tickers + list(fetch_errors))
+        base, stocks, new_stocks = self._stock_rows(tickers + list(fetch_errors))
 
         # M2: one new run per ticker (the active-run guard ran in the
         # caller); a fetch error fails its run straight from the queue
@@ -285,11 +289,11 @@ class StockLake:
                         processed_data_uri=self.silver.path)
                 advance(ok, IngestionState.DONE)
 
-        # M4: metadata sync into the stocks rows, then their one commit
+        # M4: metadata sync into the stocks rows, then their one commit, at
+        # the version they were read at: a stocks commit made since raises
         if self.sync_stock_metadata([r["ticker"] for r in ok], stocks) or new_stocks:
-            self._write_rows(self.stocks, list(stocks.values()))
-        self.runs.append(self.spark.createDataFrame(rows + failed_rows,
-                                                    self.runs.schema))
+            self.stocks.write_rows(list(stocks.values()), base)
+        self.runs.append(rows + failed_rows)
         if self.on_run_failed is not None:
             for r in bad + failed_rows:
                 self.on_run_failed(r["id"], r["ticker"], r["error_code"],

@@ -8,7 +8,6 @@ happens to be installed:
     tbl = ManagedTable(spark, path, partition_by=["record_type"])
     tbl.create(df)                      # mode=error first write (S5)
     tbl.merge(batch, keys=[...])        # null-safe upsert (S6/J4/M6)
-    tbl.append(rows)                    # blind insert of new rows
     tbl.read()                          # latest snapshot, pushdown-able (S7)
     tbl.read(version=3)                 # time travel
     tbl.read_where("ticker", "A", "M")  # range read served on the driver
@@ -16,6 +15,9 @@ happens to be installed:
 
     ctl = ManagedTable(spark, path, schema=RUNS)
     ctl.read()                          # typed empty frame before any commit
+    base, rows = ctl.read_arrow()       # latest version + rows, on the driver
+    ctl.write_rows(dicts, base)         # the whole table, on the driver
+    ctl.append(dicts)                   # blind insert of new rows
 
 Layout — manifest-per-version, like a miniature Delta transaction log:
 
@@ -36,6 +38,12 @@ only past ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so a subdir
 holds one file, fully sorted by ``cluster_by``, however many slices the
 source had. The rebalance is one shuffle stage (and job) before the write
 job; a read then opens one file per partition, not one per source slice.
+A commit of rows that are already on the driver (``write_rows``, and
+``append`` through it) is written there instead, as Delta writes its log
+on the driver: the rows pass the checks ``createDataFrame`` makes, become
+one Arrow table, and each partition's rows land in one parquet file under
+the same ``data/<uuid>/_pk=<key>/`` layout and manifest body, with no
+Spark job.
 
 Every read resolves _LATEST and the version's manifest, then reads the
 manifest's data dirs under its schema, so opening a table infers nothing
@@ -45,9 +53,10 @@ sync, the catalog and ``optimize`` read through it. ``read_where`` reads
 its range on the driver instead, as delta-rs and Polars read a Delta
 table (SURVEY §S7): one Arrow dataset over the version's parquet files,
 filtered to the range, handed to Spark as a local relation, so the
-request launches no Spark job. Both paths need every dir of a version to
-store each column with the manifest's type; a dir that lacks a column
-reads it as NULL.
+request launches no Spark job, and ``read_arrow`` reads a whole small
+table the same way, returning Arrow rows and the version they belong to.
+Every path needs every dir of a version to store each column with the
+manifest's type; a dir that lacks a column reads it as NULL.
 
 One snapshot per commit: ``read()`` resolves _LATEST and the manifest on
 every call, so it is never stale, but it hands back the SAME DataFrame for
@@ -55,13 +64,7 @@ as long as the manifest's data dirs are unchanged (Delta likewise serves
 one snapshot per table version). The key is the sorted dir tuple, not the
 version number: dirs are uuid-named and never reused, so a table dropped
 and re-created at version 0 cannot hit an old entry, and a retype rewrites
-every dir, so the dirs also fix the schema. A table built with
-``cache=True`` additionally keeps its snapshot in Spark's cache and
-unpersists the one it replaces. The stock lake sets it for its small
-control tables, which every API request reads whole; not for silver: its
-API reads are driver-side range reads that skip row groups by their
-min/max and hold nothing between calls, and its cached copy would be the
-whole fact table, materialized by every batch's metadata sync.
+every dir, so the dirs also fix the schema.
 
 A ``SnapshotView`` carries the same keying to a small relation derived
 from some tables (a join, a latest row per key, a table kept sorted in
@@ -74,8 +77,9 @@ rebuild after each commit and the optimizer time of every plan over it
 grow with those rows.
 
 A table built with ``schema=`` owns its schema: before its first commit
-``read()`` returns an empty frame of that schema, with no Spark job, so a
-caller has one read path whether or not the table exists yet. The stock
+``read()`` returns an empty frame of that schema, with no Spark job, and
+``read_arrow()`` an empty Arrow table of it, so a caller has one read path
+whether or not the table exists yet. The stock
 lake declares one for each control table; without it, reading a missing
 table raises, as before.
 
@@ -87,15 +91,16 @@ one small JSON), not O(table). This is the same idea as Delta's MERGE
 rest). Readers resolve _LATEST then the manifest, so a crashed writer
 leaves only orphan data dirs — never a torn table.
 
-An append is the blind insert of rows that are new by construction (fresh
-ids): the latest snapshot unioned with them, rewritten in one rebalance and
-one write job. It has no key dedup and no per-key window, so it costs no
-shuffle of its own, and on a ``cache=True`` table the latest snapshot it
-extends comes from Spark's cache. Delta likewise makes a blind append its
-own commit type.
+An append is the blind insert of driver rows that are new by
+construction (fresh ids): the latest version read as Arrow, the rows
+concatenated to it, and the whole table written on the driver. It has no
+key dedup and no per-key window, and it launches no Spark job. Delta
+likewise makes a blind append its own commit type. The stock lake's
+control tables commit only this way.
 
 Concurrency: commit is compare-and-swap. ``merge`` and ``append`` commit at
-the version they read + 1, and the per-version manifest file is created
+the version they read + 1, ``write_rows`` at the version its caller read
++ 1, and the per-version manifest file is created
 with O_EXCL, so of two writers that both computed against version N,
 exactly one creates ``v=N+1.json``; the loser raises
 ConcurrentModificationError before the pointer moves — surfacing the
@@ -127,6 +132,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import _make_type_verifier
 
 from ..operators.merge import align_schemas, merge_upsert
 
@@ -229,22 +235,18 @@ class ManagedTable:
     def __init__(self, spark: SparkSession, path: str,
                  partition_by: Sequence[str] = (),
                  cluster_by: Sequence[str] = (),
-                 cache: bool = False,
                  schema: T.StructType | None = None) -> None:
         """``cluster_by``: sort rows within files on these columns at write
         time (Z-ORDER-lite) — a filter on those columns pushed into the
         scan then skips row groups by their parquet min/max stats, the
         analog of the reference's OPTIMIZE/Z-ORDER on (ticker,
         period_end_date) (SURVEY §4 index-backed access paths).
-        ``cache``: keep the latest snapshot in Spark's cache (see the
-        module docstring) — for small tables read whole.
         ``schema``: what ``read()`` returns, empty, before the first
-        commit."""
+        commit, and what ``write_rows`` checks and writes rows under."""
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by)
         self.cluster_by = list(cluster_by)
-        self.cache = cache
         self.schema = schema
         # (sorted data dirs, DataFrame) of the latest snapshot read; the
         # lock makes check-and-swap atomic for a reader and a writer
@@ -315,12 +317,25 @@ class ManagedTable:
     def _next_version(self) -> int:
         return self.latest_version() + 1 if self.exists() else 0
 
+    def _body(self, d: str, schema: T.StructType) -> dict:
+        """The manifest body (``_BODY``) of a write to ``d``: its
+        ``_pk=<key>`` subdirs and their footer row counts, keyed by
+        ``_part_key``, and ``schema``."""
+        body: dict = {"partitions": {}, "rows": {},
+                      "schema": schema.jsonValue()}
+        for sub in os.listdir(os.path.join(self.path, d)):
+            if sub.startswith(f"{_PK}="):
+                pk = _part_key(json.loads(unquote(sub[len(_PK) + 1:])))
+                body["partitions"][pk] = f"{d}/{sub}"
+                body["rows"][pk] = _dir_rows(os.path.join(self.path, d, sub))
+        return body
+
     def _write_partition_dirs(self, df: DataFrame) -> dict:
         """Write df in one rebalance and one write job, a ``_pk=<key>``
         subdir of one file per partition (see the module docstring),
         clustered if ``cluster_by`` is set. Returns
-        the manifest body (``_BODY``): subdirs and footer row counts keyed
-        by ``_part_key``, df's schema. A zero-row df writes no subdir."""
+        the manifest body (``_BODY``) with df's schema. A zero-row df
+        writes no subdir."""
         cols = [c for c in self.cluster_by if c in df.columns]
         d = f"data/{uuid.uuid4().hex[:16]}"
         # _PK leads the sort: the writer needs rows grouped by it, so it
@@ -329,14 +344,28 @@ class ManagedTable:
            .hint("rebalance", _PK)
            .sortWithinPartitions(_PK, *cols)
            .write.partitionBy(_PK).parquet(os.path.join(self.path, d)))
-        body: dict = {"partitions": {}, "rows": {},
-                      "schema": df.schema.jsonValue()}
-        for sub in os.listdir(os.path.join(self.path, d)):
-            if sub.startswith(f"{_PK}="):
-                pk = _part_key(json.loads(unquote(sub[len(_PK) + 1:])))
-                body["partitions"][pk] = f"{d}/{sub}"
-                body["rows"][pk] = _dir_rows(os.path.join(self.path, d, sub))
-        return body
+        return self._body(d, df.schema)
+
+    def _write_arrow(self, table: pa.Table, schema: T.StructType) -> dict:
+        """``_write_partition_dirs`` on the driver: ``table`` in one file
+        per ``_pk=<key>`` subdir, sorted by ``cluster_by``, with no Spark
+        job. Returns the manifest body with ``schema``."""
+        d = f"data/{uuid.uuid4().hex[:16]}"
+        os.makedirs(os.path.join(self.path, d))
+        # one chunk: the writer makes a row group, and a dictionary, of each
+        table = table.combine_chunks()
+        cols = [(c, "ascending") for c in self.cluster_by if c in schema.names]
+        if cols:
+            table = table.sort_by(cols)
+        # the JSON of a row's partition values, as _pk_col makes it (the
+        # same for strings, numbers and dates)
+        keys = [json.dumps(v, default=str)
+                for v in table.select(self.partition_by).to_pylist()]
+        ds.write_dataset(table.append_column(_PK, pa.array(keys, pa.string())),
+                         os.path.join(self.path, d), format="parquet",
+                         partitioning=[_PK], partitioning_flavor="hive",
+                         use_threads=False)  # keeps the rows in order
+        return self._body(d, schema)
 
     def _read_body(self, version: int) -> dict:
         m = self.commit_meta(version)
@@ -373,16 +402,47 @@ class ManagedTable:
         self._commit(self._next_version(), body,
                      {"op": "overwrite", **(meta or {})})
 
-    def append(self, df: DataFrame) -> None:
-        """Commit the latest snapshot plus ``df``'s rows at the version read
-        + 1, as ``merge`` does; creates on a missing table. ``df``'s rows
-        must be new: nothing is deduplicated."""
-        if not self.exists():
-            self.create(df)
-            return
-        version = self.latest_version()
-        body = self._write_partition_dirs(self.read(version).unionByName(df))
-        self._commit(version + 1, body, {"op": "append"})
+    def write_rows(self, rows: Sequence[dict], base: int | None,
+                   head: pa.Table | None = None) -> None:
+        """Commit ``head``'s rows, then ``rows``, as the whole table at
+        version ``base`` + 1 (0 for a ``base`` of None), written on the
+        driver with no Spark job: an append when ``head`` is given, else an
+        overwrite. ``base`` is the version the caller's rows derive from
+        (``read_arrow``), so a commit made since raises
+        ConcurrentModificationError instead of being overwritten.
+
+        The rows are dicts keyed by column name. They pass the checks
+        ``createDataFrame`` makes (a null in a non-nullable column, or a
+        value its type does not accept, raises before anything is written)
+        and convert as it converts them: a naive datetime is local time, an
+        aware one its instant. The schema is the declared one, else
+        ``base``'s."""
+        schema = (self.schema if self.schema is not None
+                  else _schema(self.commit_meta(base)))
+        verify = _make_type_verifier(schema)  # createDataFrame's row check
+        for r in rows:
+            verify(r)
+        arrow = to_arrow_schema(schema)
+        # pyarrow would take an aware datetime's wall clock as UTC and
+        # truncate 1.5 into a long: build the columns from Spark's internal
+        # values (epoch microseconds, days) instead
+        internal = [schema.toInternal(r) for r in rows]
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in internal], f.type)
+             for i, f in enumerate(arrow)], schema=arrow)
+        if head is not None:
+            table = pa.concat_tables([head.cast(arrow), table])
+        self._commit(0 if base is None else base + 1,
+                     self._write_arrow(table, schema),
+                     {"op": "overwrite" if head is None else "append"})
+
+    def append(self, rows: Sequence[dict]) -> None:
+        """Commit the latest version plus ``rows`` at the version read + 1,
+        as ``merge`` does, on the driver (``write_rows``); creates on a
+        missing table with a declared schema. ``rows`` must be new:
+        nothing is deduplicated."""
+        base, table = self.read_arrow()
+        self.write_rows(rows, base, head=table)
 
     def merge(self, source: DataFrame, keys: Sequence[str],
               dedup_source_order: Sequence[Column] | None = None) -> None:
@@ -481,16 +541,19 @@ class ManagedTable:
             if self._snapshot is not None and self._snapshot[0] == dirs:
                 return self._snapshot[1]
             df = self._scan(dirs, schema)
-            if version is not None:
-                return df
-            if self.cache:
-                df.cache()
-                if self._snapshot is not None:
-                    # a holder of the old snapshot recomputes it from its
-                    # immutable dirs
-                    self._snapshot[1].unpersist()
-            self._snapshot = (dirs, df)
+            if version is None:
+                self._snapshot = (dirs, df)
             return df
+
+    def read_arrow(self, filter: ds.Expression | None = None
+                   ) -> tuple[int | None, pa.Table]:
+        """The latest version and its rows (those matching ``filter``) as an
+        Arrow table, read on the driver with no Spark job; before the first
+        commit, None and an empty table of the declared schema. The version
+        is the ``base`` for a ``write_rows`` of rows derived from these."""
+        version = self.latest_version() if self.exists() else None
+        dirs, schema = self._resolve(version)
+        return version, self._dataset(dirs, schema).to_table(filter=filter)
 
     def read_where(self, col: str, lo=None, hi=None,
                    version: int | None = None) -> DataFrame:

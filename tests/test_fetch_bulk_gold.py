@@ -215,13 +215,13 @@ def test_concurrent_bulk_queue_conflicts_instead_of_losing_runs(spark,
     )
     other = StockLake(spark, bulk_lake.root)
     won: dict = {}
-    write = bulk_lake.runs._write_partition_dirs
+    write = bulk_lake.runs._write_arrow
 
-    def racy(df):
+    def racy(table, schema):
         won.update(queue_all_stocks(other, requested_by="b"))
-        return write(df)
+        return write(table, schema)
 
-    bulk_lake.runs._write_partition_dirs = racy
+    bulk_lake.runs._write_arrow = racy
     with pytest.raises(ConcurrentModificationError):
         queue_all_stocks(bulk_lake, requested_by="a")
 

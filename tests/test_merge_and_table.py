@@ -180,11 +180,19 @@ def test_vacuum_drops_old_versions(spark, tmp_table_dir):
     assert got == {"financials": 3.0, "metadata": 0.0}
 
 
-@pytest.mark.parametrize("write", [
-    lambda t, src: t.merge(src, ["ticker", "record_type", "period_end_date"]),
-    lambda t, src: t.append(src)], ids=["merge", "append"])
+def _dicts(rows):
+    return [dict(zip(["ticker", "record_type", "period_end_date", "revenue"],
+                     r)) for r in rows]
+
+
+@pytest.mark.parametrize("write, hook", [
+    (lambda t, rows: t.merge(df_of(t.spark, rows, SCHEMA),
+                             ["ticker", "record_type", "period_end_date"]),
+     "_write_partition_dirs"),
+    (lambda t, rows: t.append(_dicts(rows)), "_write_arrow")],
+    ids=["merge", "append"])
 def test_concurrent_writers_one_winner_one_conflict(spark, tmp_table_dir,
-                                                    write):
+                                                    write, hook):
     # two handles race from the same base version: the writer that commits
     # second must surface the conflict (reference: partial unique
     # constraint -> IntegrityError -> 409), never silently orphan the
@@ -196,18 +204,18 @@ def test_concurrent_writers_one_winner_one_conflict(spark, tmp_table_dir,
     t2 = ManagedTable(spark, tmp_table_dir)
     t1.create(df_of(spark, [("AAPL", "financials", "2024-03", 1.0)], SCHEMA))
 
-    src1 = df_of(spark, [("AAPL", "financials", "2024-06", 2.0)], SCHEMA)
-    src2 = df_of(spark, [("MSFT", "financials", "2024-06", 3.0)], SCHEMA)
+    src1 = [("AAPL", "financials", "2024-06", 2.0)]
+    src2 = [("MSFT", "financials", "2024-06", 3.0)]
 
     # interleave: while t1's write is mid-flight (after it read the base
     # version, before its commit), t2 commits the same next version
-    orig = t1._write_partition_dirs
+    orig = getattr(t1, hook)
 
-    def racy(df):
+    def racy(*args):
         write(t2, src2)
-        return orig(df)
+        return orig(*args)
 
-    t1._write_partition_dirs = racy
+    setattr(t1, hook, racy)
     with pytest.raises(ConcurrentModificationError):
         write(t1, src1)
 
@@ -476,11 +484,14 @@ def test_read_and_read_where_launch_no_job(spark, tmp_path, partition_by,
         .collect())) == 0
     assert sorted(r["record_type"] for r in got) == [
         "financials", "metadata", "ttm"]
-    # an append onto the snapshot read above is one rebalance and one
-    # write job: no dedup or per-key window shuffle
+    # an append of driver rows is written on the driver: no Spark job, and
+    # the partitions the Spark write keyed, one file each
     assert jobs_during(lambda: t.append(
-        df_of(spark, [("B", "ttm", "2024-06", 2.0)], SCHEMA))) == 2
+        _dicts([("B", "ttm", "2024-06", 2.0)]))) == 0
     assert t.latest_version() == 1 and t.read().count() == 4
+    assert set(t._read_manifest(1)) == set(t._read_manifest(0))
+    for d in t._read_manifest(1).values():
+        assert len(os.listdir(os.path.join(t.path, d))) == 1, d
 
 
 RANGE_SCHEMA = "ticker string, kind string, at timestamp, day date, px double"
@@ -663,13 +674,12 @@ def test_read_reuses_one_snapshot_per_commit(spark, tmp_path):
     assert t.read() is prev
 
 
-@pytest.mark.parametrize("cache", [False, True], ids=["plain", "cached"])
-def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path, cache):
+def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path):
     # dropped and re-created through the same instance, the table is at
     # version 0 again: its new dirs, not the version number, decide
     import shutil
     path = str(tmp_path / "again")
-    t = ManagedTable(spark, path, cache=cache)
+    t = ManagedTable(spark, path)
     t.create(df_of(spark, [("A", "metadata", None, 1.0)], SCHEMA))
     old = t.read()
     assert _rows(old) == [("A", 1.0)]
@@ -682,32 +692,13 @@ def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path, cache):
     assert _rows(new) == [("B", 2.0), ("C", 3.0)]
 
 
-def test_superseded_cached_snapshot_still_reads_its_version(spark, tmp_path):
-    # the next read() unpersists the snapshot it replaces; a caller still
-    # holding it recomputes that version from its immutable dirs
-    from pyspark import StorageLevel
-    t = ManagedTable(spark, str(tmp_path / "ctl"), cache=True)
-    t.create(df_of(spark, [("A", "metadata", None, 1.0)], SCHEMA))
-    held = t.read()
-    assert held.storageLevel != StorageLevel.NONE
-    assert _rows(held) == [("A", 1.0)]
-    t.overwrite(df_of(spark, [("B", "metadata", None, 2.0)], SCHEMA))
-    new = t.read()
-    assert held.storageLevel == StorageLevel.NONE
-    assert new.storageLevel != StorageLevel.NONE
-    assert _rows(held) == [("A", 1.0)]
-    assert _rows(new) == [("B", 2.0)]
-
-
 def test_concurrent_readers_share_one_snapshot_per_commit(spark, tmp_path):
     # after each commit, more reader threads than cores race on the slot
-    # miss: all must get the one cached snapshot, and the one it replaced
-    # must be unpersisted (a lost swap would leave an orphan cached)
+    # miss: all must get the one snapshot DataFrame of that commit
     import sys
     import threading
 
-    from pyspark import StorageLevel
-    t = ManagedTable(spark, str(tmp_path / "race"), cache=True)
+    t = ManagedTable(spark, str(tmp_path / "race"))
     t.create(df_of(spark, [("A", "metadata", None, 0.0)], SCHEMA))
     prev = t.read()
     n = 8
@@ -729,8 +720,6 @@ def test_concurrent_readers_share_one_snapshot_per_commit(spark, tmp_path):
                 assert not th.is_alive()
             assert len(got) == n and all(df is got[0] for df in got)
             assert got[0] is not prev
-            assert prev.storageLevel == StorageLevel.NONE
-            assert got[0].storageLevel != StorageLevel.NONE
             assert _rows(got[0]) == [("A", float(i))]
             prev = got[0]
     finally:

@@ -322,7 +322,7 @@ def test_list_runs_pages_stay_stable_under_inserts(spark, tmp_path):
     newer = _runs(TICKERS, 5, t0 + datetime.timedelta(hours=1))
     for r in newer:
         r["id"] = "new-" + r["id"]
-    lake.runs.append(spark.createDataFrame(newer, INGESTION_RUNS))
+    lake.runs.append(newer)
 
     p2 = list_runs(lake, page_size=10,
                    cursor=[p1[-1]["created_at"], p1[-1]["id"]]).collect()
