@@ -18,6 +18,7 @@ from stock_data_etl_pipeline_spark.operators.merge import (
 )
 from stock_data_etl_pipeline_spark.sources.managed_table import (
     ManagedTable,
+    SnapshotView,
     TableExistsError,
 )
 
@@ -674,21 +675,26 @@ def test_read_reuses_one_snapshot_per_commit(spark, tmp_path):
     assert t.read() is prev
 
 
-def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path):
+@pytest.mark.parametrize("cache", [False, True], ids=["plain", "cached"])
+def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path, cache):
     # dropped and re-created through the same instance, the table is at
-    # version 0 again: its new dirs, not the version number, decide
+    # version 0 again: its new dirs, not the version number, decide, both
+    # for the table's snapshot slot and for a driver-held view over it
     import shutil
     path = str(tmp_path / "again")
     t = ManagedTable(spark, path)
+    view = SnapshotView(t.read, [t])
+    read = view.read if cache else t.read
     t.create(df_of(spark, [("A", "metadata", None, 1.0)], SCHEMA))
-    old = t.read()
+    old = read()
     assert _rows(old) == [("A", 1.0)]
     shutil.rmtree(path)
     t.create(df_of(spark, [("B", "metadata", None, 2.0),
                            ("C", "metadata", None, 3.0)], SCHEMA))
     assert t.latest_version() == 0
-    new = t.read()
+    new = read()
     assert new is not old
+    assert view.builds == (2 if cache else 0)
     assert _rows(new) == [("B", 2.0), ("C", 3.0)]
 
 
