@@ -12,11 +12,11 @@ from .dedup import (  # noqa: F401
 )
 from .filters import apply_filters, compile_filter  # noqa: F401
 from .joins import anti_join, fk_join, null_safe_key_condition, semi_join  # noqa: F401
-from .merge import merge_if_changed, merge_insert_only, merge_upsert  # noqa: F401
+from .merge import merge_upsert  # noqa: F401
 from .pagination import keyset_page  # noqa: F401
 from .similarity import brute_force_topk, ivf_topk, lsh_topk  # noqa: F401
 from .skew import salted_join  # noqa: F401
-from .windows import first_row_per_group, latest_per_group, top_k_per_group  # noqa: F401
+from .windows import latest_per_group, top_k_per_group  # noqa: F401
 from .clustering import cluster_near_dups, kmeans_lite  # noqa: F401
 from .corpus import (  # noqa: F401
     bigram_counts,

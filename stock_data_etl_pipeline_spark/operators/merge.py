@@ -3,8 +3,7 @@
 Parity target: the reference's Delta MERGE into the unified stocks table —
 ``when_matched_update_all().when_not_matched_insert_all()`` on the null-safe
 composite key (ticker, record_type, period_end_date)
-(/root/reference/services/workers/tasks/queue_for_delta.py:736-767), plus the
-changed-fields-only guarded update of M4 (update_stock_metadata.py:292-469).
+(services/workers/tasks/queue_for_delta.py:736-767).
 
 Delta would run this as one DeltaTable.merge call; here the result
 relation is computed with a union + per-key window (source wins):
@@ -97,45 +96,6 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: Sequence[str],
               .unionByName(source.withColumn(marker, F.lit(1))))
     return latest_per_group(tagged, list(keys),
                             [F.col(marker).desc()]).drop(marker)
-
-
-def merge_insert_only(target: DataFrame, source: DataFrame,
-                      keys: Sequence[str]) -> DataFrame:
-    """WHEN NOT MATCHED INSERT (no update of matched keys) — the reference's
-    atomic get_or_create for dimension rows (M1, stock_ingestion_service
-    .py:142-160): existing keys keep their target row, new keys append."""
-    target, source = align_schemas(target, source)
-    source = source.dropDuplicates(list(keys))
-    marker = "_is_source"
-    tagged = (target.withColumn(marker, F.lit(0))
-              .unionByName(source.withColumn(marker, F.lit(1))))
-    # ascending marker: the TARGET row wins when both sides have the key
-    return latest_per_group(tagged, list(keys),
-                            [F.col(marker).asc()]).drop(marker)
-
-
-def merge_if_changed(target: DataFrame, source: DataFrame, keys: Sequence[str],
-                     compare_cols: Sequence[str]) -> DataFrame:
-    """M4 semantics: update a matched key only when at least one of
-    ``compare_cols`` actually differs (null-safely). Unmatched source keys
-    insert. The relation equals merge_upsert's; the point of the guard is
-    write amplification — the managed-table layer uses the changed-row set
-    to skip rewriting untouched files, like the reference skips Stock.save()
-    to avoid spurious cache invalidation."""
-    target, source = align_schemas(target, source)
-    source = source.dropDuplicates(list(keys))
-    t, s = target.alias("t"), source.alias("s")
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-    changed = F.lit(False)
-    for c in compare_cols:
-        changed = changed | ~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-    # source rows that are matched-and-different, or brand new
-    matched_diff = (s.join(t, cond, "inner").filter(changed)
-                    .select([F.col(f"s.{c}") for c in source.columns]))
-    new_rows = s.join(t, cond, "left_anti")
-    return merge_upsert(target, matched_diff.unionByName(new_rows), keys)
 
 
 def scd2_merge(dim: DataFrame, updates: DataFrame, keys: Sequence[str],

@@ -3,7 +3,6 @@
 Parity targets (reference, /root/reference/):
 - W1 latest run per stock: services/api/models.py:247-279
 - W2 latest DONE run per stock: models.py:291-298
-- W3 first-row dedup pick: services/workers/tasks/update_stock_metadata.py:247-254
 - top-K per group generalizes the keyset page-1 pattern.
 
 Scale notes: row_number over partitionBy(keys) is a single hash shuffle on
@@ -46,13 +45,6 @@ def top_k_per_group(df: DataFrame, keys: Sequence[str],
     w = Window.partitionBy(*keys).orderBy(*_cols(order))
     return (df.withColumn(rank_col, F.row_number().over(w))
               .filter(F.col(rank_col) <= k))
-
-
-def first_row_per_group(df: DataFrame, keys: Sequence[str],
-                        tiebreaker: Sequence[str | Column]) -> DataFrame:
-    """Arbitrary-but-deterministic single row per group (reference W3:
-    'take row(0), warn if more than one')."""
-    return latest_per_group(df, keys, tiebreaker)
 
 
 def distributed_ntile(df: DataFrame, n: int, order: Sequence[str | Column],

@@ -52,8 +52,13 @@ from ..schemas import (
     STOCK_METADATA_FIELDS,
     STOCKS,
 )
-from ..sources.managed_table import ManagedTable, SnapshotView
+from ..sources.managed_table import (
+    ConcurrentModificationError,
+    ManagedTable,
+    SnapshotView,
+)
 from ..state_machine import IngestionState, advance, is_terminal_col, new_run_row
+from .retry import with_retry
 from .stock_transform import transform_stock_json
 
 
@@ -169,22 +174,29 @@ class StockLake:
         models.py:83-92), both matched under ``key_of``: ``key_of(name)``
         -> id of every row, after adding each new non-blank name (first
         spelling wins). One Arrow read on the driver; appends only when a
-        name is new."""
-        _, dims = tbl.read_arrow()
-        ids = dict(zip(map(key_of, dims["name"].to_pylist()),
-                       dims["id"].to_pylist()))
-        new: dict[str, str] = {}
-        for n in names:
-            if n is not None and n.strip() and key_of(n) not in ids:
-                new.setdefault(key_of(n), key_of(n) if normalize else n.strip())
-        if new:
-            ts = _now()
-            fresh = [{"id": str(uuid.uuid4()), "name": stored,
-                      "created_at": ts, "updated_at": ts}
-                     for stored in new.values()]
-            tbl.append(fresh)
-            ids.update((k, row["id"]) for k, row in zip(new, fresh))
-        return ids
+        name is new, at the version read. A commit made since raises, and
+        the lookup runs again, as the reference gets again after an
+        IntegrityError, so two handles never commit one name twice."""
+        def once() -> dict[str, str]:
+            base, dims = tbl.read_arrow()
+            ids = dict(zip(map(key_of, dims["name"].to_pylist()),
+                           dims["id"].to_pylist()))
+            new: dict[str, str] = {}
+            for n in names:
+                if n is not None and n.strip() and key_of(n) not in ids:
+                    new.setdefault(key_of(n),
+                                   key_of(n) if normalize else n.strip())
+            if new:
+                ts = _now()
+                fresh = [{"id": str(uuid.uuid4()), "name": stored,
+                          "created_at": ts, "updated_at": ts}
+                         for stored in new.values()]
+                tbl.write_rows(fresh, base, head=dims)
+                ids.update((k, row["id"]) for k, row in zip(new, fresh))
+            return ids
+
+        return with_retry(once, backoff_base=0,
+                          retry_on=(ConcurrentModificationError,))
 
     def _active_run_ids(self, tickers: list[str]) -> dict[str, str]:
         """ticker -> id of an existing non-terminal run — the reference's

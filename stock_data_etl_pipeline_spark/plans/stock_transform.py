@@ -32,12 +32,12 @@ EXCLUDED_METRICS = ("roic_5yr_avg",)
 PERIOD_KEY = "period_end_date"
 
 
-def parse_raw(df: DataFrame, json_col: str = "json_str") -> DataFrame:
-    """S4: parse + structural validation. Adds `doc` (typed struct) and
-    `is_valid` (payload is a JSON object with a 'data' object inside —
-    queue_for_delta.py:463-470). Invalid docs keep their raw string for
-    error reporting."""
-    parsed = df.withColumn("doc", F.from_json(F.col(json_col), RAW_STOCK_JSON))
+def parse_raw(df: DataFrame) -> DataFrame:
+    """S4: parse + structural validation of the ``json_str`` column. Adds
+    `doc` (typed struct) and `is_valid` (payload is a JSON object with a
+    'data' object inside — queue_for_delta.py:463-470). Invalid docs keep
+    their raw string for error reporting."""
+    parsed = df.withColumn("doc", F.from_json(F.col("json_str"), RAW_STOCK_JSON))
     # from_json yields null struct for malformed JSON; a JSON scalar/array
     # or an object without 'data' yields a null 'data' field.
     return parsed.withColumn("is_valid", F.col("doc.data").isNotNull())
@@ -63,11 +63,11 @@ def _discover_keys(parsed: DataFrame) -> tuple[list[str], list[str], list[str]]:
     return q, t, m
 
 
-def transform_stock_json(raw: DataFrame, ticker_col: str = "ticker",
-                         json_col: str = "json_str") -> DataFrame:
+def transform_stock_json(raw: DataFrame) -> DataFrame:
     """Transform a batch of raw documents into unified wide rows.
 
-    ``raw``: one row per (ticker, document). Returns the silver relation:
+    ``raw``: one row per document, in columns ``ticker`` and ``json_str``
+    (the bronze layout). Returns the silver relation:
     key columns (ticker, record_type, period_end_date) + a dynamic set of
     metric columns (double) and metadata columns (string).
 
@@ -75,11 +75,11 @@ def transform_stock_json(raw: DataFrame, ticker_col: str = "ticker",
     everything is per-document (narrow) until the caller's merge, so the
     transform itself never shuffles the fact data.
     """
-    parsed = parse_raw(raw, json_col).filter(F.col("is_valid"))
+    parsed = parse_raw(raw).filter(F.col("is_valid"))
     q_metrics, t_metrics, m_fields = _discover_keys(parsed)
     metrics = sorted(set(q_metrics) | set(t_metrics))
 
-    tick = normalize_key(F.col(ticker_col))
+    tick = normalize_key(F.col("ticker"))
     quarterly = F.col("doc.data.financials.quarterly")
     ttm = F.col("doc.data.financials.ttm")
     meta = F.col("doc.data.metadata")

@@ -107,4 +107,3 @@ BRONZE = _S([_F("ticker", T.StringType(), True),
              _F("json_str", T.StringType(), True)])
 
 SILVER_KEY_COLUMNS = ["ticker", "record_type", "period_end_date"]
-RECORD_TYPES = ("financials", "metadata", "ttm")

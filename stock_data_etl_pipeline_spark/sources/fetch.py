@@ -77,10 +77,9 @@ def classify(status_code: int | None, body: str | None) -> str | None:
     return None
 
 
-def fetch_tickers(tickers: DataFrame, transport: Transport,
-                  ticker_col: str = "ticker") -> DataFrame:
-    """Fetch one document per ticker, executor-side, Arrow-batched.
-    Output: FETCH_RESULT_SCHEMA; error_code NULL on success.
+def fetch_tickers(tickers: DataFrame, transport: Transport) -> DataFrame:
+    """Fetch one document per ``ticker`` of ``tickers``, executor-side,
+    Arrow-batched. Output: FETCH_RESULT_SCHEMA; error_code NULL on success.
 
     Scale: repartition the ticker list to bound per-executor concurrency
     (the reference caps fetch workers at 2; here partition count is the
@@ -90,7 +89,7 @@ def fetch_tickers(tickers: DataFrame, transport: Transport,
         for pdf in batches:
             out = {"ticker": [], "status_code": [], "error_code": [],
                    "json_str": []}
-            for t in pdf[ticker_col]:
+            for t in pdf["ticker"]:
                 code: int | None
                 try:
                     code, body = transport(t)
@@ -103,4 +102,4 @@ def fetch_tickers(tickers: DataFrame, transport: Transport,
                 out["json_str"].append(body if err is None else None)
             yield pd.DataFrame(out)
 
-    return tickers.select(ticker_col).mapInPandas(op, FETCH_RESULT_SCHEMA)
+    return tickers.select("ticker").mapInPandas(op, FETCH_RESULT_SCHEMA)

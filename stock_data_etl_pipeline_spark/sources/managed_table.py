@@ -6,7 +6,7 @@ surface of a Delta table on plain parquet; nothing branches on
 happens to be installed:
 
     tbl = ManagedTable(spark, path, partition_by=["record_type"])
-    tbl.create(df)                      # mode=error first write (S5)
+    tbl.create(df)                      # first write; raises if it exists (S5)
     tbl.merge(batch, keys=[...])        # null-safe upsert (S6/J4/M6)
     tbl.read()                          # latest snapshot, pushdown-able (S7)
     tbl.read(version=3)                 # time travel
@@ -383,13 +383,11 @@ class ManagedTable:
         self._commit(version + 1, self._write_partition_dirs(table),
                      {"op": "optimize"})
 
-    def create(self, df: DataFrame, mode: str = "error") -> None:
-        """First write. mode='error' mirrors delta-rs mode=error (S5)."""
+    def create(self, df: DataFrame) -> None:
+        """First write; raises TableExistsError on an existing table, as
+        delta-rs mode=error does (S5)."""
         if self.exists():
-            if mode == "error":
-                raise TableExistsError(self.path)
-            if mode == "ignore":
-                return
+            raise TableExistsError(self.path)
         self._commit(self._next_version(), self._write_partition_dirs(df),
                      {"op": "create"})
 
@@ -444,8 +442,7 @@ class ManagedTable:
         base, table = self.read_arrow()
         self.write_rows(rows, base, head=table)
 
-    def merge(self, source: DataFrame, keys: Sequence[str],
-              dedup_source_order: Sequence[Column] | None = None) -> None:
+    def merge(self, source: DataFrame, keys: Sequence[str]) -> None:
         """Null-safe update_all/insert_all upsert; creates on first call.
 
         Only partitions present in the source are read (with the full
@@ -459,8 +456,7 @@ class ManagedTable:
         needs every dir of a version to agree with the manifest schema.
         """
         if not self.exists():
-            self.create(source if dedup_source_order is None
-                        else source.dropDuplicates(list(keys)))
+            self.create(source)
             return
         version = self.latest_version()
         old = self._read_body(version)
@@ -482,7 +478,7 @@ class ManagedTable:
 
         def merged_over(pks) -> DataFrame:
             target = self._scan(sorted(parts[pk] for pk in pks), schema)
-            return merge_upsert(target, source, keys, dedup_source_order)
+            return merge_upsert(target, source, keys)
 
         merged = merged_over(pk for pk in parts if pk not in keep)
         if keep and _retypes(schema, merged.schema):

@@ -127,6 +127,30 @@ def test_two_queues_never_queue_a_stock_twice(spark, queued_lake,
     assert [r["id"] for r in queued_lake.bulk_runs.read().collect()] == [b]
 
 
+def test_two_handles_never_commit_one_dim_name_twice(spark, tmp_path):
+    # handle B adds "nasdaq" after handle A's lookup read the exchanges and
+    # before A commits "NASDAQ": A's commit must raise and A look up again,
+    # so the table holds one row and both handles get its id
+    lake = StockLake(spark, str(tmp_path / "lake"))
+    other = StockLake(spark, lake.root)
+    won: dict = {}
+    read = lake.exchanges.read_arrow
+
+    def racy(*args, **kwargs):
+        got = read(*args, **kwargs)
+        if not won:  # once: after A's first lookup read
+            won.update(other.get_or_create_dim(other.exchanges, ["nasdaq"],
+                                               normalize=True))
+        return got
+
+    lake.exchanges.read_arrow = racy
+    got = lake.get_or_create_dim(lake.exchanges, ["NASDAQ"], normalize=True)
+
+    rows = lake.exchanges.read().collect()
+    assert [r["name"] for r in rows] == ["NASDAQ"]
+    assert got == won == {"NASDAQ": rows[0]["id"]}
+
+
 def test_driver_write_rejects_what_create_dataframe_rejects(queued_lake):
     # pyarrow alone would store a null id and truncate 1.5 to 1; the write
     # raises before any data dir or manifest is written

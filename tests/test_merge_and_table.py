@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 
 from stock_data_etl_pipeline_spark.operators.merge import (
     align_schemas,
-    merge_if_changed,
-    merge_insert_only,
     merge_upsert,
 )
 from stock_data_etl_pipeline_spark.sources.managed_table import (
@@ -78,24 +76,6 @@ def test_source_dedup_last_writer_wins(spark):
                        dedup_source_order=[F.col("revenue").desc()])
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["revenue"] == 2.0
-
-
-def test_merge_insert_only_keeps_target(spark):
-    target = df_of(spark, [("A", "x", "p", 1.0)], SCHEMA)
-    source = df_of(spark, [("A", "x", "p", 99.0), ("B", "x", "p", 2.0)], SCHEMA)
-    out = merge_insert_only(target, source, ["ticker"])
-    got = {r["ticker"]: r["revenue"] for r in out.collect()}
-    assert got == {"A": 1.0, "B": 2.0}
-
-
-def test_merge_if_changed_equals_upsert_relation(spark):
-    target = df_of(spark, [("A", "x", "p", 1.0), ("B", "x", "p", 2.0)], SCHEMA)
-    source = df_of(spark, [("A", "x", "p", 1.0),   # unchanged
-                           ("B", "x", "p", 20.0),  # changed
-                           ("C", "x", "p", 3.0)], SCHEMA)  # new
-    out = merge_if_changed(target, source, ["ticker"], ["revenue"])
-    got = {r["ticker"]: r["revenue"] for r in out.collect()}
-    assert got == {"A": 1.0, "B": 20.0, "C": 3.0}
 
 
 def test_align_schemas_types(spark):
@@ -698,38 +678,64 @@ def test_recreated_table_never_hits_the_old_snapshot(spark, tmp_path, cache):
     assert _rows(new) == [("B", 2.0), ("C", 3.0)]
 
 
-def test_concurrent_readers_share_one_snapshot_per_commit(spark, tmp_path):
-    # after each commit, more reader threads than cores race on the slot
-    # miss: all must get the one snapshot DataFrame of that commit
+def _read_at_once(read, n: int = 8) -> list:
+    """``read()`` from ``n`` threads released together by a barrier, with
+    a tiny switch interval so they interleave inside it; their results."""
     import sys
     import threading
 
-    t = ManagedTable(spark, str(tmp_path / "race"))
-    t.create(df_of(spark, [("A", "metadata", None, 0.0)], SCHEMA))
-    prev = t.read()
-    n = 8
+    barrier, got = threading.Barrier(n), []
+
+    def reader():
+        barrier.wait(timeout=30)
+        got.append(read())
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        for i in range(1, 4):
-            t.overwrite(df_of(spark, [("A", "metadata", None, float(i))], SCHEMA))
-            barrier, got = threading.Barrier(n), []
-
-            def reader():
-                barrier.wait(timeout=30)
-                got.append(t.read())
-            threads = [threading.Thread(target=reader) for _ in range(n)]
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join(timeout=60)
-                assert not th.is_alive()
-            assert len(got) == n and all(df is got[0] for df in got)
-            assert got[0] is not prev
-            assert _rows(got[0]) == [("A", float(i))]
-            prev = got[0]
+        threads = [threading.Thread(target=reader) for _ in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+            assert not th.is_alive()
     finally:
         sys.setswitchinterval(interval)
+    assert len(got) == n
+    return got
+
+
+def test_concurrent_readers_share_one_snapshot_per_commit(spark, tmp_path):
+    # after each commit, more reader threads than cores race on the slot
+    # miss: all must get the one snapshot DataFrame of that commit
+    t = ManagedTable(spark, str(tmp_path / "race"))
+    t.create(df_of(spark, [("A", "metadata", None, 0.0)], SCHEMA))
+    prev = t.read()
+    for i in range(1, 4):
+        t.overwrite(df_of(spark, [("A", "metadata", None, float(i))], SCHEMA))
+        got = _read_at_once(t.read)
+        assert all(df is got[0] for df in got)
+        assert got[0] is not prev
+        assert _rows(got[0]) == [("A", float(i))]
+        prev = got[0]
+
+
+def test_concurrent_view_readers_share_one_build_per_commit(spark, tmp_path):
+    # the same race on a driver-held view over a table: after each commit,
+    # the readers must all get one DataFrame, built once
+    t = ManagedTable(spark, str(tmp_path / "race"))
+    t.create(df_of(spark, [("A", "metadata", None, 0.0)], SCHEMA))
+    view = SnapshotView(t.read, [t])
+    prev = view.read()
+    for i in range(1, 4):
+        t.overwrite(df_of(spark, [("A", "metadata", None, float(i))], SCHEMA))
+        builds = view.builds
+        got = _read_at_once(view.read)
+        assert all(df is got[0] for df in got)
+        assert got[0] is not prev
+        assert view.builds == builds + 1
+        assert _rows(got[0]) == [("A", float(i))]
+        prev = got[0]
+
 
 def test_diff_of_a_reused_snapshot_with_itself_is_empty(spark, tmp_path):
     # diff(v, v) joins one DataFrame object with itself: the self-join
