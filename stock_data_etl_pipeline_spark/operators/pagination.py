@@ -9,14 +9,13 @@ range predicate + a small top-K sort. The predicate compares structs,
 which parquet cannot take as a pushed filter: it runs on the scanned rows,
 and the top-K still needs no shuffle of the whole relation.
 
-Both ways of paging share one step, ``page_after``: the rows strictly after
-the cursor, limited, taken from rows that are already in the page's order.
 ``keyset_page`` sorts (the optimizer pushes the cursor filter below the
-sort and plans the sort plus limit as one top-K) and then takes that step.
-A caller that holds its rows in the order already, such as the runs list's
-driver-held view, takes the step directly: with no sort, the optimizer
-folds the filter and the limit into a local relation's rows, and the page
-launches no Spark job.
+sort and plans the sort plus limit as one top-K), filters the rows
+strictly after the cursor and limits. A caller that holds its rows on the
+driver as an Arrow table already in the page's order, such as the runs
+list's view, takes the same page with no Spark plan: ``arrow_after_cursor``
+is the cursor predicate as an Arrow expression, ANDed with its filters,
+and ``get_page_size`` the slice it takes of the filtered rows.
 
 Cursor = the (order columns..., tiebreaker) tuple of the last row of the
 previous page. The predicate is the row-wise "strictly after cursor"
@@ -44,9 +43,12 @@ import json
 from collections.abc import Sequence
 from typing import Any
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .filters import arrow_scalar
 
 DEFAULT_PAGE_SIZE = 50
 MAX_PAGE_SIZE = 100
@@ -117,7 +119,7 @@ def _fits(dt: T.DataType, v: Any) -> bool:
     return True
 
 
-def _cursor_values(df: DataFrame, order: Sequence[tuple[str, bool]],
+def _cursor_values(schema: T.StructType, order: Sequence[tuple[str, bool]],
                    cursor: Sequence[Any] | str) -> list[Any]:
     """``cursor`` as one value per ``order`` column, each null or of a
     Python type that its column's Spark type takes; a token is decoded
@@ -127,14 +129,14 @@ def _cursor_values(df: DataFrame, order: Sequence[tuple[str, bool]],
         raise InvalidCursorError(
             f"cursor holds {len(values)} values; the order has {len(order)}")
     for (col, _), v in zip(order, values):
-        dt = df.schema[col].dataType
+        dt = schema[col].dataType
         if v is not None and not _fits(dt, v):
             raise InvalidCursorError(
                 f"cursor value {v!r} does not fit {col} {dt.simpleString()}")
     return values
 
 
-def _page_size(page_size: Any) -> int:
+def get_page_size(page_size: Any) -> int:
     """DRF's ``get_page_size``: a positive integer capped at MAX_PAGE_SIZE;
     anything else reads as DEFAULT_PAGE_SIZE."""
     try:
@@ -144,7 +146,7 @@ def _page_size(page_size: Any) -> int:
     return min(n, MAX_PAGE_SIZE) if n > 0 else DEFAULT_PAGE_SIZE
 
 
-def _after_cursor(df: DataFrame, order: Sequence[tuple[str, bool]],
+def _after_cursor(schema: T.StructType, order: Sequence[tuple[str, bool]],
                   cursor: Sequence[Any]) -> Column:
     """Lexicographic 'row comes strictly after cursor' predicate.
     ``order`` is [(column, descending)].
@@ -161,7 +163,7 @@ def _after_cursor(df: DataFrame, order: Sequence[tuple[str, bool]],
     for i in range(len(order) - 1, -1, -1):
         col, desc = order[i]
         c = F.struct(F.col(col).alias("v"))
-        v = F.struct(F.lit(cursor[i]).cast(df.schema[col].dataType).alias("v"))
+        v = F.struct(F.lit(cursor[i]).cast(schema[col].dataType).alias("v"))
         strict = (c < v) if desc else (c > v)
         pred = strict | ((c == v) & pred)
     return pred
@@ -172,17 +174,31 @@ def sort_columns(order: Sequence[tuple[str, bool]]) -> list[Column]:
     return [F.col(c).desc() if d else F.col(c).asc() for c, d in order]
 
 
-def page_after(df: DataFrame, order: Sequence[tuple[str, bool]],
-               cursor: Sequence[Any] | str | None = None,
-               page_size: int = DEFAULT_PAGE_SIZE) -> DataFrame:
-    """The step every page takes: the first ``page_size`` rows of ``df``
-    strictly after ``cursor`` in ``order``. ``df`` must already be in
-    ``order``; this step filters and limits, and never sorts. ``cursor``
-    is checked on the driver before the filter is built."""
-    if cursor is not None:
-        df = df.filter(_after_cursor(df, order,
-                                     _cursor_values(df, order, cursor)))
-    return df.limit(_page_size(page_size))
+def arrow_after_cursor(schema: T.StructType,
+                       order: Sequence[tuple[str, bool]],
+                       cursor: Sequence[Any] | str) -> pc.Expression:
+    """``_after_cursor`` as an Arrow expression over columns of
+    ``schema``, for a page of driver-held rows. ``cursor`` is checked as
+    ``keyset_page`` checks it, and its values convert as ``F.lit``
+    converts them (``filters.arrow_scalar``). A null compares as a struct
+    field does: below every value and equal to a null, so the predicate
+    agrees with ``orderBy``'s null order. A null comparison result stands
+    for false, which Kleene AND and OR keep. A float NaN orders as an
+    Arrow comparison orders it, not above every number as in Spark: the
+    repo pages on timestamps and strings only."""
+    values = _cursor_values(schema, order, cursor)
+    pred = pc.scalar(False)
+    for (col, desc), value in reversed(list(zip(order, values))):
+        x = pc.field(col)
+        v = arrow_scalar(schema[col], value)
+        if not v.is_valid:
+            strict, equal = (pc.scalar(False) if desc else x.is_valid(),
+                             x.is_null())
+        else:
+            strict, equal = ((x.is_null() | (x < v)) if desc else x > v,
+                             x == v)
+        pred = strict | (equal & pred)
+    return pred
 
 
 def keyset_page(df: DataFrame, order: Sequence[tuple[str, bool]],
@@ -196,13 +212,18 @@ def keyset_page(df: DataFrame, order: Sequence[tuple[str, bool]],
     (created_at, id) ordering.
 
     ``cursor`` may be the raw value tuple or an opaque ``encode_cursor``
-    token. ``reverse=True`` returns the page_size rows strictly BEFORE the
-    cursor (backward paging), still emitted in the base ordering — the
-    sort and ``page_after`` run in the flipped ordering, then only the k
-    returned rows re-sort.
+    token, checked on the driver before the filter is built.
+    ``reverse=True`` returns the page_size rows strictly BEFORE the cursor
+    (backward paging), still emitted in the base ordering — the sort, the
+    cursor filter and the limit run in the flipped ordering, then only the
+    k returned rows re-sort.
     """
     eff = [(c, not d) for c, d in order] if reverse else list(order)
-    page = page_after(df.orderBy(*sort_columns(eff)), eff, cursor, page_size)
+    page = df.orderBy(*sort_columns(eff))
+    if cursor is not None:
+        page = page.filter(_after_cursor(
+            df.schema, eff, _cursor_values(df.schema, eff, cursor)))
+    page = page.limit(get_page_size(page_size))
     if reverse:
         page = page.orderBy(*sort_columns(order))
     return page

@@ -34,10 +34,13 @@ import os
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.normalize import key_of
 from ..operators.pagination import sort_columns
@@ -56,14 +59,18 @@ from ..sources.managed_table import (
     ConcurrentModificationError,
     ManagedTable,
     SnapshotView,
+    driver_local,
 )
-from ..state_machine import IngestionState, advance, is_terminal_col, new_run_row
+from ..state_machine import IngestionState, advance, new_run_row
 from .retry import with_retry
 from .stock_transform import transform_stock_json
 
 
 # the runs list's order (paginator.py:24-29), ties broken by the larger id
 RUN_ORDER = [("created_at", True), ("id", True)]
+# a runs list row: the run and its P7 is_terminal flag (models.py:281-289)
+RUNS_VIEW = T.StructType(INGESTION_RUNS.fields + [
+    T.StructField("is_terminal_flag", T.BooleanType(), False)])
 
 
 def _now() -> datetime:
@@ -101,16 +108,18 @@ class StockLake:
         # the small derived views the API serves, held on the driver and
         # rebuilt when a table they read commits (SnapshotView): every
         # stock with its exchange and sector names joined in
-        # (serializers.py:85-101), each ticker's newest run and newest
+        # (serializers.py:85-101) and each ticker's newest run and newest
         # DONE run (W1/W2, models.py:247-298), ties broken by the larger id,
-        # and every run in the runs list's order (the reference's index on
-        # -created_at), so a list page only filters and limits
+        # as local relations; and every run as an Arrow table in the runs
+        # list's order (the reference's index on -created_at), so a list
+        # page or a raw JSON lookup only filters and slices it
         self.stock_details = SnapshotView(
-            self._join_stock_details, [self.stocks, self.exchanges, self.sectors])
-        self.latest_runs = SnapshotView(lambda: self._latest_runs(False),
-                                        [self.runs])
-        self.latest_done_runs = SnapshotView(lambda: self._latest_runs(True),
-                                             [self.runs])
+            lambda: driver_local(self._join_stock_details()),
+            [self.stocks, self.exchanges, self.sectors])
+        self.latest_runs = SnapshotView(
+            lambda: driver_local(self._latest_runs(False)), [self.runs])
+        self.latest_done_runs = SnapshotView(
+            lambda: driver_local(self._latest_runs(True)), [self.runs])
         self.runs_by_recency = SnapshotView(self._runs_by_recency, [self.runs])
 
     # -- control-plane helpers ---------------------------------------------
@@ -134,14 +143,18 @@ class StockLake:
             runs = runs.filter(F.col("state") == IngestionState.DONE)
         return latest_per_group(runs, ["ticker"], sort_columns(RUN_ORDER))
 
-    def _runs_by_recency(self) -> DataFrame:
-        # every row ends on the driver anyway: one task sorts them, with no
-        # range-partition sampling job and no shuffle, which halves the
-        # rebuild each runs commit causes
-        return (self.read_runs()
-                .withColumn("is_terminal_flag", is_terminal_col(F.col("state")))
-                .coalesce(1)
-                .sortWithinPartitions(*sort_columns(RUN_ORDER)))
+    def _runs_by_recency(self) -> pa.Table:
+        """Every run as RUNS_VIEW rows, sorted by RUN_ORDER on the driver
+        with no Spark job. Both keys descend, so nulls go last, where
+        Spark's ``desc`` puts them; strings sort by their UTF-8 bytes in
+        both engines."""
+        _, runs = self.runs.read_arrow()
+        runs = runs.take(pc.sort_indices(
+            runs, sort_keys=[(c, "descending") for c, _ in RUN_ORDER],
+            null_placement="at_end"))
+        return runs.append_column(
+            "is_terminal_flag",
+            pc.is_in(runs["state"], value_set=pa.array(IngestionState.TERMINAL)))
 
     def _stock_rows(self, tickers: list[str]
                     ) -> tuple[int | None, dict[str, dict], bool]:
@@ -360,18 +373,21 @@ class StockLake:
         (reference views/stocks.py:134-353: latest DONE run -> S3 get ->
         validate JSON -> passthrough). Returns None when the ticker has no
         DONE run; raises ValueError when the stored payload is not valid
-        JSON (the reference's 502-corrupt-object path). No Spark job: the
-        run comes from the driver-held ``latest_done_runs`` view, and its
-        document from one pyarrow read of its bronze dir on the driver,
-        filtered to the run's id and ticker (the reference's one S3 GET)."""
+        JSON (the reference's 502-corrupt-object path). No Spark job and no
+        Spark plan: the run is the first DONE row of the ticker in the
+        driver-held ``runs_by_recency`` Arrow table, which is in list
+        order, and its document one pyarrow read of its bronze dir on the
+        driver, filtered to the run's id and ticker (the reference's one
+        S3 GET)."""
         import json as _json
 
         t = key_of(ticker)
-        latest = (self.latest_done_runs.read().filter(F.col("ticker") == t)
-                  .select("id", "raw_data_uri").collect())
-        if not latest:
+        done = self.runs_by_recency.read().filter(
+            (pc.field("ticker") == t)
+            & (pc.field("state") == IngestionState.DONE))
+        if not done.num_rows:
             return None
-        run = latest[0]
+        run = done.slice(0, 1).to_pylist()[0]
         raw = pq.read_table(run["raw_data_uri"], columns=["json_str"],
                             filters=[("run_id", "==", run["id"]),
                                      ("ticker", "==", t)])

@@ -10,12 +10,18 @@ Reference shape (/root/reference/services/api/):
          zero-filled, 300 s TTL cache (views/bulk_queue_runs.py:63-158)
 
 Every read here is served from a small view the lake holds on the
-driver, rebuilt only when a table it reads commits (``SnapshotView``): the
-runs already in list order, the stocks-exchanges-sectors join, and the
-latest run per ticker. A filter, a cursor predicate or a limit over such a
-view folds into its local rows, so these reads launch no Spark job, as the
-reference answers a list page from an index on ``-created_at`` and a
-detail from one indexed row.
+driver, rebuilt only when a table it reads commits (``SnapshotView``).
+The runs list pages an Arrow table of every run already in list order:
+its filters and keyset cursor compile to one Arrow expression
+(``operators.filters.compile_arrow_filter``,
+``operators.pagination.arrow_after_cursor``), and the page is the first
+rows that match it, handed to Spark as a local relation of at most 100
+rows, so a page builds no Catalyst plan over the runs and launches no
+Spark job, as the reference answers a list page from an index on
+``-created_at``. Stock detail and the latest run filter local relations
+(the stocks-exchanges-sectors join, the latest run per ticker); the
+optimizer folds the filter into their rows, so they launch no job either,
+as the reference answers a detail from one indexed row.
 
 The silver range read, ``lake.silver.read_where(col, lo, hi)``, has no
 view: it reads the range of the latest commit on every call, on the
@@ -33,28 +39,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import key_of
-from ..operators.filters import apply_filters
-from ..operators.pagination import DEFAULT_PAGE_SIZE, page_after
-from ..state_machine import is_terminal_col
-from .pipeline import RUN_ORDER, StockLake
+from ..operators.filters import arrow_filter, filter_triples
+from ..operators.pagination import (
+    DEFAULT_PAGE_SIZE,
+    arrow_after_cursor,
+    get_page_size,
+)
+from .pipeline import RUN_ORDER, RUNS_VIEW, StockLake
 
-# virtual boolean filters (filters.py:138-180,223-245) expand to predicates
-_VIRTUAL = {"is_terminal", "is_in_progress", "is_completed", "has_errors"}
+# the runs list's virtual booleans (filters.py:138-180): whether a true
+# value selects the view's is_terminal_flag rows
+_VIRTUAL = {"is_terminal": True, "is_in_progress": False}
 
 
-def _expand_virtual(df: DataFrame, name: str, value: bool) -> DataFrame:
-    term = is_terminal_col(F.col("state"))
-    if name == "is_terminal":
-        return df.filter(term if value else ~term)
-    if name == "is_in_progress":
-        return df.filter(~term if value else term)
-    if name == "is_completed":
-        c = F.col("completed_at").isNotNull()
-        return df.filter(c if value else ~c)
-    if name == "has_errors":
-        c = F.col("error_count") > 0
-        return df.filter(c if value else F.col("error_count") == 0)
-    raise ValueError(name)
+def _runs_triples(filters: Mapping[str, Any]) -> list[tuple[str, str, Any]]:
+    """``filters`` as lookups on RUNS_VIEW columns, a virtual boolean as an
+    exact lookup on is_terminal_flag. A field that is neither a RUNS_VIEW
+    column nor a virtual boolean raises ValueError naming it."""
+    triples = []
+    for field, lookup, value in filter_triples(filters):
+        if field in _VIRTUAL:
+            field, lookup, value = ("is_terminal_flag", "exact",
+                                    bool(value) == _VIRTUAL[field])
+        elif field not in RUNS_VIEW.names:
+            raise ValueError(f"unknown runs filter field {field!r}: not a "
+                             "run column or a virtual boolean")
+        triples.append((field, lookup, value))
+    return triples
 
 
 def list_runs(lake: StockLake,
@@ -63,25 +74,27 @@ def list_runs(lake: StockLake,
               cursor: Sequence[Any] | str | None = None) -> DataFrame:
     """The runs list endpoint: ANDed filters, keyset page ordered
     (-created_at, -id). Filter keys use the django-style ``field__lookup``
-    syntax plus the virtual booleans (is_terminal / is_in_progress). A run
-    row carries its stock's ``ticker``, so ``ticker__*`` lookups (J3
-    through-FK filtering) filter the runs table itself, with no join.
+    syntax over the run columns, plus the virtual booleans is_terminal and
+    is_in_progress. A run row carries its stock's ``ticker``, so
+    ``ticker__*`` lookups (J3 through-FK filtering) filter the runs table
+    itself, with no join. ``cursor`` is a value tuple or an opaque token.
 
-    The page is taken from the lake's ``runs_by_recency`` view, whose rows
-    are held on the driver already in page order: the filters, the
-    cursor predicate and the limit fold into them, with no sort and no
-    Spark job. ``cursor`` is a value tuple or an opaque token."""
+    The filters and the cursor are checked and compiled before anything
+    is read: an unknown field (such as the bulk-run filters is_completed
+    and has_errors) or lookup raises ValueError, a value that does not
+    fit its column TypeError, and a malformed cursor InvalidCursorError.
+    The page is then the first rows of the lake's ``runs_by_recency``
+    Arrow table that match, with no sort, no Catalyst plan over the runs
+    and no Spark job, returned as a local relation of RUNS_VIEW rows."""
+    where = arrow_filter(RUNS_VIEW, _runs_triples(filters or {}))
+    if cursor is not None:
+        after = arrow_after_cursor(RUNS_VIEW, RUN_ORDER, cursor)
+        where = after if where is None else where & after
     runs = lake.runs_by_recency.read()
-    plain: dict[str, Any] = {}
-    for key, value in (filters or {}).items():
-        base = key.split("__", 1)[0]
-        if base in _VIRTUAL:
-            runs = _expand_virtual(runs, base, bool(value))
-        else:
-            plain[key] = value
-    if plain:
-        runs = apply_filters(runs, plain)
-    return page_after(runs, RUN_ORDER, cursor=cursor, page_size=page_size)
+    if where is not None:
+        runs = runs.filter(where)
+    return lake.spark.createDataFrame(
+        runs.slice(0, get_page_size(page_size)), RUNS_VIEW)
 
 
 def stock_detail(lake: StockLake, ticker: str) -> DataFrame:

@@ -11,6 +11,17 @@ one you'd want on a real cluster too:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   are stable across executor hosts.
 - Arrow enabled for the pandas-UDF slow path.
+- PySpark's DataFrame debugging off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). When on, the
+  default, every ``functions`` call and ``Column`` method inspects the
+  Python stack and sends the call site to the JVM: one ``F.col`` costs
+  about 15 py4j round trips instead of 3, and ``df.filter(col == lit)``
+  29 instead of 5. Building the plans of a request is then most of its
+  cost, and the JVM's compiler threads spend more CPU than the request's
+  own work. The price is the call site: an analysis error (an unresolved
+  column, a failed cast) names the failing expression but no longer the
+  Python file and line that built it; read the traceback instead. The
+  setting is fixed, not an option: PySpark reads it once per process.
 
 When `delta-spark` is importable the session is configured with the Delta
 extensions (``HAS_DELTA``); that is all it changes. Every table the engine
@@ -61,6 +72,8 @@ def get_spark(app_name: str = "stock-data-etl-pipeline-spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Python Data Source v2 filter pushdown (sources/fetch_datasource
         # prunes its fetch list from pushed ticker predicates)
         .config("spark.sql.python.filterPushdown.enabled", "true")

@@ -66,15 +66,16 @@ version number: dirs are uuid-named and never reused, so a table dropped
 and re-created at version 0 cannot hit an old entry, and a retype rewrites
 every dir, so the dirs also fix the schema.
 
-A ``SnapshotView`` carries the same keying to a small relation derived
-from some tables (a join, a latest row per key, a table kept sorted in
-the order it is paged in): it holds the rows on the
-driver (``driver_local``) and rebuilds them only when one of its tables'
-``snapshot_key()`` moves, so a request reads it with no Spark job and is
-never served rows older than the tables' latest commits. A view holds
-every row its build returns, with no bound: its driver memory, its
-rebuild after each commit and the optimizer time of every plan over it
-grow with those rows.
+A ``SnapshotView`` carries the same keying to a small value derived from
+some tables (a join or a latest row per key held on the driver as a local
+relation through ``driver_local``, or a table kept sorted in the order it
+is paged in, as an Arrow table): it holds what its build returns and
+rebuilds it only when one of its tables' ``snapshot_key()`` moves, so a
+request reads it with no Spark job and is never served rows older than
+the tables' latest commits. A view holds every row its build returns,
+with no bound: its driver memory and its rebuild after each commit grow
+with those rows, and so does the optimizer time of every plan over a
+local relation.
 
 A table built with ``schema=`` owns its schema: before its first commit
 ``read()`` returns an empty frame of that schema, with no Spark job, and
@@ -115,13 +116,13 @@ from __future__ import annotations
 
 import glob
 import json
-import math
 import os
 import shutil
 import threading
 import time
 import uuid
 from collections.abc import Callable, Sequence
+from typing import Any
 from functools import reduce
 from urllib.parse import unquote
 
@@ -131,9 +132,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
+from ..operators.filters import arrow_filter
 from ..operators.merge import align_schemas, merge_upsert
 
 _PK = "_pk"  # hidden write column: a row's partition values as JSON
@@ -178,50 +180,6 @@ def _schema(manifest: dict) -> T.StructType:
 def _dirs(manifest: dict) -> tuple[str, ...]:
     """A version's sorted data dirs: its snapshot key (module docstring)."""
     return tuple(sorted(manifest["partitions"].values()))
-
-
-def _bound(field: T.StructField, value) -> pa.Scalar:
-    """A range bound as an Arrow scalar of ``field``'s type, converted
-    through its Spark type (``toInternal``) as ``F.lit`` converts it: a
-    naive datetime is local time, an aware one its instant. A bound that
-    does not convert exactly raises TypeError."""
-    dt = field.dataType
-    try:
-        internal = dt.toInternal(value)
-        scalar = pa.scalar(internal, to_arrow_type(dt))
-        # pyarrow truncates a float into an integer type without a word
-        exact = (not isinstance(dt, T.IntegralType)
-                 or scalar.as_py() == internal)
-    except (TypeError, ValueError, AttributeError):  # ArrowInvalid too
-        exact = False
-    if not exact:
-        raise TypeError(f"range bound {value!r} does not fit column "
-                        f"{field.name} {dt.simpleString()}")
-    return scalar
-
-
-def _range(field: T.StructField, lo, hi) -> ds.Expression | None:
-    """``lo <= field <= hi`` as an Arrow dataset filter, either bound
-    optional (None for no bound), with Spark's semantics: a null never
-    matches a bound, and a float NaN orders above every number and equals
-    itself."""
-    x = ds.field(field.name)
-    floating = isinstance(field.dataType, (T.FloatType, T.DoubleType))
-    conds = []
-    if lo is not None:
-        b = _bound(field, lo)
-        if not floating:
-            conds.append(x >= b)
-        elif math.isnan(b.as_py()):
-            conds.append(x.is_nan())
-        else:
-            conds.append((x >= b) | x.is_nan())
-    if hi is not None:
-        b = _bound(field, hi)
-        # NaN <= hi is false in both engines; <= NaN holds for every value
-        conds.append(x.is_valid() if floating and math.isnan(b.as_py())
-                     else x <= b)
-    return reduce(lambda a, b: a & b, conds) if conds else None
 
 
 def _retypes(old: T.StructType, new: T.StructType) -> bool:
@@ -571,7 +529,8 @@ class ManagedTable:
         the rows as an RDD and a collect runs a job. A caller that needs a
         distributed scan of a large range uses ``read().filter(...)``."""
         dirs, schema = self._resolve(version)
-        cond = _range(schema[col], lo, hi)
+        cond = arrow_filter(schema, [(col, op, b) for op, b in
+                                     (("gte", lo), ("lte", hi)) if b is not None])
         if not dirs:
             return self._empty(schema)
         table = self._dataset(dirs, schema).to_table(filter=cond)
@@ -703,10 +662,11 @@ def driver_local(df: DataFrame) -> DataFrame:
     Every row lives in driver memory, with no bound, and every plan over
     the relation walks all of its rows in the optimizer (about 0.6 µs a
     row on 4 cores), so a plan costs time linear in ``df``'s size: for
-    small derived views. The runs list's view is the largest; it holds
-    every run and grows with the runs table. A df that already plans as
-    one (a view over a table not yet committed) is returned as it is: the
-    Arrow collect would launch a job even then."""
+    small derived views, such as those that grow with the stocks. A view
+    that grows with the runs holds Arrow rows instead and builds no plan
+    over them. A df that already plans as one (a view over a table not yet
+    committed) is returned as it is: the Arrow collect would launch a job
+    even then."""
     plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
     if plan.getClass().getSimpleName() == "LocalRelation":
         return df
@@ -714,27 +674,30 @@ def driver_local(df: DataFrame) -> DataFrame:
 
 
 class SnapshotView:
-    """A small relation derived from ``tables``, held on the driver and
+    """A small value derived from ``tables``, held on the driver and
     rebuilt by ``build`` only when one of the tables' ``snapshot_key()``
-    moves, whichever handle committed. ``read()`` reads the keys (_LATEST
-    and a manifest per table, no Spark job) before the build reads the
-    tables, so a view is never older than the keys it is stored under.
-    The first ``read()`` builds; ``builds`` counts the builds."""
+    moves, whichever handle committed. The view holds whatever ``build``
+    returns: a DataFrame view makes its rows driver-local in its build
+    (``driver_local``), an Arrow view returns a ``pyarrow.Table``.
+    ``read()`` reads the keys (_LATEST and a manifest per table, no Spark
+    job) before the build reads the tables, so a view is never older than
+    the keys it is stored under. The first ``read()`` builds; ``builds``
+    counts the builds."""
 
-    def __init__(self, build: Callable[[], DataFrame],
+    def __init__(self, build: Callable[[], Any],
                  tables: Sequence[ManagedTable]) -> None:
         self.build = build
         self.tables = tuple(tables)
         self.builds = 0
-        # (snapshot keys, driver-local rows); the lock makes check-and-swap
+        # (snapshot keys, built value); the lock makes check-and-swap
         # atomic, as in ManagedTable
-        self._view: tuple[tuple, DataFrame] | None = None
+        self._view: tuple[tuple, Any] | None = None
         self._lock = threading.Lock()
 
-    def read(self) -> DataFrame:
+    def read(self) -> Any:
         key = tuple(t.snapshot_key() for t in self.tables)
         with self._lock:
             if self._view is None or self._view[0] != key:
-                self._view = (key, driver_local(self.build()))
+                self._view = (key, self.build())
                 self.builds += 1
             return self._view[1]

@@ -74,11 +74,6 @@ class TransitionError(ValueError):
     pass
 
 
-def is_terminal_col(state_col: F.Column) -> F.Column:
-    """P7: is_terminal = state IN (DONE, FAILED) (models.py:281-289)."""
-    return state_col.isin(*IngestionState.TERMINAL)
-
-
 def _now() -> datetime:
     return datetime.now(tz=timezone.utc).replace(tzinfo=None)
 

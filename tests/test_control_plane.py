@@ -22,7 +22,7 @@ from stock_data_etl_pipeline_spark.plans.pipeline import StockLake
 from stock_data_etl_pipeline_spark.sources.managed_table import (
     ConcurrentModificationError,
 )
-from stock_data_etl_pipeline_spark.state_machine import is_terminal_col, new_run_row
+from stock_data_etl_pipeline_spark.state_machine import IngestionState, new_run_row
 
 DOC = json.dumps({"data": {
     "financials": {
@@ -120,7 +120,8 @@ def test_two_queues_never_queue_a_stock_twice(spark, queued_lake,
         queue_all_stocks(queued_lake, requested_by="a")
 
     b = won["b"]["bulk_queue_run_id"]
-    active = queued_lake.read_runs().filter(~is_terminal_col(F.col("state")))
+    active = queued_lake.read_runs().filter(
+        ~F.col("state").isin(*IngestionState.TERMINAL))
     assert sorted((r["ticker"], r["bulk_queue_run_id"])
                   for r in active.collect()) == [
         ("AAA", None), ("BBB", b), ("CCC", b)]

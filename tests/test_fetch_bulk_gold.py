@@ -90,11 +90,11 @@ def test_read_raw_json_breaks_created_at_ties_by_id(tied_runs_lake):
 
 def test_read_raw_json_repeat_read_launches_no_job(tied_runs_lake,
                                                   jobs_during):
-    # the run comes from the driver-held latest-DONE view, built once per
+    # the run comes from the driver-held Arrow runs view, built once per
     # runs snapshot, and the document from a pyarrow read on the driver
     tied_runs_lake.read_raw_json("MSFT")
     assert jobs_during(lambda: tied_runs_lake.read_raw_json("AAPL")) == 0
-    assert tied_runs_lake.latest_done_runs.builds == 1
+    assert tied_runs_lake.runs_by_recency.builds == 1
 
 
 def test_latest_runs_follow_commits_of_another_handle(spark, tmp_path):

@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from stock_data_etl_pipeline_spark.operators.filters import apply_filters
 from stock_data_etl_pipeline_spark.operators.pagination import (
     InvalidCursorError,
     encode_cursor,
@@ -245,51 +246,42 @@ def _runs(tickers, n, t0):
         r = new_run_row(f"stock-{tickers[i % len(tickers)]}",
                         tickers[i % len(tickers)],
                         now=t0 + datetime.timedelta(seconds=i // 3,
-                                                    microseconds=i % 7))
+                                                    microseconds=i // 3 % 7))
         r.update(id=f"run-{(i * 37) % n:04d}",
                  state=S.ALL[i // len(tickers) % len(S.ALL)])
         rows.append(r)
     return rows
 
 
-TICKERS = ["AAPL", "AMZN", "GOOG", "IBM", "META", "MSFT", "NVDA", "ORCL"]
+# two non-ASCII tickers, one mixed-case: they sort after every ASCII one by
+# their UTF-8 bytes, and upper-case the same under Arrow and Java
+TICKERS = ["AAPL", "AMZN", "GOOG", "IBM", "META", "MSFT", "NVDA", "ORCL",
+           "ÉCLAIR", "Žito"]
+T0 = datetime.datetime(2024, 3, 9, 23, 59, 58, 123457)
 
 
 @pytest.fixture(scope="module")
 def many_runs_lake(spark, tmp_path_factory):
-    # 240 runs: 30 per ticker, 30 per state, 3 or 4 per (ticker, state)
+    # 240 runs: 24 per ticker, 30 per state, 3 per (ticker, state); every
+    # FAILED run has an error code, and 7 runs have no created_at, which
+    # sorts them last, among themselves by id
     lake = StockLake(spark, str(tmp_path_factory.mktemp("many_runs") / "lake"))
-    rows = _runs(TICKERS, 240, datetime.datetime(2024, 3, 9, 23, 59, 58, 123457))
+    rows = _runs(TICKERS, 240, T0)
+    for i, r in enumerate(rows):
+        if r["state"] == S.FAILED:
+            r["error_code"] = "API_ERROR"
+        if i % 37 == 5:
+            r["created_at"] = None
     lake.runs.create(spark.createDataFrame(rows, INGESTION_RUNS))
     return lake
 
 
-# the benchmark's walk shapes (a ticker bound, with no further filter, a
-# state or the is_terminal flag) and one icontains, each with the SQL
-# predicate it stands for
-@pytest.mark.parametrize("filters,pred", [
-    ({"ticker__gte": "GOOG"}, "ticker >= 'GOOG'"),
-    ({"ticker__gte": "GOOG", "state": S.DONE},
-     "ticker >= 'GOOG' AND state = 'DONE'"),
-    ({"ticker__gte": "GOOG", "is_terminal": False},
-     "ticker >= 'GOOG' AND state NOT IN ('DONE', 'FAILED')"),
-    ({"ticker__lte": "MSFT"}, "ticker <= 'MSFT'"),
-    ({"ticker__lte": "MSFT", "state": S.FAILED},
-     "ticker <= 'MSFT' AND state = 'FAILED'"),
-    ({"ticker__lte": "MSFT", "is_terminal": True},
-     "ticker <= 'MSFT' AND state IN ('DONE', 'FAILED')"),
-    ({"ticker__icontains": "m"}, "upper(ticker) LIKE '%M%'"),
-], ids=["gte", "gte-state", "gte-terminal", "lte", "lte-state",
-        "lte-terminal", "icontains"])
-def test_list_runs_pages_launch_no_job_and_equal_a_snapshot_top_k(
-        many_runs_lake, jobs_during, filters, pred):
-    # the runs view is built once per runs snapshot; every page after that,
-    # with or without a cursor, folds into its rows with no Spark job, and
-    # holds the rows a sort of the Spark snapshot pages to
-    lake = many_runs_lake
-    list_runs(lake).collect()
-    snapshot = lake.read_runs().filter(pred)
-    cursor, walked = None, 0
+def _walk_equals_snapshot_pages(lake, jobs_during, filters, snapshot,
+                                cursor=None):
+    """Walk ``list_runs`` 10-row pages from ``cursor``, each with no Spark
+    job and equal to ``keyset_page`` over ``snapshot`` (rows that already
+    satisfy ``filters``) at the same cursor; the rows walked."""
+    walked = 0
     while True:
         rows = []
         assert jobs_during(lambda: rows.extend(list_runs(
@@ -303,10 +295,120 @@ def test_list_runs_pages_launch_no_job_and_equal_a_snapshot_top_k(
                    for r in rows)
         walked += len(rows)
         if len(rows) < 10:
-            break
+            return walked
         cursor = [rows[-1]["created_at"], rows[-1]["id"]]
-    assert walked == snapshot.count() > 10
+
+
+# every lookup compile_filter takes, the benchmark's walk shapes (a ticker
+# bound, with no further filter, a state or the is_terminal flag) and the
+# virtual booleans, each with the SQL predicate it stands for. The rlike
+# pattern is in the part of the syntax RE2 (Arrow) and java.util.regex
+# (Spark) share.
+@pytest.mark.parametrize("filters,pred", [
+    ({"ticker__gte": "GOOG"}, "ticker >= 'GOOG'"),
+    ({"ticker__gte": "GOOG", "state": S.DONE},
+     "ticker >= 'GOOG' AND state = 'DONE'"),
+    ({"ticker__gte": "GOOG", "is_terminal": False},
+     "ticker >= 'GOOG' AND state NOT IN ('DONE', 'FAILED')"),
+    ({"ticker__lte": "MSFT"}, "ticker <= 'MSFT'"),
+    ({"ticker__lte": "MSFT", "state": S.FAILED},
+     "ticker <= 'MSFT' AND state = 'FAILED'"),
+    ({"ticker__lte": "MSFT", "is_terminal": True},
+     "ticker <= 'MSFT' AND state IN ('DONE', 'FAILED')"),
+    ({"ticker__icontains": "m"}, "upper(ticker) LIKE '%M%'"),
+    ({"ticker__icontains": "ži"}, "upper(ticker) LIKE '%ŽI%'"),
+    ({"ticker__iexact": "éclair"}, "upper(ticker) = 'ÉCLAIR'"),
+    ({"ticker__gt": "NVDA", "ticker__lt": "Ž"}, "ticker > 'NVDA' AND ticker < 'Ž'"),
+    ({"state__in": [S.DONE, S.FETCHING, None]},
+     "state IN ('DONE', 'FETCHING')"),
+    ({"ticker__not_in": ["AAPL", "Žito"]}, "ticker NOT IN ('AAPL', 'Žito')"),
+    ({"error_code__isnull": False}, "error_code IS NOT NULL"),
+    ({"created_at__isnull": True}, "created_at IS NULL"),
+    ({"ticker__rlike": "^[A-M].*[LT]$"}, "ticker RLIKE '^[A-M].*[LT]$'"),
+    ({"is_in_progress": True}, "state NOT IN ('DONE', 'FAILED')"),
+    ({"is_in_progress": False, "state__not_in": [S.FAILED]},
+     "state = 'DONE'"),
+], ids=["gte", "gte-state", "gte-terminal", "lte", "lte-state",
+        "lte-terminal", "icontains", "icontains-non-ascii", "iexact",
+        "gt-lt", "in", "not-in", "isnull-false", "isnull-true", "rlike",
+        "in-progress", "done"])
+def test_list_runs_pages_launch_no_job_and_equal_a_snapshot_top_k(
+        many_runs_lake, jobs_during, filters, pred):
+    # the runs view is built once per runs snapshot; every page after that,
+    # with or without a cursor, is a slice of its Arrow rows with no Spark
+    # job, and holds the rows a sort of the Spark snapshot pages to, also
+    # where created_at ties or is null
+    lake = many_runs_lake
+    list_runs(lake).collect()
+    snapshot = lake.read_runs().filter(pred)
+    n = snapshot.count()
+    assert _walk_equals_snapshot_pages(lake, jobs_during, filters,
+                                       snapshot) == n
+    assert n > (5 if "created_at__isnull" in filters else 10)
     assert lake.runs_by_recency.builds == 1
+
+
+@pytest.mark.parametrize("cursor", [
+    [T0 + datetime.timedelta(seconds=20, microseconds=500), "run-9999"],
+    [T0 + datetime.timedelta(seconds=20, microseconds=6), "run-0000"],
+    [T0 + datetime.timedelta(days=1), "zzz"],
+    [None, "run-0150"],
+    [T0 - datetime.timedelta(days=1), "run-0000"],
+], ids=["between-instants", "inside-a-tie", "after-the-newest",
+        "among-the-nulls", "before-the-oldest"])
+def test_list_runs_cursor_off_the_view_equals_a_snapshot_top_k(
+        many_runs_lake, jobs_during, cursor):
+    # a cursor whose row is not in the view still pages from its place in
+    # the order, as the Spark top-K does
+    lake = many_runs_lake
+    snapshot = lake.read_runs().filter("state != 'FAILED'")
+    assert _walk_equals_snapshot_pages(
+        lake, jobs_during, {"state__not_in": [S.FAILED]}, snapshot,
+        cursor=cursor) >= 0
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York", "Asia/Kolkata"])
+def test_list_runs_timestamp_bounds_equal_spark_under_each_session_zone(
+        many_runs_lake, jobs_during, tz):
+    # naive bounds convert as the Python process's local time and aware ones
+    # as their instant, in F.lit and in the Arrow filter alike; the session
+    # zone must move neither side. ``lo`` is the instant of three tied runs.
+    ist = datetime.timezone(datetime.timedelta(hours=5, minutes=30))
+    lo = T0 + datetime.timedelta(seconds=12, microseconds=12 % 7)
+    hi = (T0 + datetime.timedelta(seconds=55)).replace(
+        tzinfo=datetime.timezone.utc).astimezone(ist)
+    spark = many_runs_lake.spark
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        for filters in ({"created_at__gte": lo, "created_at__lt": hi},
+                        {"created_at__gt": lo, "created_at__lte": hi},
+                        {"created_at__exact": lo},
+                        {"created_at__in": [lo, hi]}):
+            snapshot = apply_filters(many_runs_lake.read_runs(), filters)
+            n = snapshot.count()
+            assert _walk_equals_snapshot_pages(
+                many_runs_lake, jobs_during, filters, snapshot) == n
+            assert n > 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+@pytest.mark.parametrize("key,value,match", [
+    ("is_completed", True, "is_completed"),
+    ("has_errors", False, "has_errors"),
+    ("no_such_column__gte", 1, "no_such_column"),
+    ("state__startswith", "D", "startswith"),
+])
+def test_list_runs_rejects_an_unknown_filter_before_reading(lake, key, value,
+                                                            match):
+    # is_completed and has_errors are bulk-run filters (P8/P9): the runs
+    # list raises ValueError naming them, or an unknown lookup, before it
+    # reads or builds anything
+    fresh = StockLake(lake.spark, lake.root)
+    with pytest.raises(ValueError, match=match):
+        list_runs(fresh, {"state": S.DONE, key: value})
+    assert fresh.runs_by_recency.builds == 0
 
 
 def test_list_runs_pages_stay_stable_under_inserts(spark, tmp_path):
